@@ -18,49 +18,3 @@ derives its semantics from.
 """
 
 __version__ = "0.1.0"
-
-# The transformWithStateInPandas worker speaks a protobuf state-server
-# protocol; when the environment lacks the real `protobuf` package,
-# expose the vendored minimal pure-python runtime (vendor/README.md)
-# so the real runtime — not a fake — drives the stateful processors.
-# The real package always wins when installed. This runs at package
-# import, which also covers Spark's python WORKERS: they unpickle the
-# StatefulProcessor, importing this package before the state client
-# first imports google.protobuf (that import is method-local in
-# pyspark's client modules).
-
-
-def _expose_vendored_protobuf() -> None:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return  # real (or already-exposed vendored) runtime present
-    except ImportError:
-        pass
-    import os
-    import sys
-
-    vendor = os.path.join(os.path.dirname(os.path.abspath(__file__)), "vendor")
-    if vendor not in sys.path:
-        sys.path.append(vendor)  # append: never shadow a real install
-    # Spark worker processes carry spark-core.jar on sys.path (the
-    # PYTHONPATH the JVM builds); the jar ships google/protobuf/*.proto
-    # RESOURCES, which zipimport treats as a namespace-package portion —
-    # the failed import above then leaves location-less namespace
-    # modules cached, shadowing the vendored package. Drop ONLY the
-    # cached location-less `google` / `google.protobuf` entries so the
-    # retry resolves through the vendor path; other google.* modules
-    # (google.auth, google.cloud.*, ...) are left untouched — the
-    # vendored google/ is namespace-extending (pkgutil.extend_path),
-    # so re-resolution keeps every sibling portion importable.
-    for name in [
-        m
-        for m in sys.modules
-        if m in ("google", "google.protobuf") or m.startswith("google.protobuf.")
-    ]:
-        mod = sys.modules[name]
-        if getattr(mod, "__file__", None) is None:
-            del sys.modules[name]
-
-
-_expose_vendored_protobuf()

@@ -609,8 +609,10 @@ _PR_SCALE = 10**12  # fixed-point denominator
 # driver-serial planning cost that grows per iteration. The loop
 # frames are vertex-grain (thousands of rows), so the pinned blocks
 # are negligible and freed by the ContextCleaner when the query's
-# frames are dropped.
-_FIXPOINT_LOCAL_CKPT = True
+# frames are dropped. Caveats: localCheckpoint blocks live only on the
+# executors that computed them, so losing an executor makes them
+# unrecoverable and the query fails instead of recomputing; and they
+# bypass the ``scoped_persist`` lifecycle (no scope unpersists them).
 
 
 def _pagerank_oracle() -> str:
@@ -712,8 +714,7 @@ def part_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             "d",
             (F.lit(base) + F.expr("85 * coalesce(c, 0) div 100")).alias("r"),
         )
-        if _FIXPOINT_LOCAL_CKPT:
-            ranks = ranks.localCheckpoint()
+        ranks = ranks.localCheckpoint()
     return ranks.select(F.col("node").alias("part"), F.col("r").alias("rank_fp"))
 
 
@@ -2060,11 +2061,7 @@ def part_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "label", F.struct(F.col("c"), (-F.col("label")).alias("nl"))
             ).alias("label")
         )
-        labels = (
-            labels.localCheckpoint()
-            if _FIXPOINT_LOCAL_CKPT
-            else scoped_persist(labels)
-        )
+        labels = labels.localCheckpoint()
     sizes = labels.groupBy(F.col("label").alias("sz_label")).agg(
         F.count(F.lit(1)).cast("bigint").alias("community_size")
     )

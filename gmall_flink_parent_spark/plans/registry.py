@@ -105,11 +105,14 @@ def register(
 ):
     """Decorator: register ``fn`` as a named query with its oracle SQL.
 
-    ``past_window=True`` marks an oracle-backed query added AFTER the
-    driver's 50-query correctness window filled: it sorts behind every
-    windowed oracle-backed query so the long-green driver rows keep
-    their slots, and its hash parity is enforced by the local oracle
-    suite (``tests/test_oracle_parity.py``) instead of the driver.
+    ``past_window=True`` places an oracle-backed query behind the
+    50-query correctness window (the first 50 registry entries): it
+    sorts after every windowed oracle-backed query, and its hash parity
+    is enforced by the local oracle suite
+    (``tests/test_oracle_parity.py``). The window rotates:
+    ``scripts/rotate_window.py`` sets the flag on long-green heads it
+    retires and clears it on the heads it promotes, keeping exactly 50
+    oracle-backed queries unflagged.
     """
 
     def deco(fn: QueryFn) -> QueryFn:

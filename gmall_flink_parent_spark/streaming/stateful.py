@@ -35,6 +35,40 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 BOUNCE_WINDOW_US = 30 * 60 * 1_000_000  # mirrors operators/bounce.py
 
 
+def _repair_is_new(
+    key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
+) -> Iterator[pd.DataFrame]:
+    """Label each row is_new against the key's first-visit date.
+
+    The runtime does NOT guarantee ts-ordered Arrow chunks within one
+    call: a later chunk can hold the key's EARLIEST visit, so
+    first_date must be fixed over the whole group before any row is
+    labeled — concatenate and sort once. Per-(key,batch) memory bound:
+    this materializes the key's full micro-batch in ONE pandas frame —
+    the bound is the hottest key's rows in one micro-batch, never the
+    corpus; if a single key can carry millions of rows per batch, cap
+    the trigger size or salt upstream. Module-level so the multi-chunk
+    contract is unit-testable without a streaming harness.
+    """
+    (first_date,) = state.get if state.exists else (None,)
+    chunks = [pdf for pdf in pdfs if len(pdf)]
+    if chunks:
+        pdf = pd.concat(chunks, ignore_index=True).sort_values(["ts", "event_id"])
+        ymd = pdf["ts"].dt.strftime("%Y%m%d")
+        if first_date is None:
+            first_date = ymd.iloc[0]
+        is_new = (ymd == first_date).map({True: "1", False: "0"})
+        yield pd.DataFrame(
+            {
+                "event_id": pdf["event_id"],
+                "user_id": pdf["user_id"],
+                "ymd": ymd,
+                "is_new": is_new,
+            }
+        )
+    state.update((first_date,))
+
+
 def visitor_repair_stream(events: DataFrame) -> DataFrame:
     """W1: repair is_new against per-key first-visit-date ValueState.
 
@@ -42,45 +76,11 @@ def visitor_repair_stream(events: DataFrame) -> DataFrame:
     date; a claim of is_new='1' on a later date is rewritten to '0'.
     Output schema matches the batch analog (``visitor_repair``).
     """
-
-    def repair(
-        key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        # The runtime does NOT guarantee ts-ordered Arrow chunks within
-        # one call: a later chunk can hold the key's EARLIEST visit, so
-        # first_date must be fixed over the whole group before any row
-        # is labeled — concatenate and sort once.
-        # per-(key,batch) memory bound: this materializes the key's
-        # full micro-batch in ONE pandas frame (the old chunk-streaming
-        # form was order-unsafe) — the bound is the hottest key's rows
-        # in one micro-batch, never the corpus; if a single key can
-        # carry millions of rows per batch, cap the trigger size or
-        # salt upstream.
-        (first_date,) = state.get if state.exists else (None,)
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            pdf = pd.concat(chunks, ignore_index=True).sort_values(
-                ["ts", "event_id"]
-            )
-            ymd = pdf["ts"].dt.strftime("%Y%m%d")
-            if first_date is None:
-                first_date = ymd.iloc[0]
-            is_new = (ymd == first_date).map({True: "1", False: "0"})
-            yield pd.DataFrame(
-                {
-                    "event_id": pdf["event_id"],
-                    "user_id": pdf["user_id"],
-                    "ymd": ymd,
-                    "is_new": is_new,
-                }
-            )
-        state.update((first_date,))
-
     return (
         events.withWatermark("ts", "0 seconds")
         .groupBy("user_id")
         .applyInPandasWithState(
-            repair,
+            _repair_is_new,
             outputStructType="event_id long, user_id long, ymd string, is_new string",
             stateStructType="first_date string",
             outputMode="append",
@@ -90,6 +90,59 @@ def visitor_repair_stream(events: DataFrame) -> DataFrame:
 
 
 UV_STATE_TTL_MS = 24 * 3600 * 1000  # mirrors UniqueVisitApp.java:67 (1 day)
+
+
+def _keep_first_visit_per_day(
+    key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
+) -> Iterator[pd.DataFrame]:
+    """Emit the key's first event of each day newer than its last
+    visit date; forget that date when the TTL timeout fires.
+
+    Chunks within one call are NOT guaranteed ts-ordered: a later chunk
+    holding an earlier day would be admitted after its own day was
+    already emitted — concatenate and sort the whole group before
+    scanning. Memory bound = the hottest key's rows in ONE micro-batch
+    (never the corpus); cap the trigger size or salt upstream if a
+    single key can carry millions of rows per batch. Module-level so
+    the multi-chunk contract is unit-testable without a streaming
+    harness.
+    """
+    if state.hasTimedOut:
+        state.remove()  # TTL expiry — forget the last visit date
+        return  # no emission: an empty iterator is legal, and an
+        # untyped empty frame (float64 columns) is an Arrow hazard
+    (last_date,) = state.get if state.exists else (None,)
+    last_event_ms = None
+    chunks = [pdf for pdf in pdfs if len(pdf)]
+    if chunks:
+        pdf = pd.concat(chunks, ignore_index=True).sort_values(["ts", "event_id"])
+        ymd = pdf["ts"].dt.strftime("%Y%m%d")
+        keep = []
+        for i, d in enumerate(ymd):
+            if last_date is None or d > last_date:
+                keep.append(i)
+                last_date = d
+        last_event_ms = int(pdf["ts"].iloc[-1].value // 1_000_000)
+        out = pdf.iloc[keep]
+        yield pd.DataFrame(
+            {
+                "user_id": out["user_id"],
+                "visit_ymd": ymd.iloc[keep],
+                "first_event_id": out["event_id"],
+                "first_ts": out["ts"],
+            }
+        )
+    state.update((last_date,))
+    if last_event_ms is not None:
+        # Clamp to the watermark: a micro-batch is NOT time-ordered
+        # across files/partitions, so a key whose newest row is old
+        # can compute a TTL already behind the advanced watermark —
+        # PySpark rejects such a timestamp outright. wm+1 preserves
+        # the semantics exactly: the expiry was already due, so it
+        # fires at the first possible instant.
+        state.setTimeoutTimestamp(
+            max(last_event_ms + UV_STATE_TTL_MS, state.getCurrentWatermarkMs() + 1)
+        )
 
 
 def uv_dedup_stream(events: DataFrame) -> DataFrame:
@@ -106,61 +159,11 @@ def uv_dedup_stream(events: DataFrame) -> DataFrame:
     matches the reference for in-order streams. Output schema matches
     batch ``uv_dedup``.
     """
-
-    def dedup(
-        key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()  # TTL expiry — forget the last visit date
-            return  # no emission: an empty iterator is legal, and an
-            # untyped empty frame (float64 columns) is an Arrow hazard
-        (last_date,) = state.get if state.exists else (None,)
-        last_event_ms = None
-        # chunks within one call are NOT guaranteed ts-ordered: a later
-        # chunk holding an earlier day would be admitted after its own
-        # day was already emitted — concatenate and sort the whole
-        # group before scanning. Memory bound = the hottest key's rows
-        # in ONE micro-batch (never the corpus); cap the trigger size
-        # or salt upstream if a single key can carry millions of rows
-        # per batch.
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            pdf = pd.concat(chunks, ignore_index=True).sort_values(
-                ["ts", "event_id"]
-            )
-            ymd = pdf["ts"].dt.strftime("%Y%m%d")
-            keep = []
-            for i, d in enumerate(ymd):
-                if last_date is None or d > last_date:
-                    keep.append(i)
-                    last_date = d
-            last_event_ms = int(pdf["ts"].iloc[-1].value // 1_000_000)
-            out = pdf.iloc[keep]
-            yield pd.DataFrame(
-                {
-                    "user_id": out["user_id"],
-                    "visit_ymd": ymd.iloc[keep],
-                    "first_event_id": out["event_id"],
-                    "first_ts": out["ts"],
-                }
-            )
-        state.update((last_date,))
-        if last_event_ms is not None:
-            # Clamp to the watermark: a micro-batch is NOT time-ordered
-            # across files/partitions, so a key whose newest row is old
-            # can compute a TTL already behind the advanced watermark —
-            # PySpark rejects such a timestamp outright. wm+1 preserves
-            # the semantics exactly: the expiry was already due, so it
-            # fires at the first possible instant.
-            state.setTimeoutTimestamp(
-                max(last_event_ms + UV_STATE_TTL_MS, state.getCurrentWatermarkMs() + 1)
-            )
-
     return (
         events.withWatermark("ts", "0 seconds")
         .groupBy("user_id")
         .applyInPandasWithState(
-            dedup,
+            _keep_first_visit_per_day,
             outputStructType=(
                 "user_id long, visit_ymd string, first_event_id long, first_ts timestamp"
             ),
@@ -212,9 +215,6 @@ def dedup_exact_stream(docs: DataFrame) -> DataFrame:
     — for a stream fed in doc_id order this reproduces the batch
     keeper exactly (pinned in ``tests/test_streaming.py``).
     """
-
-    from pyspark.sql import functions as F
-
     keyed = docs.select(
         "doc_id", F.md5(F.lower(F.trim("text"))).alias("fingerprint")
     )
@@ -424,353 +424,4 @@ def uv_dedup_stream_builtin(events: DataFrame) -> DataFrame:
         .withColumn("visit_ymd", F.date_format("ts", "yyyyMMdd"))
         .dropDuplicatesWithinWatermark(["user_id", "visit_ymd"])
         .select("user_id", "visit_ymd")
-    )
-
-
-# --------------------------------------------------------------------
-# W3 on transformWithStateInPandas (Spark 4's successor stateful API)
-
-from pyspark.sql.streaming.stateful_processor import (  # noqa: E402
-    ExpiredTimerInfo,
-    StatefulProcessor,
-    StatefulProcessorHandle,
-    TimerValues,
-)
-
-
-def _bounce_rows_frame(rows: list) -> pd.DataFrame:
-    """Typed (event_id, user_id, ts) emission frame for the bounce
-    machines — explicit dtypes so the Arrow boundary never sees an
-    inferred float64 column where the schema says int64/timestamp."""
-    return pd.DataFrame(
-        {
-            "event_id": pd.Series([r[0] for r in rows], dtype="int64"),
-            "user_id": pd.Series([r[1] for r in rows], dtype="int64"),
-            "ts": pd.Series(
-                [pd.Timestamp(r[2], unit="us") for r in rows],
-                dtype="datetime64[us]",
-            ),
-        }
-    )
-
-
-class BounceProcessor(StatefulProcessor):
-    """The bounce CEP state machine on the ``transformWithState``
-    surface — named state variables + first-class timers, Flink's
-    ``onTimer`` shape (``UserJumpDetailApp.java:101-159``:
-    ``first(landing).next(any).within(window)``, matches discarded,
-    timeouts emitted).
-
-    State per key: ``last`` (last seen event micros) and ``cand``
-    (pending landing id/ts + its registered timer ms — kept so a
-    replacement can ``deleteTimer`` the stale registration, which the
-    old API's single implicit timeout slot did automatically). Timer
-    expiries are clamped to watermark + 1 so an already-due timeout
-    fires at the first possible instant, same as the old twin.
-
-    Module-scope (not a closure) so the machine is drivable BOTH ways:
-    end to end on the real runtime (the vendored protobuf shim in
-    vendor/README.md supplies the ``TransformWithStateInPySpark``
-    worker's state-server protocol; RocksDB provides the column-family
-    state store) AND through fake handles for fast batch-parity tests
-    over arbitrary interleavings — both pinned in
-    ``tests/test_streaming.py``.
-    """
-
-    def __init__(self, window_us: int = BOUNCE_WINDOW_US) -> None:
-        self._window_us = window_us
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._handle = handle
-        self._last = handle.getValueState("last", "last_us long")
-        self._cand = handle.getValueState(
-            "cand", "cand_id long, cand_us long, reg_ms long"
-        )
-
-    def handleInputRows(
-        self, key: Any, rows: Iterator[pd.DataFrame], timerValues: TimerValues
-    ) -> Iterator[pd.DataFrame]:
-        window_us = self._window_us
-        last_us = self._last.get()[0] if self._last.exists() else None
-        cand_id, cand_us, reg_ms = (
-            self._cand.get() if self._cand.exists() else (None, None, None)
-        )
-        bounces: list[tuple[int, int, int]] = []
-        for pdf in rows:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for r in pdf.itertuples(index=False):
-                ev_us = r.ts.value // 1000
-                if cand_id is not None:
-                    if ev_us - cand_us > window_us:
-                        bounces.append((cand_id, r.user_id, cand_us))
-                    self._handle.deleteTimer(reg_ms)
-                    cand_id, cand_us, reg_ms = None, None, None
-                if last_us is None or ev_us - last_us > window_us:
-                    cand_id, cand_us = r.event_id, ev_us
-                last_us = ev_us
-        self._last.update((last_us,))
-        if cand_id is not None:
-            reg_ms = max(
-                cand_us // 1000 + window_us // 1000 + 1,
-                timerValues.getCurrentWatermarkInMs() + 1,
-            )
-            self._handle.registerTimer(reg_ms)
-            self._cand.update((cand_id, cand_us, reg_ms))
-        else:
-            self._cand.clear()
-        # emit TYPED frames only when non-empty: the real runtime's
-        # Arrow serializer cannot cast an untyped (float64) empty column
-        # to timestamp, and an empty iterator is a legal emission
-        if bounces:
-            yield _bounce_rows_frame(bounces)
-
-    def handleExpiredTimer(
-        self, key: Any, timerValues: TimerValues, expiredTimerInfo: ExpiredTimerInfo
-    ) -> Iterator[pd.DataFrame]:
-        if not self._cand.exists():
-            return
-        cand_id, cand_us, reg_ms = self._cand.get()
-        if reg_ms != expiredTimerInfo.getExpiryTimeInMs():
-            # stale firing for a replaced candidate — its deleteTimer
-            # raced the expiry; the live registration fires later
-            return
-        self._cand.clear()
-        yield _bounce_rows_frame([(cand_id, key[0], cand_us)])
-
-
-def bounce_detect_tws(
-    events: DataFrame, window_us: int = BOUNCE_WINDOW_US
-) -> DataFrame:
-    """W3 via ``transformWithStateInPandas`` — the SAME bounce machine
-    as ``bounce_detect_stream``, on the API Spark is investing in.
-
-    What the new API buys (SCALE.md "transformWithState trade"): named
-    state variables (one ``ValueState`` per concern instead of one
-    packed tuple), first-class timers (many per key,
-    register/delete/expire callbacks — the old API has ONE implicit
-    timeout slot), built-in per-state TTL
-    (``getValueState(ttlDurationMs=…)`` expresses W6 with zero custom
-    eviction code), and state-schema evolution. The trade: a separate
-    timer store keyed by (key, expiry) and a second state round-trip
-    per batch, vs the old API's single packed tuple.
-
-    Runtime note: the ``TransformWithStateInPySpark`` worker's
-    state-server protocol needs the Python ``protobuf`` package; where
-    it is absent the package exposes a minimal vendored pure-python
-    runtime (vendor/README.md), so this plan EXECUTES for real — e2e
-    batch parity is pinned in tests next to the fake-harness pins.
-    Requires a column-family-capable state store (RocksDB provider).
-    """
-    return (
-        events.withWatermark("ts", "0 seconds")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            BounceProcessor(window_us),
-            outputStructType="event_id long, user_id long, ts timestamp",
-            outputMode="append",
-            timeMode="eventTime",
-        )
-    )
-
-
-class UvDedupProcessor(StatefulProcessor):
-    """W2 + W6 on the ``transformWithState`` surface — the API's
-    built-in per-state TTL expressing the reference's
-    ``StateTtlConfig.newBuilder(Time.days(1))``
-    (``UniqueVisitApp.java:65-68``) as ONE constructor argument.
-
-    The whole point next to ``uv_dedup_stream``: that twin spends ~20
-    lines reproducing Flink's TTL by hand (event-time timer per key,
-    watermark clamp, explicit ``state.remove()`` on expiry); here
-    ``getValueState("last_date", …, ttlDurationMs=UV_STATE_TTL_MS)``
-    IS the TTL — idle keys forget their last visit date and a record
-    for an already-emitted day is re-admitted after expiry, with zero
-    custom eviction code. (The API's TTL clock is processing-time,
-    like Flink's default ``ttlTimeCharacteristic``; the old twin's
-    event-time form remains the replayable-pipeline variant.)
-
-    Keyed by user_id; state = the max visit date seen (string ymd),
-    matching the reference's in-order last-visit-date semantics and
-    the old twin's state byte budget.
-    """
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._last = handle.getValueState(
-            "last_date", "last_date string", ttlDurationMs=UV_STATE_TTL_MS
-        )
-
-    def handleInputRows(
-        self, key: Any, rows: Iterator[pd.DataFrame], timerValues: TimerValues
-    ) -> Iterator[pd.DataFrame]:
-        last_date = self._last.get()[0] if self._last.exists() else None
-        # the runtime does not guarantee ts-ordered chunks within one
-        # handleInputRows call — concatenate and sort the whole group
-        # before the dedup scan. Memory bound = the hottest key's rows
-        # in ONE micro-batch (never the corpus); cap the trigger size
-        # or salt upstream if a single key can carry millions of rows
-        # per batch.
-        chunks = [pdf for pdf in rows if len(pdf)]
-        if chunks:
-            pdf = pd.concat(chunks, ignore_index=True).sort_values(
-                ["ts", "event_id"]
-            )
-            ymd = pdf["ts"].dt.strftime("%Y%m%d")
-            keep = []
-            for i, d in enumerate(ymd):
-                if last_date is None or d > last_date:
-                    keep.append(i)
-                    last_date = d
-            out = pdf.iloc[keep]
-            yield pd.DataFrame(
-                {
-                    "user_id": out["user_id"],
-                    "visit_ymd": ymd.iloc[keep],
-                    "first_event_id": out["event_id"],
-                    "first_ts": out["ts"],
-                }
-            )
-        if last_date is not None:
-            self._last.update((last_date,))
-
-
-def uv_dedup_tws(events: DataFrame) -> DataFrame:
-    """W2 via ``transformWithStateInPandas`` with the built-in state
-    TTL carrying W6 — same output contract as ``uv_dedup_stream``
-    (batch ``uv_dedup``'s schema). Runs on the REAL runtime via the
-    vendored protobuf shim (vendor/README.md) + RocksDB state store;
-    e2e parity with batch is pinned in ``tests/test_streaming.py``.
-    Operational note: in processingTime timeMode, Spark's
-    ``shouldRunAnotherBatch`` is unconditionally true, so drive this
-    with ``Trigger.Once`` per drain — an availableNow run schedules
-    empty timer micro-batches forever."""
-    return (
-        events.groupBy("user_id")
-        .transformWithStateInPandas(
-            UvDedupProcessor(),
-            outputStructType=(
-                "user_id long, visit_ymd string, first_event_id long, "
-                "first_ts timestamp"
-            ),
-            outputMode="append",
-            timeMode="processingTime",
-        )
-    )
-
-
-class VisitorRepairProcessor(StatefulProcessor):
-    """W1 on the ``transformWithState`` surface — the stateful trio's
-    third member on the successor API (W3 `BounceProcessor`, W2+W6
-    `UvDedupProcessor`), so the reference's full
-    ``applyInPandasWithState`` surface has a 1:1 twin on the API Spark
-    is investing in. Reference semantics: ``BaseLogTask.java:65-99`` —
-    a named ValueState holds the user's first visit date, and a later
-    day's is_new claim is rewritten to '0'. No timers, no TTL: the
-    repair state is the user's PERMANENT first-seen date (the
-    reference keeps it unexpired too), so this machine exercises the
-    API's simplest profile — one named state, pure per-row rewrite.
-    Same fake-harness testability contract as the other two.
-    """
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._first = handle.getValueState("first_date", "first_date string")
-
-    def handleInputRows(
-        self, key: Any, rows: Iterator[pd.DataFrame], timerValues: TimerValues
-    ) -> Iterator[pd.DataFrame]:
-        first_date = self._first.get()[0] if self._first.exists() else None
-        # fix first_date over ALL chunks before labeling any row: the
-        # runtime may deliver a later chunk holding the key's earliest
-        # visit (chunks are not ts-ordered within one call). Memory
-        # bound = the hottest key's rows in ONE micro-batch (never the
-        # corpus); cap the trigger size or salt upstream if a single
-        # key can carry millions of rows per batch.
-        chunks = [pdf for pdf in rows if len(pdf)]
-        if chunks:
-            pdf = pd.concat(chunks, ignore_index=True).sort_values(
-                ["ts", "event_id"]
-            )
-            ymd = pdf["ts"].dt.strftime("%Y%m%d")
-            if first_date is None:
-                first_date = ymd.iloc[0]
-            is_new = (ymd == first_date).map({True: "1", False: "0"})
-            yield pd.DataFrame(
-                {
-                    "event_id": pdf["event_id"],
-                    "user_id": pdf["user_id"],
-                    "ymd": ymd,
-                    "is_new": is_new,
-                }
-            )
-        if first_date is not None:
-            self._first.update((first_date,))
-
-
-def visitor_repair_tws(events: DataFrame) -> DataFrame:
-    """W1 via ``transformWithStateInPandas`` — same output contract as
-    ``visitor_repair_stream`` (batch ``visitor_repair``'s schema).
-    Runs on the REAL runtime via the vendored protobuf shim
-    (vendor/README.md) + RocksDB state store; e2e parity with batch is
-    pinned in ``tests/test_streaming.py``."""
-    return (
-        events.withWatermark("ts", "0 seconds")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            VisitorRepairProcessor(),
-            outputStructType="event_id long, user_id long, ymd string, is_new string",
-            outputMode="append",
-            timeMode="eventTime",
-        )
-    )
-
-
-class DedupExactProcessor(StatefulProcessor):
-    """The LLM-pipeline exact-dedup keeper on the ``transformWithState``
-    surface — fourth and last of the repo's keyed-state machines to get
-    a twin on the successor API, so EVERY ``applyInPandasWithState``
-    operator now has a 1:1 ``transformWithStateInPandas`` form (W1/W2/
-    W3 mirror the reference's machines; this one mirrors
-    ``_keep_first_fingerprint``). One boolean ValueState per distinct
-    content fingerprint — the minimum state budget; within a call the
-    min doc_id is taken over ALL chunks before emitting (a group can
-    span Arrow chunks), across batches the first batch wins.
-    """
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._seen = handle.getValueState("seen", "seen boolean")
-
-    def handleInputRows(
-        self, key: Any, rows: Iterator[pd.DataFrame], timerValues: TimerValues
-    ) -> Iterator[pd.DataFrame]:
-        seen = self._seen.get()[0] if self._seen.exists() else False
-        best: int | None = None
-        for pdf in rows:
-            if seen or not len(pdf):
-                continue
-            chunk_min = int(pdf["doc_id"].min())
-            best = chunk_min if best is None else min(best, chunk_min)
-        if not seen and best is not None:
-            self._seen.update((True,))
-            yield pd.DataFrame(
-                {
-                    "fingerprint": pd.Series([key[0]], dtype="object"),
-                    "keep_doc_id": pd.Series([best], dtype="int64"),
-                }
-            )
-
-
-def dedup_exact_tws(docs: DataFrame) -> DataFrame:
-    """Streaming exact dedup via ``transformWithStateInPandas`` — same
-    output contract as ``dedup_exact_stream``. Runs on the real runtime
-    (vendored protobuf shim + RocksDB store); e2e parity with the batch
-    keepers is pinned in ``tests/test_streaming.py``. timeMode "none":
-    no timers, no TTL — the state is permanent content identity, so
-    availableNow drains terminate normally (unlike processingTime)."""
-    keyed = docs.select(
-        "doc_id", F.md5(F.lower(F.trim("text"))).alias("fingerprint")
-    )
-    return keyed.groupBy("fingerprint").transformWithStateInPandas(
-        DedupExactProcessor(),
-        outputStructType="fingerprint string, keep_doc_id long",
-        outputMode="append",
-        timeMode="none",
     )

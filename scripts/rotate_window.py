@@ -49,8 +49,6 @@ PAST_WINDOW_LINE = "    past_window=True,\n"
 def _package_files() -> list[str]:
     out = list(ENTRY_FILES)
     for root, _dirs, files in os.walk(PKG):
-        if "vendor" in root.split(os.sep):
-            continue
         out.extend(os.path.join(root, f) for f in files if f.endswith(".py"))
     return out
 

@@ -41,11 +41,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SRC_SF_DIR = "/root/testdata/sf0.1"
 SF1_DIR = os.environ.get("SPARK_GRAFT_SF1_DIR", "/tmp/spark_graft_sf1")
-# copies=10 is the canonical sf1 run; the r15 core-scaling probe reuses
-# the same disjoint-shard construction at copies=100 (sf10) where compute
-# dominates the per-head floor. All shard invariants hold at any copy
-# count: key offsets stay disjoint (10^9 apart), token suffixes "_i" are
-# vocabulary-disjoint per shard, embedding shifts i < dims.
+# copies=10 is the canonical sf1 run. Key offsets stay disjoint (10^9
+# apart) and token suffixes "_i" stay vocabulary-disjoint at any copy
+# count, but the embedding shift is only a distinct shard while the copy
+# index is below the vector width: at i >= EMBED_DIMS the circular shift
+# wraps to the identity and the copy silently duplicates shard 0. So the
+# copy count is capped at the width (sf6.4 from sf0.1).
+EMBED_DIMS = 64
 COPIES = int(os.environ.get("SPARK_GRAFT_SF1_COPIES", "10"))
 KEY_OFF = 10**9
 
@@ -213,6 +215,12 @@ def _inflate(spark, name: str):
 
 
 def generate(spark) -> None:
+    if COPIES > EMBED_DIMS:
+        raise ValueError(
+            f"SPARK_GRAFT_SF1_COPIES={COPIES}: at most {EMBED_DIMS} copies "
+            f"(the embedding width); copy {EMBED_DIMS} and above would repeat "
+            "shard 0's embeddings instead of adding a disjoint shard"
+        )
     marker = os.path.join(SF1_DIR, "_GENERATED")
     if os.path.exists(marker):
         return

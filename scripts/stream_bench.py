@@ -156,65 +156,25 @@ def _bench_order_wide(spark, orders_dir: str, details_dir: str, rows_in: int,
     }
 
 
-class _rocksdb_provider:
-    """Pin the RocksDB state-store provider for a tws run and restore
-    the prior provider after — transformWithState needs a
-    column-family-capable store; the other heads keep the default."""
-
-    _KEY = "spark.sql.streaming.stateStore.providerClass"
-    _ROCKS = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
-
-    def __init__(self, spark):
-        self._spark = spark
-
-    def __enter__(self):
-        self._prev = self._spark.conf.get(self._KEY, None)
-        self._spark.conf.set(self._KEY, self._ROCKS)
-
-    def __exit__(self, *exc):
-        if self._prev is None:
-            self._spark.conf.unset(self._KEY)
-        else:
-            self._spark.conf.set(self._KEY, self._prev)
-
-
 def _bench_uv_dedup(
-    spark,
-    events_dir: str,
-    rows_in: int,
-    checkpoint: str,
-    builtin: bool = False,
-    tws: bool = False,
+    spark, events_dir: str, rows_in: int, checkpoint: str, builtin: bool = False
 ) -> dict:
-    from contextlib import nullcontext
-
     from gmall_flink_parent_spark.streaming.stateful import (
         uv_dedup_stream,
         uv_dedup_stream_builtin,
-        uv_dedup_tws,
     )
 
-    build = uv_dedup_tws if tws else (
-        uv_dedup_stream_builtin if builtin else uv_dedup_stream
-    )
+    build = uv_dedup_stream_builtin if builtin else uv_dedup_stream
     deduped = build(_file_stream(spark, events_dir))
-    # the tws twin runs in processingTime timeMode, where availableNow
-    # schedules empty timer micro-batches forever — drive it with ONE
-    # Trigger.Once drain (its own docstring's operational note)
-    trigger = {"once": True} if tws else {"availableNow": True}
-    with (_rocksdb_provider(spark) if tws else nullcontext()):
-        t0 = time.monotonic()
-        q = (
-            deduped.writeStream.format("noop")
-            .option("checkpointLocation", checkpoint)
-            .trigger(**trigger)
-            .start()
-        )
-        stats = _drain(q)
-        wall = round(time.monotonic() - t0, 3)
+    t0 = time.monotonic()
+    q = (
+        deduped.writeStream.format("noop")
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+    stats = _drain(q)
+    wall = round(time.monotonic() - t0, 3)
     return {
         "rows_in": rows_in,
         "wall_sec": wall,
@@ -223,36 +183,23 @@ def _bench_uv_dedup(
     }
 
 
-def _bench_bounce(
-    spark, events_dir: str, rows_in: int, checkpoint: str, tws: bool = False
-) -> dict:
-    """Same-semantics A/B of the two keyed-state APIs on W3 (the CEP
-    bounce machine): ``applyInPandasWithState`` (packed state tuple +
-    one implicit timeout slot) vs ``transformWithStateInPandas`` (named
-    states + first-class event-time timers behind the state-server
-    protocol). Both read the SAME ordered event log (the bounce machine
-    is watermark-driven: a random split drops late rows and
-    undercounts), so the wall gap IS the API cost."""
-    from contextlib import nullcontext
+def _bench_bounce(spark, events_dir: str, rows_in: int, checkpoint: str) -> dict:
+    """W3, the CEP bounce machine, on ``applyInPandasWithState``. It
+    reads an ORDERED event log: the machine is watermark-driven, and a
+    random split drops late rows and undercounts."""
+    from gmall_flink_parent_spark.streaming.stateful import bounce_detect_stream
 
-    from gmall_flink_parent_spark.streaming.stateful import (
-        bounce_detect_stream,
-        bounce_detect_tws,
-    )
-
-    build = bounce_detect_tws if tws else bounce_detect_stream
     events = _file_stream(spark, events_dir)
-    with (_rocksdb_provider(spark) if tws else nullcontext()):
-        t0 = time.monotonic()
-        q = (
-            build(events)
-            .writeStream.format("noop")
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        stats = _drain(q)
-        wall = round(time.monotonic() - t0, 3)
+    t0 = time.monotonic()
+    q = (
+        bounce_detect_stream(events)
+        .writeStream.format("noop")
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+    stats = _drain(q)
+    wall = round(time.monotonic() - t0, 3)
     return {
         "rows_in": rows_in,
         "wall_sec": wall,
@@ -262,49 +209,23 @@ def _bench_bounce(
 
 
 def _bench_visitor_repair(
-    spark, events_dir: str, rows_in: int, checkpoint: str, tws: bool = False
+    spark, events_dir: str, rows_in: int, checkpoint: str
 ) -> dict:
-    """Same-semantics A/B of the two keyed-state APIs: W1 visitor
-    repair on ``applyInPandasWithState`` (per-key pandas state inline
-    in the worker) vs ``transformWithStateInPandas`` (named state
-    behind the JVM state-server protocol — one socket round trip per
-    state op, RocksDB column-family store). Identical input feed,
-    identical output contract, so the wall gap IS the API cost."""
-    from gmall_flink_parent_spark.streaming.stateful import (
-        visitor_repair_stream,
-        visitor_repair_tws,
-    )
+    """W1 visitor repair on ``applyInPandasWithState``: per-key pandas
+    state inline in the Python worker."""
+    from gmall_flink_parent_spark.streaming.stateful import visitor_repair_stream
 
-    build = visitor_repair_tws if tws else visitor_repair_stream
     events = _file_stream(spark, events_dir).select("event_id", "ts", "user_id")
-    prev = None
-    if tws:
-        key = "spark.sql.streaming.stateStore.providerClass"
-        prev = spark.conf.get(key, None)
-        spark.conf.set(
-            key,
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-    try:
-        t0 = time.monotonic()
-        q = (
-            build(events)
-            .writeStream.format("noop")
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        stats = _drain(q)
-        wall = round(time.monotonic() - t0, 3)
-    finally:
-        if tws:
-            if prev is None:
-                spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-            else:
-                spark.conf.set(
-                    "spark.sql.streaming.stateStore.providerClass", prev
-                )
+    t0 = time.monotonic()
+    q = (
+        visitor_repair_stream(events)
+        .writeStream.format("noop")
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+    stats = _drain(q)
+    wall = round(time.monotonic() - t0, 3)
     return {
         "rows_in": rows_in,
         "wall_sec": wall,
@@ -430,26 +351,14 @@ def run(
             "uv_dedup_stream_builtin": _bench_uv_dedup(
                 spark, f"{work}/events", n_events, f"{work}/ck_uvb", builtin=True
             ),
-            # W2 on the successor API (VERDICT r14 #10 / r13 #6): named
-            # state + built-in TTL vs the hand-rolled timer eviction
-            "uv_dedup_tws": _bench_uv_dedup(
-                spark, f"{work}/events", n_events, f"{work}/ck_uvt", tws=True
-            ),
-            # W3 CEP bounce on both keyed-state APIs (ordered log: the
-            # watermark-driven machine needs time-range file replay)
+            # W3 CEP bounce (ordered log: the watermark-driven machine
+            # needs time-range file replay)
             "bounce_detect_stream": _bench_bounce(
                 spark, f"{work}/events_ord", n_events, f"{work}/ck_bds"
             ),
-            "bounce_detect_tws": _bench_bounce(
-                spark, f"{work}/events_ord", n_events, f"{work}/ck_bdt", tws=True
-            ),
-            # the two keyed-state APIs head to head on W1 (round 13:
-            # the tws twin now runs on the real state-server runtime)
+            # W1 visitor repair
             "visitor_repair_stream": _bench_visitor_repair(
                 spark, f"{work}/events", n_events, f"{work}/ck_vrs"
-            ),
-            "visitor_repair_tws": _bench_visitor_repair(
-                spark, f"{work}/events", n_events, f"{work}/ck_vrt", tws=True
             ),
             # extrema-partial incremental store (round-11 post-seal)
             "sequence_support_store_job": _bench_seq_store(

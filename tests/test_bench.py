@@ -12,6 +12,8 @@ import json
 import os
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench
@@ -336,3 +338,16 @@ def test_prior_stdout_queries_is_the_driver_visible_subset(tmp_path):
     # while _prior_round_times still gap-fills from the detail artifact
     full = bench._prior_round_times(str(tmp_path))
     assert set(full) == {"q_slow", "q_fast", "q_tiny"}
+
+
+def test_sf1_inflation_rejects_copies_beyond_embedding_width(monkeypatch, tmp_path):
+    """Copy ``i`` shifts the embedding dimensions by ``i``; at
+    ``i >= EMBED_DIMS`` the shift is the identity and the copy would
+    repeat shard 0. ``generate`` must refuse before writing anything."""
+    import scripts.sf1_scale_run as sr
+
+    monkeypatch.setattr(sr, "COPIES", sr.EMBED_DIMS + 1)
+    monkeypatch.setattr(sr, "SF1_DIR", str(tmp_path / "sf1"))
+    with pytest.raises(ValueError, match="embedding width"):
+        sr.generate(None)
+    assert not (tmp_path / "sf1").exists()

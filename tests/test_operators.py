@@ -4794,9 +4794,6 @@ def test_fixpoint_loops_truncate_lineage(spark, sf_dir):
     import contextlib
     import io
 
-    from gmall_flink_parent_spark.operators import analytics
-
-    assert analytics._FIXPOINT_LOCAL_CKPT is True
     for name, max_lines in [("part_pagerank", 40), ("part_label_propagation", 120)]:
         df = plans.query_map()[name](spark, sf_dir)
         buf = io.StringIO()

@@ -25,46 +25,12 @@ from gmall_flink_parent_spark.streaming.jobs import (
 from gmall_flink_parent_spark.sources.tables import load_table
 
 
-from contextlib import contextmanager
-
-
-@contextmanager
-def _rocksdb_state(spark):
-    """transformWithState needs a state store with column families
-    (named state variables + timers each get one); the default
-    HDFSBackedStateStoreProvider refuses, so the e2e tests run their
-    queries under the RocksDB provider Spark ships, restoring the
-    session's provider afterwards."""
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-
-
-def _run_to_memory(
-    df, spark, name: str, with_query: bool = False, timeout: int = 120,
-    once: bool = False,
-):
-    """``once=True`` runs a single Trigger.Once micro-batch instead of
-    availableNow — required for transformWithState queries in
-    processingTime timeMode, whose ``shouldRunAnotherBatch`` is
-    unconditionally true (processing time always advances), so an
-    availableNow run schedules empty timer batches forever."""
-    trigger = {"once": True} if once else {"availableNow": True}
+def _run_to_memory(df, spark, name: str, with_query: bool = False, timeout: int = 120):
     q = (
         df.writeStream.format("memory")
         .queryName(name)
         .outputMode("append")
-        .trigger(**trigger)
+        .trigger(availableNow=True)
         .start()
     )
     assert q.awaitTermination(timeout), f"stream {name} timed out"
@@ -155,214 +121,6 @@ def test_bounce_stream_full_parity_with_epilogue(spark, sf_dir, tmp_path):
     out = _run_to_memory(
         stateful.bounce_detect_stream(stream), spark, "bounce_full_out"
     )
-    cols = ["event_id", "user_id", "ts"]
-    got = {
-        tuple(r[c] for c in cols)
-        for r in out.filter(F.col("user_id") != -1).collect()
-    }
-    want = {
-        tuple(r[c] for c in cols)
-        for r in plans.query_map()["bounce_detect"](spark, sf_dir).collect()
-    }
-    assert got == want and len(want) > 0
-
-
-def _has_python_protobuf() -> bool:
-    """The TransformWithStateInPySpark driver worker speaks a protobuf
-    state-server protocol; without the Python ``protobuf`` package the
-    query crashes at init (observed: STREAMING_PYTHON_RUNNER_
-    INITIALIZATION_FAILURE / ImportError google.protobuf.descriptor).
-    In this repo the package import above activates the vendored
-    minimal pure-python runtime (vendor/README.md) when the real one is
-    absent, so this gate normally passes and the e2e tests run for
-    real; it stays as a portability guard for stripped environments."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-class _FakeValueState:
-    def __init__(self):
-        self._v = None
-
-    def exists(self):
-        return self._v is not None
-
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = tuple(v)
-
-    def clear(self):
-        self._v = None
-
-
-class _FakeHandle:
-    """StatefulProcessorHandle double: named value states + a timer
-    registry, faithful to the real API's per-key expiry set."""
-
-    def __init__(self):
-        self.states = {}
-        self.timers = set()
-
-    def getValueState(self, name, schema, ttlDurationMs=None):
-        return self.states.setdefault(name, _FakeValueState())
-
-    def registerTimer(self, ms):
-        self.timers.add(ms)
-
-    def deleteTimer(self, ms):
-        self.timers.discard(ms)
-
-
-class _FakeTimerValues:
-    def __init__(self, wm_ms):
-        self._wm = wm_ms
-
-    def getCurrentWatermarkInMs(self):
-        return self._wm
-
-
-class _FakeExpiredTimerInfo:
-    def __init__(self, ms):
-        self._ms = ms
-
-    def getExpiryTimeInMs(self):
-        return self._ms
-
-
-def test_bounce_tws_state_machine_matches_batch(spark, sf_dir):
-    """Drive ``BounceProcessor`` through a faithful simulation of the
-    transformWithState runtime contract — per-key ``handleInputRows``
-    with the batch's operating watermark, then ``handleExpiredTimer``
-    for every registered expiry the watermark passed (watermark N =
-    max event time through batch N-1, delay 0 s) — over the full
-    events table plus the same two-sentinel epilogue as the e2e
-    harness. The union of emissions must equal batch ``bounce_detect``
-    EXACTLY, which (with the old API's own full-parity pin) also
-    proves the two streaming forms emit the same rows. The fakes
-    complement the real-runtime e2e below (vendored protobuf shim):
-    they drive interleavings the file-source harness can't stage."""
-    proc = stateful.BounceProcessor()
-    events = load_table(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id"
-    )
-    pdf = events.toPandas()
-    pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-    max_ts = pdf["ts"].max()
-    sentinels = [
-        pd.DataFrame(
-            {
-                "event_id": [10_000_000 + i],
-                "ts": [(max_ts + pd.Timedelta(days=d)).to_datetime64()],
-                "user_id": [-1],
-            }
-        )
-        for i, d in enumerate((30, 60))
-    ]
-    handles: dict = {}
-    emitted = []
-    wm_ms = -(10**15)  # pre-first-batch watermark (epoch-ish floor)
-    seen_max_us = None
-    for batch in (pdf, *sentinels):
-        tv = _FakeTimerValues(wm_ms)
-        for uid, grp in batch.groupby("user_id"):
-            h = handles.get(uid)
-            if h is None:
-                h = handles[uid] = _FakeHandle()
-                proc_h = stateful.BounceProcessor()
-                proc_h.init(h)
-                h.proc = proc_h
-            for out in h.proc.handleInputRows((uid,), iter([grp]), tv):
-                emitted.append(out)
-        # end of batch: advance the watermark, then fire due timers in
-        # the NEXT batch position (Spark fires them with the new wm)
-        batch_max_us = batch["ts"].max().value // 1000
-        seen_max_us = (
-            batch_max_us if seen_max_us is None else max(seen_max_us, batch_max_us)
-        )
-        wm_ms = seen_max_us // 1000  # 0-second delay
-        for uid, h in handles.items():
-            for ms in sorted(h.timers):
-                if ms <= wm_ms:
-                    h.timers.discard(ms)
-                    for out in h.proc.handleExpiredTimer(
-                        (uid,), _FakeTimerValues(wm_ms), _FakeExpiredTimerInfo(ms)
-                    ):
-                        emitted.append(out)
-    got = {
-        (int(r.event_id), int(r.user_id), r.ts)
-        for out in emitted
-        if len(out)
-        for r in out.itertuples(index=False)
-        if r.user_id != -1
-    }
-    want = {
-        (r["event_id"], r["user_id"], pd.Timestamp(r["ts"]))
-        for r in plans.query_map()["bounce_detect"](spark, sf_dir).collect()
-    }
-    assert got == want and len(want) > 0
-
-
-def test_bounce_tws_plan_wires_without_runtime(spark, sf_dir):
-    """The transformWithState plan must CONSTRUCT against the real
-    stream source (schema + analyzer checks run here) even where the
-    protobuf runtime is absent — pins the wiring: output schema
-    identical to the old-API twin's, eventTime mode accepted."""
-    new = stateful.bounce_detect_tws(events_stream(spark, sf_dir))
-    old = stateful.bounce_detect_stream(events_stream(spark, sf_dir))
-    assert new.schema == old.schema
-    assert new.isStreaming
-
-
-@pytest.mark.skipif(
-    not _has_python_protobuf(),
-    reason="transformWithStateInPandas needs the Python protobuf package "
-    "(state-server protocol); absent from this container — the state "
-    "machine itself is parity-pinned through fakes above",
-)
-def test_bounce_tws_full_parity_with_both_forms(spark, sf_dir, tmp_path):
-    """The ``transformWithStateInPandas`` bounce twin (Spark 4's
-    successor stateful API: named state variables + first-class
-    timers) must emit EXACTLY the batch ``bounce_detect`` rows under
-    the same sentinel-epilogue harness as the old-API twin — one
-    parity pin covering both forms, since the old API's full-parity
-    test asserts the identical set."""
-    import os
-    import time
-
-    events = load_table(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    pdf = events.toPandas()
-    pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-    (tmp_path / "in").mkdir()
-    pdf.to_parquet(str(tmp_path / "in" / "f1.parquet"))
-    max_ts = pdf["ts"].max()
-    for i, days in enumerate((30, 60)):
-        sent = pd.DataFrame(
-            {
-                "event_id": [10_000_000 + i],
-                "ts": [(max_ts + pd.Timedelta(days=days))],
-                "user_id": [-1],
-            }
-        )
-        sent["ts"] = sent["ts"].astype("datetime64[us]")
-        path = str(tmp_path / "in" / f"f{i + 2}.parquet")
-        sent.to_parquet(path)
-        t = time.time() + 5 * (i + 1)
-        os.utime(path, (t, t))
-    stream = (
-        spark.readStream.schema("event_id long, ts timestamp, user_id long")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(tmp_path / "in"))
-    )
-    with _rocksdb_state(spark):
-        out = _run_to_memory(
-            stateful.bounce_detect_tws(stream), spark, "bounce_tws_out"
-        )
     cols = ["event_id", "user_id", "ts"]
     got = {
         tuple(r[c] for c in cols)
@@ -812,23 +570,34 @@ def test_dedup_exact_stream_matches_batch_keepers(spark, sf_dir, tmp_path):
     assert got == batch
 
 
+class _FakeGroupState:
+    """``GroupState`` double for driving a keyed-state function
+    directly: starts empty, records the last update and timeout."""
+
+    exists = False
+    hasTimedOut = False
+    updated = None
+    timeout_ms = None
+
+    @property
+    def get(self):
+        raise AssertionError("get on non-existent state")
+
+    def update(self, v):
+        self.updated = v
+
+    def getCurrentWatermarkMs(self):
+        return 0
+
+    def setTimeoutTimestamp(self, ms):
+        self.timeout_ms = ms
+
+
 def test_dedup_exact_stream_min_across_arrow_chunks():
     """A fingerprint group split across Arrow chunks must still emit the
     global min doc_id — not the first non-empty chunk's min (the round-2
     advisor finding)."""
-
-    class FakeState:
-        exists = False
-        updated = None
-
-        @property
-        def get(self):
-            raise AssertionError("get on non-existent state")
-
-        def update(self, v):
-            self.updated = v
-
-    state = FakeState()
+    state = _FakeGroupState()
     chunks = iter(
         [
             pd.DataFrame({"doc_id": [9, 12], "fingerprint": ["f", "f"]}),
@@ -839,47 +608,6 @@ def test_dedup_exact_stream_min_across_arrow_chunks():
     out = pd.concat(list(stateful._keep_first_fingerprint(("f",), chunks, state)))
     assert list(out["keep_doc_id"]) == [3]
     assert state.updated == (True,)
-
-
-def test_dedup_exact_tws_plan_wires_without_runtime(spark, sf_dir, tmp_path):
-    """The exact-dedup tws plan must construct against a real stream
-    source with the old-API twin's output schema."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    (tmp_path / "in").mkdir()
-    docs.limit(5).toPandas().to_parquet(str(tmp_path / "in" / "f.parquet"))
-    stream = spark.readStream.schema("doc_id long, text string").parquet(
-        str(tmp_path / "in")
-    )
-    new = stateful.dedup_exact_tws(stream)
-    old = stateful.dedup_exact_stream(stream)
-    assert new.isStreaming and new.schema == old.schema
-
-
-@pytest.mark.skipif(
-    not _has_python_protobuf(),
-    reason="transformWithStateInPandas needs the Python protobuf package "
-    "(state-server protocol); the repo vendors a minimal pure-python "
-    "runtime, so this runs wherever the vendor activates",
-)
-def test_dedup_exact_tws_full_parity_with_batch_keepers(spark, sf_dir, tmp_path):
-    """Exact dedup on the REAL transformWithState runtime: fed in
-    doc_id order over two micro-batches, the tws keeper must equal the
-    batch keeper per fingerprint — cross-batch suppression through the
-    boolean ValueState, min-over-chunks within a batch."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    stream = _two_file_stream(
-        spark, tmp_path, docs, "doc_id", "doc_id long, text string"
-    )
-    with _rocksdb_state(spark):
-        out = _run_to_memory(
-            stateful.dedup_exact_tws(stream), spark, "dedup_tws_out"
-        )
-    got = {r["fingerprint"]: r["keep_doc_id"] for r in out.collect()}
-    batch = {
-        r["fingerprint"]: r["keep_doc_id"]
-        for r in plans.query_map()["dedup_exact"](spark, sf_dir).collect()
-    }
-    assert got == batch and len(batch) > 0
 
 
 def test_dedup_exact_stream_matches_batch_with_tiny_arrow_chunks(
@@ -5319,92 +5047,6 @@ def test_visitor_stats_store_job_matches_sql_dws_surface(spark, sf_dir, tmp_path
     assert _rows(visitor_stats_from_store(spark, store_path), cols) == want
 
 
-def test_uv_dedup_tws_state_machine_matches_batch_and_expresses_ttl(spark, sf_dir):
-    """Drive ``UvDedupProcessor`` through the fake runtime-contract
-    harness over the whole events table (two arrival-ordered batches)
-    and assert (a) the emitted key set equals batch ``uv_dedup``'s
-    exactly, and (b) W6 — the reference's 1-day state TTL — is
-    expressed through the API's OWN ttlDurationMs argument rather than
-    custom eviction code (the fake handle records the registration).
-    The e2e form is protobuf-gated like the bounce twin's."""
-    events = load_table(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id"
-    )
-    pdf = events.toPandas().sort_values(["ts", "event_id"])
-    pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-    half = len(pdf) // 2
-    batches = [pdf.iloc[:half], pdf.iloc[half:]]
-    handles: dict = {}
-    ttl_seen: list = []
-
-    class _TtlRecordingHandle(_FakeHandle):
-        def getValueState(self, name, schema, ttlDurationMs=None):
-            ttl_seen.append((name, ttlDurationMs))
-            return super().getValueState(name, schema, ttlDurationMs)
-
-    emitted = []
-    for batch in batches:
-        tv = _FakeTimerValues(0)
-        for uid, grp in batch.groupby("user_id"):
-            h = handles.get(uid)
-            if h is None:
-                h = handles[uid] = _TtlRecordingHandle()
-                proc = stateful.UvDedupProcessor()
-                proc.init(h)
-                h.proc = proc
-            for out in h.proc.handleInputRows((uid,), iter([grp]), tv):
-                emitted.append(out)
-    got = {
-        (int(r.user_id), r.visit_ymd)
-        for out in emitted
-        if len(out)
-        for r in out.itertuples(index=False)
-    }
-    want = {
-        (r["user_id"], r["visit_ymd"])
-        for r in plans.query_map()["uv_dedup"](spark, sf_dir).collect()
-    }
-    assert got == want and len(want) > 0
-    assert ("last_date", stateful.UV_STATE_TTL_MS) in ttl_seen, (
-        "W6 must ride the API's built-in ttlDurationMs"
-    )
-
-
-def test_uv_dedup_tws_plan_wires_without_runtime(spark, sf_dir):
-    new = stateful.uv_dedup_tws(events_stream(spark, sf_dir))
-    assert new.isStreaming
-    assert [f.name for f in new.schema.fields] == [
-        "user_id", "visit_ymd", "first_event_id", "first_ts",
-    ]
-
-
-@pytest.mark.skipif(
-    not _has_python_protobuf(),
-    reason="transformWithStateInPandas needs the Python protobuf package "
-    "(state-server protocol); the repo vendors a minimal pure-python "
-    "runtime, so this runs wherever the vendor activates",
-)
-def test_uv_dedup_tws_full_parity_with_batch(spark, sf_dir):
-    """W2 on the REAL transformWithState runtime (vendored protobuf
-    shim + RocksDB state store): the tws twin over the whole events
-    table must emit exactly batch ``uv_dedup``'s rows — the
-    fake-harness parity pin promoted to a real-runtime proof."""
-    with _rocksdb_state(spark):
-        # once=True: in processingTime timeMode an availableNow run
-        # never terminates (endless empty timer batches); one batch
-        # carries the whole table here, so parity is exact
-        out = _run_to_memory(
-            stateful.uv_dedup_tws(events_stream(spark, sf_dir)),
-            spark,
-            "uv_tws_out",
-            timeout=240,
-            once=True,
-        )
-    batch = plans.query_map()["uv_dedup"](spark, sf_dir)
-    cols = ["user_id", "visit_ymd", "first_event_id", "first_ts"]
-    assert _rows(out, cols) == _rows(batch, cols)
-
-
 def test_land_after_half_swap_restores_before_writing(spark, sf_dir, tmp_path):
     """Deterministic regression for the round-12 chaos finding (real
     data loss, reproduced before the fix): a COMPACTION crash between
@@ -5621,58 +5263,9 @@ def test_postings_store_serves_phrase_search(spark, sf_dir, tmp_path):
     assert got_pmi == want_pmi and len(want_pmi) > 0
 
 
-def test_visitor_repair_tws_state_machine_matches_batch(spark, sf_dir):
-    """Drive ``VisitorRepairProcessor`` (the stateful trio's third
-    member on the transformWithState API) through the fake runtime
-    contract — per-key ``handleInputRows`` over ts-ordered input — and
-    the emissions must equal batch ``visitor_repair`` exactly (which,
-    with the old API's parity pin, also equates the two streaming
-    forms). No timers in this machine, so no expiry phase."""
-    proc_cls = stateful.VisitorRepairProcessor
-    events = load_table(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id"
-    )
-    pdf = events.toPandas()
-    pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-    # two ts-ordered micro-batches so the first-date state must CARRY
-    # across handleInputRows calls (a later-day batch-2 claim of
-    # is_new='1' is repairable only from persisted batch-1 state)
-    pdf = pdf.sort_values(["ts", "event_id"])
-    half = len(pdf) // 2
-    batches = [pdf.iloc[:half], pdf.iloc[half:]]
-    emitted = []
-    tv = _FakeTimerValues(-(10**15))
-    procs: dict = {}
-    for batch in batches:
-        for uid, grp in batch.groupby("user_id"):
-            proc = procs.get(uid)
-            if proc is None:
-                proc = procs[uid] = proc_cls()
-                proc.init(_FakeHandle())
-            for out in proc.handleInputRows((uid,), iter([grp]), tv):
-                emitted.append(out)
-    got = {
-        (int(r.event_id), int(r.user_id), r.ymd, r.is_new)
-        for out in emitted
-        if len(out)
-        for r in out.itertuples(index=False)
-    }
-    want = {
-        (r["event_id"], r["user_id"], r["ymd"], r["is_new"])
-        for r in plans.query_map()["visitor_repair"](spark, sf_dir).collect()
-    }
-    assert got == want and len(want) > 0
-
-
-@pytest.mark.skipif(
-    not _has_python_protobuf(),
-    reason="transformWithStateInPandas needs the Python protobuf package "
-    "(state-server protocol); the repo vendors a minimal pure-python "
-    "runtime, so this runs wherever the vendor activates",
-)
-def test_visitor_repair_tws_state_survives_restart(spark, sf_dir, tmp_path):
-    """W7 on the REAL transformWithState runtime: a SECOND query
-    instance over the same checkpoint must recover the RocksDB state —
+def test_visitor_repair_stream_state_survives_restart(spark, sf_dir, tmp_path):
+    """W7: a SECOND query instance over the same checkpoint must
+    recover the keyed state from the default state store —
     a user whose first visit was processed by the first instance gets
     is_new='0' for later visits processed by the restarted one (a
     fresh-state restart would wrongly claim '1'). Union of both
@@ -5700,7 +5293,7 @@ def test_visitor_repair_tws_state_survives_restart(spark, sf_dir, tmp_path):
             .parquet(str(tmp_path / "in"))
         )
         q = (
-            stateful.visitor_repair_tws(stream)
+            stateful.visitor_repair_stream(stream)
             .writeStream.format("parquet")
             .option("path", out_dir)
             .outputMode("append")
@@ -5711,15 +5304,14 @@ def test_visitor_repair_tws_state_survives_restart(spark, sf_dir, tmp_path):
         assert q.awaitTermination(180), f"{name} timed out"
         return spark.read.parquet(out_dir).collect()
 
-    with _rocksdb_state(spark):
-        rows1 = run_instance("vr_tws_r1")
-        p2 = str(tmp_path / "in" / "f2.parquet")
-        pdf.iloc[half:].to_parquet(p2)
-        t = time.time() + 5
-        os.utime(p2, (t, t))
-        rows_all = run_instance("vr_tws_r2")
-        keys1 = {(r["event_id"]) for r in rows1}
-        rows2 = [r for r in rows_all if r["event_id"] not in keys1]
+    rows1 = run_instance("vr_r1")
+    p2 = str(tmp_path / "in" / "f2.parquet")
+    pdf.iloc[half:].to_parquet(p2)
+    t = time.time() + 5
+    os.utime(p2, (t, t))
+    rows_all = run_instance("vr_r2")
+    keys1 = {(r["event_id"]) for r in rows1}
+    rows2 = [r for r in rows_all if r["event_id"] not in keys1]
 
     cols = ["event_id", "user_id", "ymd", "is_new"]
     got = {tuple(r[c] for c in cols) for r in rows1} | {
@@ -5740,15 +5332,14 @@ def test_visitor_repair_tws_state_survives_restart(spark, sf_dir, tmp_path):
     assert repaired_after_restart, "no cross-instance repair observed"
 
 
-def test_tws_processors_fix_state_over_out_of_order_chunks():
+def test_stateful_machines_fix_state_over_out_of_order_chunks():
     """The runtime does not guarantee ts-ordered Arrow chunks within one
-    ``handleInputRows`` call: a LATER chunk may hold the key's EARLIEST
-    visit. Both processors must fix their state decision over the whole
-    group before labeling/admitting any row (the round-12 advisor
-    finding; fix: concatenate chunks, sort once). Chunk 1 here carries
-    day-2 rows and chunk 2 the day-1 visit — first-chunk-only logic
-    would label day 2 as the first visit and drop/flip day 1."""
-    tv = _FakeTimerValues(-(10**15))
+    call: a LATER chunk may hold the key's EARLIEST visit. W1 and W2
+    must fix their state decision over the whole group before
+    labeling/admitting any row (fix: concatenate chunks, sort once).
+    Chunk 1 here carries day-2 rows and chunk 2 the day-1 visit —
+    first-chunk-only logic would label day 2 as the first visit and
+    drop/flip day 1."""
     day1 = pd.Timestamp("2024-03-01 09:00:00").to_datetime64()
     day2a = pd.Timestamp("2024-03-02 10:00:00").to_datetime64()
     day2b = pd.Timestamp("2024-03-02 11:00:00").to_datetime64()
@@ -5757,57 +5348,31 @@ def test_tws_processors_fix_state_over_out_of_order_chunks():
     )
     chunk_early = pd.DataFrame({"event_id": [11], "ts": [day1], "user_id": [7]})
 
-    proc = stateful.VisitorRepairProcessor()
-    proc.init(_FakeHandle())
+    state = _FakeGroupState()
     out = pd.concat(
-        list(proc.handleInputRows((7,), iter([chunk_late, chunk_early]), tv))
+        list(stateful._repair_is_new((7,), iter([chunk_late, chunk_early]), state))
     )
     got = {int(r.event_id): r.is_new for r in out.itertuples(index=False)}
     assert got == {11: "1", 21: "0", 22: "0"}
-    assert proc._first.get() == ("20240301",)
+    assert state.updated == ("20240301",)
 
-    proc = stateful.UvDedupProcessor()
-    proc.init(_FakeHandle())
+    state = _FakeGroupState()
     out = pd.concat(
-        list(proc.handleInputRows((7,), iter([chunk_late, chunk_early]), tv))
+        list(
+            stateful._keep_first_visit_per_day(
+                (7,), iter([chunk_late, chunk_early]), state
+            )
+        )
     )
     # one row per day, each the day's earliest event — day 1 admitted
     # even though it arrived in the second chunk
     got = {r.visit_ymd: int(r.first_event_id) for r in out.itertuples(index=False)}
     assert got == {"20240301": 11, "20240302": 21}
-    assert proc._last.get() == ("20240302",)
-
-
-def test_visitor_repair_tws_plan_wires_without_runtime(spark, sf_dir):
-    """The W1 transformWithState plan must construct against the real
-    stream source (schema + analyzer checks) even without the protobuf
-    runtime — output schema identical to the old-API twin's."""
-    new = stateful.visitor_repair_tws(events_stream(spark, sf_dir))
-    old = stateful.visitor_repair_stream(events_stream(spark, sf_dir))
-    assert new.schema == old.schema
-    assert new.isStreaming
-
-
-@pytest.mark.skipif(
-    not _has_python_protobuf(),
-    reason="transformWithStateInPandas needs the Python protobuf package "
-    "(state-server protocol); the repo vendors a minimal pure-python "
-    "runtime, so this runs wherever the vendor activates",
-)
-def test_visitor_repair_tws_full_parity_with_batch(spark, sf_dir):
-    """W1 on the REAL transformWithState runtime (vendored protobuf
-    shim + RocksDB state store): the tws twin over the whole events
-    table must emit exactly batch ``visitor_repair``'s rows — the
-    fake-harness parity pin promoted to a real-runtime proof."""
-    with _rocksdb_state(spark):
-        out = _run_to_memory(
-            stateful.visitor_repair_tws(events_stream(spark, sf_dir)),
-            spark,
-            "vr_tws_out",
-        )
-    batch = plans.query_map()["visitor_repair"](spark, sf_dir)
-    cols = ["event_id", "user_id", "ymd", "is_new"]
-    assert _rows(out, cols) == _rows(batch, cols)
+    assert state.updated == ("20240302",)
+    # the TTL runs from the newest event, not the last chunk's
+    assert state.timeout_ms == (
+        pd.Timestamp(day2b).value // 1_000_000 + stateful.UV_STATE_TTL_MS
+    )
 
 
 def test_bounce_store_out_of_order_replay_fails_loudly(spark, tmp_path):
