@@ -34,6 +34,9 @@ ROUTING_CONFIG = [
     ("purchase", "hbase", "dim_purchase_info", "event_id,user_id,ts,value,props"),
     # 'error' has no config row → dropped (TableProcessFunction.java:85-95)
 ]
+# Declared once: the streaming job reads its config file with it, since
+# inferring a JSON schema costs a Spark job on every micro-batch.
+ROUTING_CONFIG_SCHEMA = "source_type string, sink_type string, sink_table string, sink_columns string"
 
 _CONFIG_VALUES = ", ".join(
     f"('{s}', '{t}', '{tbl}', '{cols}')" for s, t, tbl, cols in ROUTING_CONFIG
@@ -59,9 +62,7 @@ WHERE tp.sink_type = '{{sink_type}}'
 
 def _routed(spark: SparkSession, sf_dir: str, sink_type: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
-    config = spark.createDataFrame(
-        ROUTING_CONFIG, "source_type string, sink_type string, sink_table string, sink_columns string"
-    )
+    config = spark.createDataFrame(ROUTING_CONFIG, ROUTING_CONFIG_SCHEMA)
     cols = F.split(F.col("sink_columns"), ",")
     return (
         events.join(F.broadcast(config), events.event_type == config.source_type, "inner")

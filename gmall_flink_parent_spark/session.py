@@ -13,6 +13,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(app_name: str = "gmall_flink_parent_spark") -> SparkSession:
     """Build (or reuse) a local SparkSession with scale-aware defaults.
@@ -58,6 +60,14 @@ def get_spark(app_name: str = "gmall_flink_parent_spark") -> SparkSession:
         # [Stage N:===>] noise (the r6 WARN-flood lesson, same channel).
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
+        # Python workers fork from the engine's daemon, which stops every
+        # task from re-reading pyspark.zip's directory (see
+        # worker_daemon.py). spark.python.worker.module cannot carry it:
+        # pyspark.daemon ignores a worker module outside the pyspark
+        # package. The package root joins the workers' path so the daemon
+        # imports from any working directory.
+        .config("spark.python.daemon.module", "gmall_flink_parent_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

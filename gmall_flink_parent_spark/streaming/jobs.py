@@ -13,7 +13,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gmall_flink_parent_spark.operators.routing import ROUTING_CONFIG
+from gmall_flink_parent_spark.operators.routing import ROUTING_CONFIG, ROUTING_CONFIG_SCHEMA
 # Public store API re-exported for existing call sites; the private
 # swap internals (_clear_swap_leftovers/_swap_parquet_dir/
 # _max_committed_batch_id) are NOT re-exported — patching a jobs-side
@@ -180,7 +180,8 @@ def routing_job(
 
     def route(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        config = spark.read.json(config_path)  # fresh snapshot = poll tick
+        # fresh snapshot = poll tick
+        config = spark.read.schema(ROUTING_CONFIG_SCHEMA).json(config_path)
         joined = batch.join(
             F.broadcast(config),
             batch.event_type == config.source_type,
@@ -260,10 +261,9 @@ def routing_job(
 
 def write_routing_config(spark: SparkSession, path: str) -> None:
     """Materialize the table_process config (S3's MySQL table) as JSON."""
-    spark.createDataFrame(
-        ROUTING_CONFIG,
-        "source_type string, sink_type string, sink_table string, sink_columns string",
-    ).coalesce(1).write.mode("overwrite").json(path)
+    spark.createDataFrame(ROUTING_CONFIG, ROUTING_CONFIG_SCHEMA).coalesce(1).write.mode(
+        "overwrite"
+    ).json(path)
 
 
 def hourly_stats_stream(events: DataFrame) -> DataFrame:

@@ -318,17 +318,26 @@ def test_routing_job_auto_ddl_registers_typed_dim_table(spark, sf_dir, tmp_path)
 
 
 def test_routing_job_upsert_idempotent(spark, sf_dir, tmp_path):
-    """Replaying the same batch must not duplicate dim rows (K3 upsert)."""
+    """Replaying the same batch must not duplicate dim rows (K3 upsert).
+
+    Also pins the Spark jobs one micro-batch costs: the first lands new
+    dim tables, the replay upsert-merges into them. Inferring the config
+    file's schema cost one more job per batch (9 and 12)."""
     cfg = str(tmp_path / "config")
     write_routing_config(spark, cfg)
+    jobs_per_batch = []
     for ck in ("ck1", "ck2"):  # fresh checkpoint → same data replayed
         q = routing_job(
             events_stream(spark, sf_dir), cfg, str(tmp_path / "out"), str(tmp_path / ck)
         )
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
+        assert len(q.recentProgress) == 1
+        jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+        jobs_per_batch.append(len(jobs))
     dims = spark.read.parquet(str(tmp_path / "out/dims/dim_purchase_info"))
     batch_dims = plans.query_map()["routing_dims"](spark, sf_dir)
     assert dims.count() == batch_dims.count()
+    assert jobs_per_batch[0] <= 8 and jobs_per_batch[1] <= 11, jobs_per_batch
 
 
 def test_upsert_parquet_self_heals_after_crash_leftovers(spark, tmp_path):
