@@ -98,7 +98,7 @@ def dau_hll_sketches(events: DataFrame) -> DataFrame:
 
     Unlike ``approx_count_distinct`` (whose HLL++ state Spark never
     exposes), ``hll_sketch_agg`` returns the sketch itself as BINARY,
-    so per-batch sketches land in a ``_partial_store_job`` store and
+    so per-batch sketches land in a ``batch_store_job`` store and
     ``hll_union_agg`` merges them later — union is register-wise max,
     making estimate(union(per-batch sketches)) EXACTLY equal to
     estimate(one sketch over all events). Shared by the batch twin

@@ -14,7 +14,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gmall_flink_parent_spark.operators.routing import ROUTING_CONFIG, ROUTING_CONFIG_SCHEMA
-# Public store API re-exported for existing call sites; the private
+# Every job below lands its rows through streaming.store (the one
+# ingest-store module: batch_store_job / land_batch / start_batches);
+# its public names are re-exported for existing call sites. The private
 # swap internals (_clear_swap_leftovers/_swap_parquet_dir/
 # _max_committed_batch_id) are NOT re-exported — patching a jobs-side
 # alias of those would silently no-op, since store.py functions resolve
@@ -22,10 +24,12 @@ from gmall_flink_parent_spark.operators.routing import ROUTING_CONFIG, ROUTING_C
 from gmall_flink_parent_spark.streaming.store import (  # noqa: F401
     COMPACT_BASE_ID,
     _hadoop_fs,
-    _partial_store_job,
+    batch_store_job,
     compact_fact_store,
     compact_partial_store,
     heal_store_dirs,
+    land_batch,
+    start_batches,
     store_row_count,
     upsert_parquet,
 )
@@ -57,18 +61,13 @@ def log_split_job(events: DataFrame, out_dir: str, checkpoint_dir: str):
         finally:
             batch.unpersist()
 
-    return (
-        events.writeStream.foreachBatch(split)
-        .option("checkpointLocation", f"{checkpoint_dir}/log_split")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_batches(events, split, f"{checkpoint_dir}/log_split")
 
 
 def corpus_summary_job(docs: DataFrame, store_path: str, checkpoint_dir: str):
     """Streaming twin of batch ``corpus_summary`` (text DWS surface).
 
-    The instructive ``_partial_store_job`` case: the final answer is
+    The instructive partial-store case (``batch_store_job``): the final answer is
     per-language, but ``countDistinct(source)`` is NOT mergeable from
     per-language partials — so the store keeps the FINER (lang, source)
     grain, where every aggregate is a plain sum and the distinct source
@@ -90,7 +89,7 @@ def corpus_summary_job(docs: DataFrame, store_path: str, checkpoint_dir: str):
             )
         )
 
-    return _partial_store_job(
+    return batch_store_job(
         docs, partials, store_path, f"{checkpoint_dir}/corpus_summary"
     )
 
@@ -251,12 +250,7 @@ def routing_job(
         finally:
             joined.unpersist()
 
-    return (
-        cdc_stream.writeStream.foreachBatch(route)
-        .option("checkpointLocation", f"{checkpoint_dir}/routing")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_batches(cdc_stream, route, f"{checkpoint_dir}/routing")
 
 
 def write_routing_config(spark: SparkSession, path: str) -> None:
@@ -518,14 +512,14 @@ def topk_spend_job(events: DataFrame, store_path: str, checkpoint_dir: str):
 
     Top-k is not an append-mode streaming aggregate (ranks churn as
     spend accumulates), so the incremental form is the partial-agg +
-    final-pass split (``_partial_store_job``): per-(event_type, user_id)
+    final-pass split (``batch_store_job``): per-(event_type, user_id)
     decimal partial spends per batch (the SAME ``spend_by_type_user``
     aggregate the batch query scans with); ``topk_spend_from_store``
     merges them and ranks with the SAME ``rank_topk_spend`` pass.
     """
     from gmall_flink_parent_spark.operators.windows import spend_by_type_user
 
-    return _partial_store_job(
+    return batch_store_job(
         events, spend_by_type_user, store_path, f"{checkpoint_dir}/topk_spend"
     )
 
@@ -602,7 +596,7 @@ def dau_hll_job(events: DataFrame, store_path: str, checkpoint_dir: str):
     """
     from gmall_flink_parent_spark.operators.uv_dedup import dau_hll_sketches
 
-    return _partial_store_job(
+    return batch_store_job(
         events, dau_hll_sketches, store_path, f"{checkpoint_dir}/dau_hll"
     )
 
@@ -654,7 +648,7 @@ def hourly_stats_job(events: DataFrame, store_path: str, checkpoint_dir: str):
             )
         )
 
-    return _partial_store_job(
+    return batch_store_job(
         events, partials, store_path, f"{checkpoint_dir}/hourly_stats"
     )
 
@@ -706,7 +700,7 @@ def daily_value_store_job(events: DataFrame, store_path: str, checkpoint_dir: st
             F.sum(F.col("value").cast("decimal(18,2)")).alias("v_part"),
         )
 
-    return _partial_store_job(
+    return batch_store_job(
         events, partials, store_path, f"{checkpoint_dir}/daily_value"
     )
 
@@ -935,7 +929,7 @@ def pricing_summary_store_job(lineitem: DataFrame, store_path: str, checkpoint_d
             )
         )
 
-    return _partial_store_job(
+    return batch_store_job(
         lineitem, partials, store_path, f"{checkpoint_dir}/pricing_summary"
     )
 
@@ -986,7 +980,7 @@ def sequence_support_store_job(events: DataFrame, store_path: str, checkpoint_di
             F.min("ts").alias("first_part"), F.max("ts").alias("last_part")
         )
 
-    return _partial_store_job(
+    return batch_store_job(
         events, partials, store_path, f"{checkpoint_dir}/sequence_support"
     )
 
@@ -1034,7 +1028,7 @@ def visitor_stats_store_job(events: DataFrame, store_path: str, checkpoint_dir: 
             "user_id", F.to_date("ts").alias("day")
         ).distinct()
 
-    return _partial_store_job(
+    return batch_store_job(
         events, partials, store_path, f"{checkpoint_dir}/visitor_stats"
     )
 
@@ -1229,7 +1223,7 @@ def bounce_stats_store_job(
             F.count(F.lit(1)).alias("n_part")
         )
 
-    query = _partial_store_job(
+    query = batch_store_job(
         bounce_detect_stream(observed, watermark_delay=watermark_delay),
         partials,
         store_path,
@@ -1277,7 +1271,7 @@ def revenue_rollup_job(
 ):
     """Streaming twin of batch ``revenue_rollup`` (DWS surface).
 
-    Stream-static enrichment + the ``_partial_store_job`` shape: each
+    Stream-static enrichment + the ``batch_store_job`` shape: each
     micro-batch of orders broadcast-joins the static dims (J2's pattern
     applied to a stream). The dim frames are resolved when the job is
     BUILT — a parquet DataFrame pins its file listing, so an external
@@ -1313,7 +1307,7 @@ def revenue_rollup_job(
             F.count(F.lit(1)).alias("n_orders_part"),
         )
 
-    return _partial_store_job(
+    return batch_store_job(
         orders, partials, store_path, f"{checkpoint_dir}/revenue_rollup"
     )
 
@@ -1337,7 +1331,7 @@ def revenue_cube_job(
 ):
     """Streaming twin of batch ``revenue_cube`` (DWS surface).
 
-    Same ``_partial_store_job`` shape as the rollup twin: partials at
+    Same ``batch_store_job`` shape as the rollup twin: partials at
     the finest (mktsegment, orderpriority) grain per batch; all four
     CUBE grouping sets come out of ``revenue_cube_from_store``'s one
     Expand pass over the compact store, ``grouping_id`` included.
@@ -1358,7 +1352,7 @@ def revenue_cube_job(
             F.count(F.lit(1)).alias("n_orders_part"),
         )
 
-    return _partial_store_job(
+    return batch_store_job(
         orders, partials, store_path, f"{checkpoint_dir}/revenue_cube"
     )
 
@@ -1406,25 +1400,22 @@ def minhash_dedup_job(
     )
 
     def process(batch: DataFrame, batch_id: int) -> None:
-        heal_store_dirs(batch.sparkSession, pairs_path)
         spark = batch.sparkSession
+        # heal the signature store BEFORE its existence check: a crash
+        # between an upsert's two renames leaves it only under ._old,
+        # and deduping against "no store" would silently drop every
+        # pair with an earlier doc (upsert_parquet heals too late)
+        heal_store_dirs(spark, store_path)
         sigs = minhash_signatures(batch).persist()
         try:
             fs, store = _hadoop_fs(spark, store_path)
             store_sigs = spark.read.parquet(store_path) if fs.exists(store) else None
-            dedup_minhash_incremental(sigs, store_sigs).write.mode(
-                "overwrite"
-            ).parquet(f"{pairs_path}/batch_id={batch_id}")
+            land_batch(dedup_minhash_incremental(sigs, store_sigs), pairs_path, batch_id)
             upsert_parquet(spark, sigs, store_path, key="doc_id")
         finally:
             sigs.unpersist()
 
-    return (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{checkpoint_dir}/minhash_dedup")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_batches(docs, process, f"{checkpoint_dir}/minhash_dedup")
 
 
 def ann_index_job(
@@ -1443,20 +1434,11 @@ def ann_index_job(
     """
     from gmall_flink_parent_spark.functions.similarity import ivf_assign_incremental
 
-    def process(batch: DataFrame, batch_id: int) -> None:
-        heal_store_dirs(batch.sparkSession, cells_path)
-        spark = batch.sparkSession
-        cents = spark.read.parquet(centroid_path)
-        ivf_assign_incremental(batch, cents).write.mode("overwrite").parquet(
-            f"{cells_path}/batch_id={batch_id}"
-        )
+    def frame(batch: DataFrame) -> DataFrame:
+        cents = batch.sparkSession.read.parquet(centroid_path)
+        return ivf_assign_incremental(batch, cents)
 
-    return (
-        emb.writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{checkpoint_dir}/ann_index")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return batch_store_job(emb, frame, cells_path, f"{checkpoint_dir}/ann_index")
 
 
 def text_profile_job(docs: DataFrame, out_path: str, checkpoint_dir: str):
@@ -1473,22 +1455,13 @@ def text_profile_job(docs: DataFrame, out_path: str, checkpoint_dir: str):
     text. Batch analog: ``doc_text_profile`` (driver hash-checked);
     stream/batch parity pinned in ``tests/test_streaming.py``.
     """
-    from gmall_flink_parent_spark.functions.spans import winnow_fp_frame
     from gmall_flink_parent_spark.functions.text import doc_text_profile_frame
     from gmall_flink_parent_spark.sources.tables import fan_out
 
-    def process(batch: DataFrame, batch_id: int) -> None:
-        heal_store_dirs(batch.sparkSession, out_path)
-        doc_text_profile_frame(fan_out(batch.sparkSession, batch)).write.mode(
-            "overwrite"
-        ).parquet(f"{out_path}/batch_id={batch_id}")
+    def frame(batch: DataFrame) -> DataFrame:
+        return doc_text_profile_frame(fan_out(batch.sparkSession, batch))
 
-    return (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{checkpoint_dir}/text_profile")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return batch_store_job(docs, frame, out_path, f"{checkpoint_dir}/text_profile")
 
 
 def media_features_job(docs: DataFrame, out_path: str, checkpoint_dir: str):
@@ -1510,8 +1483,7 @@ def media_features_job(docs: DataFrame, out_path: str, checkpoint_dir: str):
     )
     from gmall_flink_parent_spark.sources.tables import fan_out
 
-    def process(batch: DataFrame, batch_id: int) -> None:
-        heal_store_dirs(batch.sparkSession, out_path)
+    def frame(batch: DataFrame) -> DataFrame:
         payload, mime = _routed_payload(
             F.col("doc_id"), F.encode(F.col("text"), "UTF-8")
         )
@@ -1521,16 +1493,9 @@ def media_features_job(docs: DataFrame, out_path: str, checkpoint_dir: str):
         with_payload = fan_out(batch.sparkSession, batch).select(
             "doc_id", payload.alias("payload"), mime.alias("mime")
         )
-        extract_media_features(with_payload).write.mode("overwrite").parquet(
-            f"{out_path}/batch_id={batch_id}"
-        )
+        return extract_media_features(with_payload)
 
-    return (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{checkpoint_dir}/media_features")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return batch_store_job(docs, frame, out_path, f"{checkpoint_dir}/media_features")
 
 
 def mixture_job(
@@ -1562,18 +1527,10 @@ def mixture_job(
     """
     from gmall_flink_parent_spark.functions.curation import corpus_mix_weighted
 
-    def process(batch: DataFrame, batch_id: int) -> None:
-        heal_store_dirs(batch.sparkSession, store_path)
-        corpus_mix_weighted(batch, weights, seed=seed).write.mode(
-            "overwrite"
-        ).parquet(f"{store_path}/batch_id={batch_id}")
+    def frame(batch: DataFrame) -> DataFrame:
+        return corpus_mix_weighted(batch, weights, seed=seed)
 
-    return (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{checkpoint_dir}/mixture")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return batch_store_job(docs, frame, store_path, f"{checkpoint_dir}/mixture")
 
 
 def training_order_from_store(
@@ -1646,23 +1603,15 @@ def contamination_job(
     )
     from gmall_flink_parent_spark.sources.tables import fan_out
 
-    def process(batch: DataFrame, batch_id: int) -> None:
-        heal_store_dirs(batch.sparkSession, store_path)
+    def frame(batch: DataFrame) -> DataFrame:
         spark = batch.sparkSession
         bench = spark.read.parquet(bench_path)
         sh = contamination_shingles(fan_out(spark, batch)).filter(
             F.col("doc_id") % _BENCH_MOD != 0
         )
-        contamination_counts(sh, bench).write.mode("overwrite").parquet(
-            f"{store_path}/batch_id={batch_id}"
-        )
+        return contamination_counts(sh, bench)
 
-    return (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{checkpoint_dir}/contamination")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return batch_store_job(docs, frame, store_path, f"{checkpoint_dir}/contamination")
 
 
 def write_initial_centroid_store(
@@ -1820,12 +1769,7 @@ def centroid_refresh_job(
             sidecars={"fence": fence_df},
         )
 
-    return (
-        emb.writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{checkpoint_dir}/centroid_refresh")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_batches(emb, process, f"{checkpoint_dir}/centroid_refresh")
 
 
 def shingle_store_job(docs: DataFrame, store_path: str, checkpoint_dir: str):
@@ -1850,18 +1794,10 @@ def shingle_store_job(docs: DataFrame, store_path: str, checkpoint_dir: str):
     )
     from gmall_flink_parent_spark.sources.tables import fan_out
 
-    def process(batch: DataFrame, batch_id: int) -> None:
-        heal_store_dirs(batch.sparkSession, store_path)
-        contamination_shingles(
-            fan_out(batch.sparkSession, batch)
-        ).write.mode("overwrite").parquet(f"{store_path}/batch_id={batch_id}")
+    def frame(batch: DataFrame) -> DataFrame:
+        return contamination_shingles(fan_out(batch.sparkSession, batch))
 
-    return (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{checkpoint_dir}/shingle_store")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return batch_store_job(docs, frame, store_path, f"{checkpoint_dir}/shingle_store")
 
 
 def boilerplate_fraction_from_store(
@@ -1911,18 +1847,10 @@ def vocab_store_job(docs: DataFrame, store_path: str, checkpoint_dir: str):
     from gmall_flink_parent_spark.functions.curation import doc_term_counts
     from gmall_flink_parent_spark.sources.tables import fan_out
 
-    def process(batch: DataFrame, batch_id: int) -> None:
-        heal_store_dirs(batch.sparkSession, store_path)
-        doc_term_counts(fan_out(batch.sparkSession, batch)).write.mode(
-            "overwrite"
-        ).parquet(f"{store_path}/batch_id={batch_id}")
+    def frame(batch: DataFrame) -> DataFrame:
+        return doc_term_counts(fan_out(batch.sparkSession, batch))
 
-    return (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{checkpoint_dir}/vocab_store")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return batch_store_job(docs, frame, store_path, f"{checkpoint_dir}/vocab_store")
 
 
 def doc_unigram_logprob_from_store(
@@ -2002,18 +1930,10 @@ def dsir_store_job(docs: DataFrame, store_path: str, checkpoint_dir: str):
     from gmall_flink_parent_spark.functions.selection import hashed_gram_frame
     from gmall_flink_parent_spark.sources.tables import fan_out
 
-    def process(batch: DataFrame, batch_id: int) -> None:
-        heal_store_dirs(batch.sparkSession, store_path)
-        hashed_gram_frame(fan_out(batch.sparkSession, batch)).write.mode(
-            "overwrite"
-        ).parquet(f"{store_path}/batch_id={batch_id}")
+    def frame(batch: DataFrame) -> DataFrame:
+        return hashed_gram_frame(fan_out(batch.sparkSession, batch))
 
-    return (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{checkpoint_dir}/dsir_store")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return batch_store_job(docs, frame, store_path, f"{checkpoint_dir}/dsir_store")
 
 
 def dsir_weights_from_store(spark: SparkSession, store_path: str) -> DataFrame:
@@ -2064,8 +1984,7 @@ def media_fingerprint_job(docs: DataFrame, store_path: str, checkpoint_dir: str)
     )
     from gmall_flink_parent_spark.sources.tables import fan_out
 
-    def process(batch: DataFrame, batch_id: int) -> None:
-        heal_store_dirs(batch.sparkSession, store_path)
+    def frame(batch: DataFrame) -> DataFrame:
         wide = fan_out(batch.sparkSession, batch)
         payload, mime = _routed_payload(
             F.col("doc_id"), F.encode(F.col("text"), "UTF-8")
@@ -2073,15 +1992,10 @@ def media_fingerprint_job(docs: DataFrame, store_path: str, checkpoint_dir: str)
         media = wide.select(
             "doc_id", payload.alias("payload"), mime.alias("mime")
         ).filter(F.col("mime").isin("image/bmp", "image/png"))
-        ahash_rows(media).write.mode("overwrite").parquet(
-            f"{store_path}/batch_id={batch_id}"
-        )
+        return ahash_rows(media)
 
-    return (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{checkpoint_dir}/media_fingerprint")
-        .trigger(availableNow=True)
-        .start()
+    return batch_store_job(
+        docs, frame, store_path, f"{checkpoint_dir}/media_fingerprint"
     )
 
 
@@ -2128,18 +2042,10 @@ def winnow_store_job(docs: DataFrame, store_path: str, checkpoint_dir: str):
     from gmall_flink_parent_spark.functions.spans import winnow_fp_frame
     from gmall_flink_parent_spark.sources.tables import fan_out
 
-    def process(batch: DataFrame, batch_id: int) -> None:
-        heal_store_dirs(batch.sparkSession, store_path)
-        winnow_fp_frame(fan_out(batch.sparkSession, batch)).write.mode(
-            "overwrite"
-        ).parquet(f"{store_path}/batch_id={batch_id}")
+    def frame(batch: DataFrame) -> DataFrame:
+        return winnow_fp_frame(fan_out(batch.sparkSession, batch))
 
-    return (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{checkpoint_dir}/winnow_store")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return batch_store_job(docs, frame, store_path, f"{checkpoint_dir}/winnow_store")
 
 
 def filter_store_job(docs: DataFrame, store_path: str, checkpoint_dir: str):
@@ -2161,18 +2067,10 @@ def filter_store_job(docs: DataFrame, store_path: str, checkpoint_dir: str):
     from gmall_flink_parent_spark.functions.curation import filter_flags_frame
     from gmall_flink_parent_spark.sources.tables import fan_out
 
-    def process(batch: DataFrame, batch_id: int) -> None:
-        heal_store_dirs(batch.sparkSession, store_path)
-        filter_flags_frame(fan_out(batch.sparkSession, batch)).write.mode(
-            "overwrite"
-        ).parquet(f"{store_path}/batch_id={batch_id}")
+    def frame(batch: DataFrame) -> DataFrame:
+        return filter_flags_frame(fan_out(batch.sparkSession, batch))
 
-    return (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{checkpoint_dir}/filter_store")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return batch_store_job(docs, frame, store_path, f"{checkpoint_dir}/filter_store")
 
 
 _FILTER_FLAG_COLS = (
@@ -2223,18 +2121,10 @@ def span_store_job(docs: DataFrame, store_path: str, checkpoint_dir: str):
     from gmall_flink_parent_spark.functions.spans import span_frame
     from gmall_flink_parent_spark.sources.tables import fan_out
 
-    def process(batch: DataFrame, batch_id: int) -> None:
-        heal_store_dirs(batch.sparkSession, store_path)
-        span_frame(fan_out(batch.sparkSession, batch)).write.mode(
-            "overwrite"
-        ).parquet(f"{store_path}/batch_id={batch_id}")
+    def frame(batch: DataFrame) -> DataFrame:
+        return span_frame(fan_out(batch.sparkSession, batch))
 
-    return (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{checkpoint_dir}/span_store")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return batch_store_job(docs, frame, store_path, f"{checkpoint_dir}/span_store")
 
 
 def span_dedup_from_store(spark: SparkSession, store_path: str) -> DataFrame:
@@ -2400,64 +2290,38 @@ def curation_ingest_job(
     )
     from gmall_flink_parent_spark.sources.tables import fan_out
 
+    text = ("doc_id", "text")
+    # (store path, frame function, input columns) in landing order; the
+    # optional stores land only when their path is given
+    stores = (
+        (profile_path, doc_text_profile_frame, text),
+        (shingle_path, contamination_shingles, text),
+        (
+            mixture_path,
+            lambda w: corpus_mix_weighted(w, weights, seed=mix_seed),
+            ("doc_id", "source"),
+        ),
+        (vocab_path, doc_term_counts, text),
+        (winnow_path, winnow_fp_frame, text),
+        (quality_path, doc_repetition_profile_frame, text),
+        (chunk_path, chunk_windows_frame, text),
+        (dsir_path, hashed_gram_frame, ("doc_id", "text", "lang")),
+        (span_path, span_frame, text),
+        (filter_path, filter_flags_frame, text),
+        (postings_path, positional_postings_frame, text),
+        (gram_path, gram_count_frame, text),
+    )
+
     def process(batch: DataFrame, batch_id: int) -> None:
-        heal_store_dirs(batch.sparkSession, chunk_path, dsir_path, filter_path, gram_path, mixture_path, postings_path, profile_path, quality_path, shingle_path, span_path, vocab_path, winnow_path)
         wide = fan_out(batch.sparkSession, batch).persist()
         try:
-            doc_text_profile_frame(wide.select("doc_id", "text")).write.mode(
-                "overwrite"
-            ).parquet(f"{profile_path}/batch_id={batch_id}")
-            contamination_shingles(wide.select("doc_id", "text")).write.mode(
-                "overwrite"
-            ).parquet(f"{shingle_path}/batch_id={batch_id}")
-            corpus_mix_weighted(
-                wide.select("doc_id", "source"), weights, seed=mix_seed
-            ).write.mode("overwrite").parquet(f"{mixture_path}/batch_id={batch_id}")
-            if vocab_path is not None:
-                doc_term_counts(wide.select("doc_id", "text")).write.mode(
-                    "overwrite"
-                ).parquet(f"{vocab_path}/batch_id={batch_id}")
-            if winnow_path is not None:
-                winnow_fp_frame(wide.select("doc_id", "text")).write.mode(
-                    "overwrite"
-                ).parquet(f"{winnow_path}/batch_id={batch_id}")
-            if quality_path is not None:
-                doc_repetition_profile_frame(wide.select("doc_id", "text")).write.mode(
-                    "overwrite"
-                ).parquet(f"{quality_path}/batch_id={batch_id}")
-            if chunk_path is not None:
-                chunk_windows_frame(wide.select("doc_id", "text")).write.mode(
-                    "overwrite"
-                ).parquet(f"{chunk_path}/batch_id={batch_id}")
-            if dsir_path is not None:
-                hashed_gram_frame(
-                    wide.select("doc_id", "text", "lang")
-                ).write.mode("overwrite").parquet(f"{dsir_path}/batch_id={batch_id}")
-            if span_path is not None:
-                span_frame(wide.select("doc_id", "text")).write.mode(
-                    "overwrite"
-                ).parquet(f"{span_path}/batch_id={batch_id}")
-            if filter_path is not None:
-                filter_flags_frame(wide.select("doc_id", "text")).write.mode(
-                    "overwrite"
-                ).parquet(f"{filter_path}/batch_id={batch_id}")
-            if postings_path is not None:
-                positional_postings_frame(wide.select("doc_id", "text")).write.mode(
-                    "overwrite"
-                ).parquet(f"{postings_path}/batch_id={batch_id}")
-            if gram_path is not None:
-                gram_count_frame(wide.select("doc_id", "text")).write.mode(
-                    "overwrite"
-                ).parquet(f"{gram_path}/batch_id={batch_id}")
+            for path, frame, cols in stores:
+                if path is not None:
+                    land_batch(frame(wide.select(*cols)), path, batch_id)
         finally:
             wide.unpersist()
 
-    return (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{checkpoint_dir}/curation_ingest")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_batches(docs, process, f"{checkpoint_dir}/curation_ingest")
 
 
 def term_postings_from_store(spark: SparkSession, store_path: str) -> DataFrame:
@@ -2594,12 +2458,13 @@ def expectations_job(
     from gmall_flink_parent_spark.functions.expectations import expectation_report
 
     def process(batch: DataFrame, batch_id: int) -> None:
-        heal_store_dirs(batch.sparkSession, store_path)
         report = expectation_report(batch, checks)
         rows = report.collect()  # k check rows — bounded by the suite
-        batch.sparkSession.createDataFrame(rows, report.schema).coalesce(
-            1
-        ).write.mode("overwrite").parquet(f"{store_path}/batch_id={batch_id}")
+        land_batch(
+            batch.sparkSession.createDataFrame(rows, report.schema).coalesce(1),
+            store_path,
+            batch_id,
+        )
         failed = [r["check_name"] for r in rows if r["status"] != "pass"]
         if strict and failed:
             raise ValueError(
@@ -2607,12 +2472,7 @@ def expectations_job(
                 + ", ".join(failed)
             )
 
-    return (
-        docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{checkpoint_dir}/expectations")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_batches(docs, process, f"{checkpoint_dir}/expectations")
 
 
 def expectation_history_from_store(spark: SparkSession, store_path: str) -> DataFrame:
@@ -2641,19 +2501,10 @@ def bloom_bits_job(bench_docs: DataFrame, store_path: str, checkpoint_dir: str):
     from gmall_flink_parent_spark.functions.curation import contamination_shingles
     from gmall_flink_parent_spark.functions.sketches import bloom_bits
 
-    def process(batch: DataFrame, batch_id: int) -> None:
-        heal_store_dirs(batch.sparkSession, store_path)
-        bits = bloom_bits(contamination_shingles(batch).select("g").distinct())
-        bits.coalesce(1).write.mode("overwrite").parquet(
-            f"{store_path}/batch_id={batch_id}"
-        )
+    def frame(batch: DataFrame) -> DataFrame:
+        return bloom_bits(contamination_shingles(batch).select("g").distinct()).coalesce(1)
 
-    return (
-        bench_docs.writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{checkpoint_dir}/bloom_bits")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return batch_store_job(bench_docs, frame, store_path, f"{checkpoint_dir}/bloom_bits")
 
 
 def contamination_bloom_from_store(
@@ -2697,15 +2548,8 @@ def scd2_change_store_job(changes: DataFrame, store_path: str, checkpoint_dir: s
     compact change store is cheap at any scale.
     """
 
-    def process(batch: DataFrame, batch_id: int) -> None:
-        heal_store_dirs(batch.sparkSession, store_path)
-        batch.write.mode("overwrite").parquet(f"{store_path}/batch_id={batch_id}")
-
-    return (
-        changes.writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{checkpoint_dir}/scd2_changes")
-        .trigger(availableNow=True)
-        .start()
+    return batch_store_job(
+        changes, lambda batch: batch, store_path, f"{checkpoint_dir}/scd2_changes"
     )
 
 
@@ -2742,7 +2586,7 @@ def user_days_store_job(events: DataFrame, store_path: str, checkpoint_dir: str)
             "user_id", F.to_date("ts").alias("day")
         ).distinct()
 
-    return _partial_store_job(
+    return batch_store_job(
         events, partials, store_path, f"{checkpoint_dir}/user_days"
     )
 
@@ -2782,7 +2626,7 @@ def type_moments_store_job(events: DataFrame, store_path: str, checkpoint_dir: s
     Decimal sums and counts are associative, so the accumulated
     partials fold to exactly the stats a one-shot scan would compute
     (``compact_partial_store``-safe); this is the
-    ``_partial_store_job`` grain rule applied to second moments.
+    ``batch_store_job`` grain rule applied to second moments.
     """
 
     def partials(batch: DataFrame) -> DataFrame:
@@ -2793,7 +2637,7 @@ def type_moments_store_job(events: DataFrame, store_path: str, checkpoint_dir: s
             F.sum(v * v).alias("s2"),
         )
 
-    return _partial_store_job(
+    return batch_store_job(
         events, partials, store_path, f"{checkpoint_dir}/type_moments"
     )
 
@@ -2883,7 +2727,7 @@ def new_vs_returning_from_store(spark: SparkSession, store_path: str) -> DataFra
 def value_histogram_job(events: DataFrame, store_path: str, checkpoint_dir: str):
     """Per-batch (type, bucket) histogram partials — counts and decimal
     mass are additive, so the accumulated store folds to exactly the
-    one-shot histogram (the ``_partial_store_job`` grain rule; compacts
+    one-shot histogram (the ``batch_store_job`` grain rule; compacts
     via ``compact_partial_store``-compatible re-aggregation in the
     head). Per-batch size ≤ types × occupied buckets, independent of
     event volume."""
@@ -2896,7 +2740,7 @@ def value_histogram_job(events: DataFrame, store_path: str, checkpoint_dir: str)
             F.sum(F.col("value").cast("decimal(18,2)")).alias("sum_dec"),
         )
 
-    return _partial_store_job(
+    return batch_store_job(
         events, partials, store_path, f"{checkpoint_dir}/value_histogram"
     )
 
@@ -2938,7 +2782,7 @@ def session_store_job(
     sums never double.
     """
 
-    return _partial_store_job(
+    return batch_store_job(
         events,
         lambda batch: session_fragments(batch, gap),
         store_path,

@@ -1,18 +1,29 @@
-"""Partial-aggregate store machinery shared by the DWS streaming twins.
+"""The one ingest-store module: every streaming job lands its rows in
+a store through the pieces below, and every store is maintained by the
+passes below (SURVEY §3, DEPLOY.md).
 
-The three pieces of the incremental-DWS shape (SURVEY §3, DEPLOY.md):
+The three store-landing decisions live here and nowhere else:
 
-- ``_partial_store_job``: reduce each micro-batch to a compact partial
-  frame and land it in an idempotent ``batch_id=N`` partition.
-- ``compact_partial_store``: fold committed batch partitions into the
-  reserved ``batch_id=-1`` base partition, crash-safely.
-- ``upsert_parquet`` + the two-rename swap core
+- ``land_batch``: heal swap leftovers, then overwrite the micro-batch's
+  own ``batch_id=N`` partition. Replays overwrite their own partition,
+  so a store never double-counts, and the heal keeps a half-swapped
+  store from being masked by the write.
+- ``start_batches``: the ``foreachBatch`` + checkpoint +
+  ``availableNow`` start that every streaming job shares.
+- ``batch_store_job``: the two together, for jobs that land one frame
+  per micro-batch (the DWS partial stores and the per-doc fact stores).
+
+Maintenance and the swap core:
+
+- ``compact_partial_store`` / ``compact_fact_store``: fold committed
+  batch partitions into the reserved ``batch_id=-1`` base partition,
+  crash-safely.
+- ``upsert_parquet`` / ``replace_parquet`` + the two-rename swap core
   (``_swap_parquet_dir``/``_clear_swap_leftovers``): the self-healing
-  atomic-replace primitive both of the above (and the K3 dim sink in
-  ``streaming/jobs.py``) build on.
+  atomic-replace primitive the compactions and the K3 dim sink build on.
 
-Extracted from ``streaming/jobs.py`` (round 6) purely for structure;
-every name is re-exported there, so call sites and tests are unchanged.
+``streaming/jobs.py`` holds each job's frame function and re-exports
+the public names.
 """
 
 from __future__ import annotations
@@ -222,7 +233,7 @@ def compact_partial_store(
     group_cols: list[str],
     checkpoint_location: str | None = None,
 ) -> int:
-    """Maintenance pass for ``_partial_store_job`` stores: fold batch
+    """Maintenance pass for ``batch_store_job`` partial stores: fold batch
     partitions into ONE base partition at the reserved
     ``batch_id=-1`` (``COMPACT_BASE_ID``) — an id the stream can never
     write, so no future or REPLAYED micro-batch's ``overwrite`` of its
@@ -441,28 +452,49 @@ def compact_fact_store(
     return COMPACT_BASE_ID
 
 
-def _partial_store_job(stream: DataFrame, partials_fn, store_path: str, checkpoint: str):
-    """The shared DWS incremental shape: reduce each micro-batch to a
-    COMPACT partial-aggregate frame (size ∝ #groups, independent of
-    fact volume) and land it in an idempotent ``batch_id=N`` partition
-    — replays overwrite their own partition, so the store never
-    double-counts (same exactly-once pattern as ``minhash_dedup_job``'s
-    pair sink). A ``*_from_store`` final pass re-aggregates the partials
-    — exact, because decimal sums and counts are associative. At 100 TB
-    the stream pays one map-side-combined shuffle per batch; the final
-    pass reads only the compact store."""
+def land_batch(frame: DataFrame, store_path: str, batch_id: int) -> None:
+    """Land one micro-batch's rows in its own ``batch_id=N`` partition
+    of ``store_path``: heal swap leftovers first (``heal_store_dirs``),
+    then overwrite the partition. The overwrite is the exactly-once
+    unit, since a replayed batch replaces its earlier output instead of
+    appending beside it. ``frame`` must not read ``store_path``; a job
+    whose frame reads a store heals that store before building it."""
+    heal_store_dirs(frame.sparkSession, store_path)
+    frame.write.mode("overwrite").parquet(f"{store_path}/batch_id={batch_id}")
 
-    def process(batch: DataFrame, batch_id: int) -> None:
-        heal_store_dirs(batch.sparkSession, store_path)
-        partials_fn(batch).write.mode("overwrite").parquet(
-            f"{store_path}/batch_id={batch_id}"
-        )
 
+def start_batches(
+    stream: DataFrame,
+    process: Callable[[DataFrame, int], None],
+    checkpoint: str,
+):
+    """Start ``process(batch, batch_id)`` over ``stream`` as a
+    checkpointed ``availableNow`` query: the one place a streaming job
+    wires ``foreachBatch``, its checkpoint and its trigger."""
     return (
         stream.writeStream.foreachBatch(process)
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()
+    )
+
+
+def batch_store_job(stream: DataFrame, frame_fn, store_path: str, checkpoint: str):
+    """The shared ingest-store shape: map each micro-batch through
+    ``frame_fn`` and land the result with ``land_batch``.
+
+    Two store families run on it. DWS partial stores reduce each batch
+    to a COMPACT partial-aggregate frame (size ∝ #groups, independent
+    of fact volume), and a ``*_from_store`` final pass re-aggregates the
+    partials — exact, because decimal sums and counts are associative.
+    Fact stores land per-doc rows computed once at ingest (shingles,
+    profiles, fingerprints), which every later head reads instead of
+    re-scanning text. At 100 TB the stream pays one batch-sized pass per
+    micro-batch; the final passes read only the store."""
+    return start_batches(
+        stream,
+        lambda batch, batch_id: land_batch(frame_fn(batch), store_path, batch_id),
+        checkpoint,
     )
 
 

@@ -98,6 +98,7 @@ def main() -> None:
         corpus_mix_weighted,
     )
     from gmall_flink_parent_spark.streaming.jobs import (
+        land_batch,
         training_order_from_store,
     )
 
@@ -113,9 +114,7 @@ def main() -> None:
     lo = float("-inf")
     for i, hi in enumerate([*bounds, float("inf")]):
         batch = docs_kept.filter((F.col("doc_id") > lo) & (F.col("doc_id") <= hi))
-        corpus_mix_weighted(batch, weights, seed="pipe-v1:mix").write.mode(
-            "overwrite"
-        ).parquet(f"{store_dir}/batch_id={i}")
+        land_batch(corpus_mix_weighted(batch, weights, seed="pipe-v1:mix"), store_dir, i)
         lo = hi
     store_ingest_s = round(time.perf_counter() - t0, 3)
 

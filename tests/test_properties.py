@@ -1357,7 +1357,7 @@ def test_store_fence_chaos_state_machine(spark, tmp_path):
     Hypothesis drives the schedule; the rules map 1:1 to the crash
     points the protocol documents:
 
-    - ``land``: the ``_partial_store_job`` foreachBatch body — partition
+    - ``land``: the ``batch_store_job`` foreachBatch body — partition
       overwrite, then (maybe) the checkpoint commit record; "maybe" IS
       the crash-between-sink-write-and-commit point.
     - ``replay``: the stream re-running the uncommitted batch after a
@@ -1386,7 +1386,7 @@ def test_store_fence_chaos_state_machine(spark, tmp_path):
         _clear_swap_leftovers,
         compact_fact_store,
         compact_partial_store,
-        heal_store_dirs,
+        land_batch,
     )
 
     def batch_rows(n: int) -> list[tuple[int, int]]:
@@ -1406,17 +1406,16 @@ def test_store_fence_chaos_state_machine(spark, tmp_path):
             self.pending: int | None = None
 
         def _land_partition(self, n: int) -> None:
-            # mirrors the FIXED _partial_store_job body: heal swap
-            # leftovers before the partition write. Without the heal,
-            # this machine found real data loss (land after a
-            # compaction crash between renames recreates the store dir,
-            # so the next heal drops ._old — every folded batch gone);
-            # the deterministic regression lives in
+            # the real store body: land_batch heals swap leftovers
+            # before the partition write. Without the heal, this machine
+            # found real data loss (land after a compaction crash
+            # between renames recreates the store dir, so the next heal
+            # drops ._old — every folded batch gone); the deterministic
+            # regression lives in
             # test_land_after_half_swap_restores_before_writing.
-            heal_store_dirs(spark, self.store)
-            spark.createDataFrame(batch_rows(n), "k long, v long").write.mode(
-                "overwrite"
-            ).parquet(f"{self.store}/batch_id={n}")
+            land_batch(
+                spark.createDataFrame(batch_rows(n), "k long, v long"), self.store, n
+            )
 
         def _commit(self, n: int) -> None:
             with open(os.path.join(self.ckpt, "commits", str(n)), "w") as fh:

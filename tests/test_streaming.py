@@ -1613,6 +1613,74 @@ def test_minhash_dedup_job_stream(spark, sf_dir, tmp_path):
     assert spark.read.parquet(str(tmp_path / "store")).count() == docs.count()
 
 
+def test_minhash_dedup_job_heals_half_swapped_store(spark, sf_dir, tmp_path):
+    """A crash between the signature upsert's two renames leaves the
+    store only under ``._old``. The resumed stream must heal it BEFORE
+    deduping the next batch against it: deduping against "no store"
+    silently drops every pair whose earlier doc landed before the
+    crash, and the upsert then restores the store, hiding the loss."""
+    import time
+
+    from gmall_flink_parent_spark.streaming.jobs import minhash_dedup_job
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    median = docs.approxQuantile("doc_id", [0.5], 0.0)[0]
+    (tmp_path / "in").mkdir()
+    store = str(tmp_path / "store")
+
+    def run_with(fname, half, mtime_off):
+        path = str(tmp_path / "in" / fname)
+        half.toPandas().to_parquet(path)
+        t = time.time() + mtime_off
+        os.utime(path, (t, t))
+        stream = (
+            spark.readStream.schema("doc_id long, text string")
+            .option("maxFilesPerTrigger", "1")
+            .parquet(str(tmp_path / "in"))
+        )
+        q = minhash_dedup_job(stream, store, str(tmp_path / "pairs"), str(tmp_path / "ck"))
+        assert q.awaitTermination(180)
+
+    run_with("f1.parquet", docs.filter(F.col("doc_id") <= median), 0)
+    # the crash window: the store exists only under ._old, beside the
+    # half-written replacement the crash abandoned
+    os.rename(store, store + "._old")
+    spark.range(1).selectExpr("id AS doc_id").write.parquet(store + "._tmp")
+    # resume on the SAME checkpoint: the next file is batch 1
+    run_with("f2.parquet", docs.filter(F.col("doc_id") > median), 5)
+
+    pairs = spark.read.parquet(str(tmp_path / "pairs"))
+    assert sorted(
+        r["batch_id"] for r in pairs.select("batch_id").distinct().collect()
+    ) == [0, 1]
+    cols = ["doc_id_a", "doc_id_b", "est_jaccard"]
+    got = {tuple(r[c] for c in cols) for r in pairs.collect()}
+    batch = {
+        tuple(r)
+        for r in plans.query_map()["dedup_minhash_lsh"](spark, sf_dir).collect()
+    }
+    assert got == batch, f"{len(batch - got)} of {len(batch)} pairs missing"
+    assert spark.read.parquet(store).count() == docs.count()
+
+
+def test_store_skeleton_lives_only_in_store_module():
+    """Every streaming job lands its store through ``streaming/store.py``
+    (``batch_store_job`` / ``land_batch`` / ``start_batches``). A job
+    that hand-rolls ``foreachBatch`` or the ``batch_id=N`` layout can
+    leave out the heal-before-write that the store body carries."""
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "gmall_flink_parent_spark"
+    needles = (".foreachBatch(", "batch_id={")
+    found = {
+        (p.relative_to(pkg).as_posix(), needle)
+        for p in pkg.rglob("*.py")
+        for needle in needles
+        if needle in p.read_text(encoding="utf-8")
+    }
+    assert found == {("streaming/store.py", needle) for needle in needles}
+
+
 def test_ivf_assign_incremental_matches_batch(spark, sf_dir):
     """Frozen-centroid contract: assigning the corpus in arbitrary
     batches equals one batch assignment under the same centroids."""
