@@ -7,6 +7,10 @@ stdout; BENCH_r05/r08 arrived decapitated when the line outgrew that):
 `queries` is budget-packed slowest-first with `n_queries`/`queries_omitted`
 markers, and the FULL per-query map lives in BENCH_DETAIL.json.
 
+The headline queries are every registered query without the
+``"unbenched"`` tag, in registry order; QUERIES.md "## Bench tiers" says
+why each tagged head is skipped.
+
 Each query is materialized with a noop sink (full execution, no
 collect/driver cost). Timings are end-to-end per query including plan
 time — the same thing a user of the engine pays.
@@ -16,17 +20,12 @@ the MIN: a 50-query single-JVM session occasionally hits multi-second
 environment stalls (GC/compilation pauses — the round-2 driver run
 recorded one query at 17× its reproducible time), and the min of the
 runs measures the engine rather than the pause. Caches are query-scoped
-(plans/registry.py), so repetitions recompute from the source — the min
-is a true cold-cache time, not a cache hit.
+(``gmall_flink_parent_spark/registry.py``), so repetitions recompute from
+the source — the min is a true cold-cache time, not a cache hit.
 
-The artifact self-adjudicates host pressure (two driver rounds ran
-under loadavg 10-12 and produced 4-5× phantom outliers a human then
-re-ran by hand): per-query loadavg is recorded, and any query reading
-more than 2.5× its committed prior-round time (latest BENCH_r{N}.json)
-is re-measured min-of-3 AFTER the sweep before the JSON line is
-emitted — `queries` carries the adjudicated min, `reruns` carries the
-evidence either way (a phantom collapses to its prior time; a real
-regression survives the re-run and stays flagged).
+``warm_up`` and ``time_head`` are the one warm-up and timing loop;
+``scripts/isolate_query.py`` and ``scripts/profile_split.py`` call them
+too.
 """
 
 from __future__ import annotations
@@ -39,303 +38,36 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-HEADLINE = [
-    "order_wide_enriched",
-    "pricing_summary",
-    "order_detail_interval_join",
-    "visitor_repair",
-    "uv_dedup",
-    "bounce_detect",
-    "sessionize",
-    "hourly_stats",
-    "topk_users_by_spend",
-    "revenue_rollup",
-    "revenue_cube",
-    "routing_facts",
-    "purchase_asof_view",
-    "user_value_distribution",
-    "engaged_user_overlap",
-    "skew_salted_join",
-    "doc_text_profile",
-    "doc_quality_lang",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_cascade_verify",
-    "simhash_near_dup",
-    "dedup_embedding_cosine",
-    "cosine_topk_bruteforce",
-    "ann_ivf_bucketed",
-    "ann_srp_lsh",
-    "ann_srp_multiprobe",
-    "cdc_envelope_parse",
-    "sliding_stats",
-    "doc_top_token",
-    "doc_clean_normalize",
-    "pii_scrub",
-    "doc_sample_split",
-    "doc_length_quantiles",
-    "doc_pack_bins",
-    "contamination_4gram",
-    "sql_function_surface",
-    "sql_dws_surface",
-    "vocab_top_tokens",
-    "corpus_summary",
-    "corpus_filter_pipeline",
-    "training_mix_weighted",
-    "packed_training_stream",
-    "winnow_near_dup",
-    "span_dedup_rewrite",
-    "doc_repetition_profile",
-    "doc_hash_classifier_score",
-    "doc_chunk_windows",
-    "chunk_bm25_topk",
-    "curriculum_mixture",
-    "ann_pq_adc",
-    "dsir_importance_weights",
-    "per_source_cap",
-    "image_ahash_near_dup",
-    "audio_pcm_features",
-    "stratified_exact_sample",
-    "gram_df_cms_estimate",
-    "chunk_bm25_multiquery",
-    "cosine_topk_multiquery",
-    "contamination_bloom",
-    "corpus_expectations",
-    "doc_trigram_backoff_logprob",
-    "token_budget_select",
-    "embedding_expectations",
-    "source_length_psi",
-    "source_expectations",
-    "referential_integrity",
-    "source_ngram_diversity",
-    "funnel_conversion",
-    "retention_cohorts",
-    "rfm_segments",
-    "event_value_outliers",
-    "event_type_pivot",
-    "phrase_heavy_hitters",
-    "part_name_fuzzy_pairs",
-    "scd2_dim_history",
-    "knn_label_vote",
-    "doc_tfidf_topterms",
-    "ann_recall_report",
-    "part_name_edit_join",
-    "kcenter_coreset",
-    "part_copurchase_pairs",
-    "stickiness_ratio",
-    "shipping_priority_topk",
-    "region_nation_volume",
-    "part_pagerank",
-    "orders_above_customer_avg",
-    "revenue_grouping_sets",
-    "revenue_trend_fit",
-    "returned_item_losses",
-    "stickiness_hll",
-    "mmr_rerank",
-    "props_variant_extract",
-    "kcenter_assign",
-    "daily_new_vs_returning",
-    "late_shipment_priority",
-    "event_value_histogram",
-    "hybrid_rrf_topk",
-    "supplier_wait_chain",
-    "cold_customer_balance",
-    "session_window_stats",
-    "nation_trade_volume",
-    "nation_market_share",
-    "top_revenue_supplier",
-    "dominant_part_suppliers",
-    "cosine_topk_gemm",
-    "regional_revenue_gapfill",
-    "order_detail_interval_join_outer",
-    "event_type_unpivot",
-    "event_transition_matrix",
-    "part_triangle_count",
-    "weighted_sample_docs",
-    "large_volume_orders",
-    "purchase_attribution",
-    "multimodal_scene_cuts",
-    "audio_spectral_features",
-    "event_value_correlation",
-    "small_qty_part_revenue",
-    "regional_cheapest_supplier",
-    "customer_order_distribution",
-    "nation_profit_rollup",
-    "discount_band_revenue",
-    "late_order_priority_count",
-    "promo_revenue_share",
-    "bracket_discount_revenue",
-    "purchase_dim_asof",
-    "important_part_stock",
-    "part_supplier_variety",
-    "returnflag_priority_counts",
-    # round 11: derived-partsupp exact-topology heads + open-ended VARIANT
-    "partsupp_synth",
-    "regional_cheapest_supplier_partsupp",
-    "nation_profit_rollup_partsupp",
-    "important_part_stock_partsupp",
-    "part_supplier_variety_partsupp",
-    "excess_stock_suppliers_partsupp",
-    "props_schema_profile",
-    # round 11 (late): session interval algebra + sequence mining
-    "session_concurrency_peak",
-    "session_overlap_pairs",
-    "event_sequence_support",
-    "event_sequence3_support",
-    "event_sequence_gap_support",
-    "event_value_twa_daily",
-    "regional_revenue_interp",
-    "event_value_cusum_shift",
-    # round-11 continuation heads
-    "event_value_acf",
-    "event_value_ewma",
-    "event_dow_seasonality",
-    "event_daily_robust_outliers",
-    "event_trend_mann_kendall",
-    "source_length_ks",
-    "doc_token_entropy",
-    "embedding_sq8_topk",
-    "part_link_prediction",
-    "user_spend_concentration",
-    "supplier_lead_time_profile",
-    "conversion_latency_profile",
-    "daily_mix_kl",
-    "order_detail_semi_join",
-    "order_detail_anti_join",
-    "order_detail_interval_join_full",
-    "array_function_surface",
-    "audience_overlap_matrix",
-    "weekday_hour_heatmap",
-    "event_interarrival_profile",
-    "supplier_revenue_hhi",
-    # round-12 continuation heads
-    "part_clustering_coeff",
-    "part_label_propagation",
-    "phrase_search_positional",
-    "collocation_pmi",
-    "term_proximity_search",
-    "event_value_holt_forecast",
-    "holt_forecast_backtest",
-    "sql_retrieval_surface",
-    "source_js_divergence",
-    # round-13 heads
-    "sql_order_wide_surface",
-]
+UNBENCHED_TAG = "unbenched"
 
 
-def _prior_stdout_queries(here: str) -> tuple[int | None, dict[str, float]]:
-    """(round, stdout `queries` subset) of the latest *parseable* committed
-    BENCH_r{N}.json — the exact per-query map the driver's round-over-round
-    differ sees, BEFORE detail-file gap fill. Used both as the adjudication
-    baseline seed and to annotate which previously-reported heads fell out
-    of this round's budget-packed stdout subset (``packed_out``)."""
-    rounds: list[tuple[int, str]] = []
-    for fn in os.listdir(here):
-        m = re.fullmatch(r"BENCH_r(\d+)\.json", fn)
-        if m:
-            rounds.append((int(m.group(1)), os.path.join(here, fn)))
-    for rnum, path in sorted(rounds, reverse=True):
-        try:
-            with open(path) as fh:
-                doc = json.load(fh)
-            # the driver wraps the stdout line: {"n": ..., "parsed": {...}}
-            q = doc.get("queries") or (doc.get("parsed") or {}).get("queries") or {}
-            if q:
-                return rnum, {k: float(v) for k, v in q.items()}
-        except (OSError, ValueError, AttributeError, TypeError):
-            continue  # malformed artifact: fall back to the next round
-    return None, {}
+def headline() -> list[str]:
+    """Every registered head without the ``"unbenched"`` tag, registry order."""
+    from gmall_flink_parent_spark import plans
+
+    return [n for n, s in plans.all_queries().items() if UNBENCHED_TAG not in s.tags]
 
 
-def _rotated_out(here: str, window_names: set[str], registered: set[str]) -> list[str]:
-    """Names the latest committed CORRECTNESS_r{N}.json checked that are
-    still registered but no longer inside the driver's 50-query window —
-    i.e. policy rotation, not breakage. A name missing from the registry
-    entirely is NOT listed (that would be a real drop and must stay loud).
-    Emitted on the stdout line so the driver's differ can tell the two
-    apart without judge re-derivation (VERDICT r14 next-round #6)."""
-    rounds: list[tuple[int, str]] = []
-    try:
-        names = os.listdir(here)
-    except OSError:
-        return []
-    for fn in names:
-        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", fn)
-        if m:
-            rounds.append((int(m.group(1)), os.path.join(here, fn)))
-    for _rnum, path in sorted(rounds, reverse=True):
-        try:
-            with open(path) as fh:
-                doc = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        if isinstance(doc, dict) and doc:
-            return sorted((set(doc) & registered) - window_names)
-    return []
+def warm_up(spark) -> None:
+    """JVM/codegen warm-up on the smallest SF, so timed heads measure the
+    engine, not first-query initialization."""
+    from gmall_flink_parent_spark import plans
+
+    plans.query_map()["pricing_summary"](spark, "/root/testdata/sf0.001").write.format(
+        "noop"
+    ).mode("overwrite").save()
 
 
-def _prior_round_times(here: str | None = None) -> dict[str, float]:
-    """Per-query times from the latest *parseable* committed BENCH_r{N}.json
-    — the outlier-adjudication baseline. An unparseable driver artifact
-    (BENCH_r08: ``"parsed": null`` after the stdout line outgrew the
-    driver's 2000-char tail capture) is skipped, falling back to the next
-    round. Because the stdout line is now budget-packed (slowest queries
-    first — see ``_pack_stdout_queries``), the driver artifact may omit
-    fast queries; those gaps are filled from the committed
-    the committed PER-ROUND ``BENCH_DETAIL_r{N}.json`` (the full
-    175-head map, written once at round close, same-round by
-    construction), falling back to the working-tree BENCH_DETAIL.json
-    only for legacy rounds without a per-round detail file — and then
-    ONLY when that file's ``round`` stamp matches the selected artifact.
-
-    Round-13 review: relying on the working-tree detail file alone let
-    the widest raw mover (``collocation_pmi``, 8.4× apparent) escape
-    the in-artifact A/B entirely — at driver time the working
-    BENCH_DETAIL.json was already stamped with the CURRENT round by the
-    builder's own sweep, so the baseline shrank to the 46 budget-packed
-    stdout heads. The immutable per-round file cannot be overwritten by
-    a later sweep, so every head in the prior round's full map now gets
-    a prior. Empty dict when no prior artifact exists (round 1, or a
-    fresh checkout)."""
-    if here is None:
-        here = os.path.dirname(os.path.abspath(__file__))
-    selected_round, out = _prior_stdout_queries(here)
-    # fill queries the budget-packed driver line omitted from the committed
-    # full-map detail artifacts — immutable per-round file first, then the
-    # working-tree detail file for legacy rounds (see docstring)
-    if selected_round is not None:
-        for path, need_stamp in (
-            (os.path.join(here, f"BENCH_DETAIL_r{selected_round:02d}.json"), False),
-            (os.path.join(here, "BENCH_DETAIL.json"), True),
-        ):
-            try:
-                with open(path) as fh:
-                    detail = json.load(fh)
-            except (OSError, ValueError):
-                continue
-            if need_stamp:
-                detail_round = detail.get("round")
-                if detail_round is None:
-                    # legacy detail file without a round stamp: it was
-                    # written by the newest round's sweep, so it matches
-                    # only that round
-                    detail_round = max(
-                        (
-                            int(m.group(1))
-                            for fn in os.listdir(here)
-                            if (m := re.fullmatch(r"BENCH_r(\d+)\.json", fn))
-                        ),
-                        default=None,
-                    )
-                if detail_round != selected_round:
-                    continue
-            try:
-                for k, v in (detail.get("queries") or {}).items():
-                    out.setdefault(k, float(v))
-            except (AttributeError, TypeError, ValueError):
-                continue
-            break  # per-round file found and used: it is the full map
-    return out
+def time_head(spark, fn, sf_dir: str, reps: int) -> tuple[float, float]:
+    """(min, max) wall seconds over ``reps`` noop-sink runs of ``fn``."""
+    best, worst = float("inf"), 0.0
+    for _ in range(reps):
+        t0 = time.perf_counter()
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        dt = time.perf_counter() - t0
+        best = min(best, dt)
+        worst = max(worst, dt)
+    return best, worst
 
 
 # The driver captures only the LAST 2000 characters of bench stdout
@@ -350,11 +82,11 @@ def _pack_stdout_queries(
     timings: dict[str, float], base: dict, budget: int = STDOUT_LINE_BUDGET
 ) -> dict:
     """Return the stdout document: ``base`` + as many per-query timings as
-    fit in ``budget`` serialized chars, slowest queries first (they carry
-    the adjudication signal; a 0.1 s head omitted from the driver line
-    still has its BENCH_DETAIL.json baseline). Adds ``n_queries`` (full
-    count) and ``queries_omitted`` (how many didn't fit) so a partial map
-    is self-describing, never silently truncated."""
+    fit in ``budget`` serialized chars, slowest queries first (a 0.1 s head
+    omitted from the driver line still has its BENCH_DETAIL.json entry).
+    Adds ``n_queries`` (full count) and ``queries_omitted`` (how many
+    didn't fit) so a partial map is self-describing, never silently
+    truncated."""
     doc = {**base, "n_queries": len(timings), "queries_omitted": 0, "queries": {}}
     overhead = len(json.dumps(doc))
     picked: dict[str, float] = {}
@@ -368,28 +100,6 @@ def _pack_stdout_queries(
     doc["queries"] = {n: picked[n] for n in timings if n in picked}  # stable order
     doc["queries_omitted"] = len(timings) - len(picked)
     return doc
-
-
-RERUN_RATIO = 2.5  # min > ratio x committed prior time → re-measure
-RERUN_CAP = 8  # under SUSTAINED load everything reads slow; re-running
-# the whole sweep would double a stalled run's wall time. 8 covers
-# every historical phantom count (<=5 per round) with margin.
-
-
-def _outlier_suspects(
-    timings: dict[str, float], prior: dict[str, float]
-) -> list[str]:
-    """Queries whose sweep min exceeds RERUN_RATIO x their committed
-    prior-round time — worst ratio first, capped at RERUN_CAP."""
-    ranked = sorted(
-        (
-            (timings[n] / prior[n], n)
-            for n in timings
-            if n in prior and prior[n] > 0 and timings[n] > RERUN_RATIO * prior[n]
-        ),
-        reverse=True,
-    )
-    return [n for _, n in ranked[:RERUN_CAP]]
 
 
 def main() -> None:
@@ -407,12 +117,7 @@ def main() -> None:
     # flooded the BENCH_r06 tail. The JSON line must own the tail.
     spark.sparkContext.setLogLevel("ERROR")
     qmap = plans.query_map()
-
-    # JVM/codegen warmup on the smallest SF so headline timings measure
-    # the engine, not first-query initialization.
-    qmap["pricing_summary"](spark, "/root/testdata/sf0.001").write.format("noop").mode(
-        "overwrite"
-    ).save()
+    warm_up(spark)
 
     # 3 reps: this microVM carries variable external load (observed
     # load-average ~6 with zero local processes); with 2 reps one noisy
@@ -420,51 +125,17 @@ def main() -> None:
     # stall and the spread diagnosis keys off a real sample.
     reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
 
-    def measure(name: str, n: int) -> tuple[float, float, float]:
-        """(min, max, loadavg-1min-at-finish) over n reps of the query."""
-        best, worst = float("inf"), 0.0
-        for _ in range(n):
-            t0 = time.perf_counter()
-            qmap[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            dt = time.perf_counter() - t0
-            best = min(best, dt)
-            worst = max(worst, dt)
-        try:
-            la = round(os.getloadavg()[0], 1)
-        except OSError:
-            la = -1.0
-        return best, worst, la
-
     timings: dict[str, float] = {}
     spreads: dict[str, float] = {}
     load_per_query: dict[str, float] = {}
-    for name in HEADLINE:
-        best, worst, la = measure(name, reps)
+    for name in headline():
+        best, worst = time_head(spark, qmap[name], sf_dir, reps)
         timings[name] = round(best, 3)
         spreads[name] = round(worst / best, 2) if best > 0 else 1.0
-        load_per_query[name] = la
-
-    # Outlier self-adjudication: two driver rounds running, the sweep
-    # landed under loadavg ~10-12 and wrote 4-5x phantom outliers that a
-    # human then re-ran by hand (BENCH_r06/r07 -> VERDICT "Performance").
-    # Adjudicate inside the artifact instead: any query whose min exceeds
-    # RERUN_RATIO x its committed prior-round time is re-measured
-    # (min-of-3, sweep pressure gone) and the artifact records both
-    # numbers — the phantom never reaches `queries`, and a REAL
-    # regression survives the re-run and stays visible in `reruns`.
-    prior = _prior_round_times()
-    suspects = _outlier_suspects(timings, prior)
-    reruns: dict[str, dict] = {}
-    for name in suspects:
-        best, _, la = measure(name, 3)
-        reruns[name] = {
-            "sweep": timings[name],
-            "rerun": round(best, 3),
-            "prior": prior[name],
-            "loadavg": la,
-        }
-        timings[name] = min(timings[name], round(best, 3))
-        load_per_query[name] = la
+        try:
+            load_per_query[name] = round(os.getloadavg()[0], 1)
+        except OSError:
+            load_per_query[name] = -1.0
 
     # Host-stall self-diagnosis: on this microVM a stalled sweep inflates
     # *every* query's slow rep uniformly (BENCH_r04 recorded 3-25x across
@@ -483,154 +154,36 @@ def main() -> None:
         )
     stall_suspect = reps >= 2 and median_spread > 2.0
 
-    total = round(sum(timings.values()), 3)
-    # Keep the stdout line UNDER THE DRIVER'S 2000-CHAR TAIL CAPTURE:
-    # BENCH_r05 and BENCH_r08 both lost their head (-> "parsed": null, no
-    # driver bench signal those rounds) once the line outgrew it. Stdout
-    # gets the summary + a budget-packed slowest-first subset of per-query
-    # mins; the FULL per-query map, rerun bodies, rep spreads, and
-    # per-query loadavg all go to BENCH_DETAIL.json (committed each round).
-    # Machine-generated A/B adjudication (VERDICT r12 next-round #5):
-    # any query still >1.3x its committed prior-round time after the
-    # rerun pass gets an ISOLATED min-of-3 on BOTH the prior round's
-    # git tree and the current tree (fresh subprocess sessions, same
-    # protocol as the round-12 manual adjudication) — the block lands
-    # in BENCH_DETAIL_r{N}.json so regression-vs-host-noise is
-    # answerable from the artifact alone. Guarded: the A/B must never
-    # take down the sweep (the driver depends on the stdout line).
-    ab = None
-    if os.environ.get("SPARK_GRAFT_BENCH_AB", "1") != "0":
-        movers = sorted(
-            (
-                (timings[n] / prior[n], n)
-                for n in timings
-                if n in prior and prior[n] > 0 and timings[n] > 1.3 * prior[n]
-            ),
-            reverse=True,
-        )
-        mover_names = [n for _, n in movers[:6]]
-        if mover_names:
-            try:
-                sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-                from scripts.bench_ab import ab_block, prior_round_ref
-
-                ref, ref_note = prior_round_ref()
-                if ref is not None:
-                    ab = ab_block(mover_names, ref, sf_dir, reps=3)
-                    ab["ref_note"] = ref_note
-                else:
-                    # adjudication must never disappear silently from the
-                    # artifact (round-13 advisor): say WHY there's no ref
-                    ab = {
-                        "metric": "bench_ab",
-                        "ref": None,
-                        "ref_unresolved": ref_note,
-                        "movers": mover_names,
-                    }
-            except Exception as ex:  # noqa: BLE001 — artifact note, not a failure
-                ab = {"metric": "bench_ab", "error": str(ex)[:300]}
-
     try:  # host pressure at sweep end — the stall-adjudication context
         loadavg = [round(x, 1) for x in os.getloadavg()]
     except OSError:
         loadavg = None
     base = {
         "metric": "headline_queries_total_runtime",
-        "value": total,
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "sf": sf,
         "stall_suspect": stall_suspect,
         "median_rep_spread": median_spread,
         "loadavg": loadavg,
-        "n_reruns": len(reruns),
     }
-    here = os.path.dirname(os.path.abspath(__file__))
-    # Phantom-drop annotations (VERDICT r14 next-round #6): every rotation
-    # round the driver's differ reported 5 "dropped" correctness queries and
-    # ~9 "dropped_from_bench" heads that were policy artifacts. Say so on the
-    # line itself. `rotated_out` = still-registered heads behind the window
-    # that the previous round's correctness gate checked; `packed_out` =
-    # heads on the previous round's stdout line that ARE measured this sweep
-    # but no longer fit the budget-packed subset (usually because they got
-    # fast — full map in BENCH_DETAIL). Lists are bounded: rotation policy
-    # moves ≤5/round and packing churn is ~10; `packed_out` is capped with
-    # an explicit count so the line can never outgrow the driver tail.
-    all_specs = plans.all_queries()
-    rotated = _rotated_out(here, set(list(all_specs)[:50]), set(all_specs))
-    if rotated:
-        base["rotated_out"] = rotated
-    _, prior_stdout = _prior_stdout_queries(here)
-    detail_path = os.path.join(here, "BENCH_DETAIL.json")
-    # Stamp which round's sweep wrote this detail file: the driver lands
-    # BENCH_r{N}.json AFTER bench runs, so the artifacts on disk now are
-    # rounds 1..N-1 and this sweep belongs to round max+1. The stamp lets
-    # _prior_round_times refuse to mix this sweep's timings into an older
-    # round's adjudication baseline.
-    this_round = 1 + max(
-        (
-            int(m.group(1))
-            for fn in os.listdir(here)
-            if (m := re.fullmatch(r"BENCH_r(\d+)\.json", fn))
-        ),
-        default=0,
-    )
+    # Stdout gets the summary + a budget-packed slowest-first subset of
+    # per-query mins; the FULL per-query map, rep spreads and per-query
+    # loadavg go to BENCH_DETAIL.json (`isolate_query.py --slowest` reads it).
     detail = {
         **base,
-        "round": this_round,
-        "ab_adjudication": ab,
-        "reruns": reruns,
         "queries": timings,
         "rep_spread": spreads,
         "loadavg_per_query": load_per_query,
         "reps": reps,
     }
-    # Two copies: the legacy mutable path (tools read "the latest sweep"
-    # here) and an IMMUTABLE per-round artifact — the driver's own sweep
-    # overwrites BENCH_DETAIL.json in the working tree, which made past
-    # rounds' full per-query maps recoverable only via git archaeology
-    # (VERDICT r11 #6). BENCH_DETAIL_r{N}.json is written once per round
-    # and never touched by later sweeps, so adjudication of round N's
-    # movers always has round N's full 163-query map on disk.
-    #
-    # WRITE-ONCE enforcement (round-14 advisor: a post-close sweep ran
-    # before the driver landed BENCH_r14.json, stamped itself round 14,
-    # and silently clobbered the closed round's adjudicated artifact):
-    # an existing per-round file is never overwritten unless the round's
-    # builder explicitly opts in with SPARK_GRAFT_DETAIL_OVERWRITE=1
-    # (the documented round-close path — e.g. replacing a pre-round
-    # baseline sweep with the round's final tree). The mutable
-    # BENCH_DETAIL.json always records the latest sweep either way.
-    round_path = os.path.join(here, f"BENCH_DETAIL_r{this_round:02d}.json")
-    paths = [detail_path]
-    if (
-        not os.path.exists(round_path)
-        or os.environ.get("SPARK_GRAFT_DETAIL_OVERWRITE") == "1"
-    ):
-        paths.append(round_path)
-    for path in paths:
-        try:
-            with open(path, "w") as fh:
-                json.dump(detail, fh, indent=1)
-        except OSError:
-            pass  # diagnosis file is best-effort; the stdout line is the artifact
-    # Pack to a fixpoint: adding `packed_out` names shrinks the query budget,
-    # which can push more prior-line heads out of the subset. The set grows
-    # monotonically and is bounded by the prior line's ~47 names, so this
-    # converges in 2-3 iterations; the cap keeps the worst case line-safe.
-    doc = _pack_stdout_queries(timings, base)
-    for _ in range(6):
-        packed_out = sorted(
-            n for n in prior_stdout if n in timings and n not in doc["queries"]
-        )
-        if not packed_out or (
-            base.get("packed_out") == packed_out[:12]
-            and base.get("packed_out_n") == len(packed_out)
-        ):
-            break
-        base["packed_out"] = packed_out[:12]
-        base["packed_out_n"] = len(packed_out)
-        doc = _pack_stdout_queries(timings, base)
-    line = json.dumps(doc)
+    here = os.path.dirname(os.path.abspath(__file__))
+    try:
+        with open(os.path.join(here, "BENCH_DETAIL.json"), "w") as fh:
+            json.dump(detail, fh, indent=1)
+    except OSError:
+        pass  # diagnosis file is best-effort; the stdout line is the artifact
+    line = json.dumps(_pack_stdout_queries(timings, base))
     # Hard gate: an oversized line is a FAILED bench run locally, never a
     # silently-decapitated driver artifact.
     assert len(line) <= STDOUT_LINE_BUDGET, (

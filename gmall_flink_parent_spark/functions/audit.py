@@ -33,7 +33,7 @@ from gmall_flink_parent_spark.functions.spans import (
     WINNOW_NEAR_DUP_ORACLE,
     winnow_near_dup,
 )
-from gmall_flink_parent_spark.plans.registry import register, scoped_persist
+from gmall_flink_parent_spark.registry import register, scoped_persist
 from gmall_flink_parent_spark.sources.tables import load_table
 
 
@@ -139,7 +139,7 @@ DEDUP_AUDIT_ORACLE = _audit_oracle()
 @register(
     "dedup_method_audit",
     oracle=DEDUP_AUDIT_ORACLE,
-    tags=("dedup", "audit", "report"),
+    tags=("dedup", "audit", "report", "unbenched"),
     past_window=True,
 )
 def dedup_method_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -262,7 +262,7 @@ FROM cc c JOIN margins m USING (doc_id)
 @register(
     "cluster_keep_best_quality",
     oracle=_best_quality_oracle(),
-    tags=("dedup", "quality", "iterative"),
+    tags=("dedup", "quality", "iterative", "unbenched"),
     past_window=True,
 )
 def cluster_keep_best_quality(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gmall_flink_parent_spark.plans.registry import register
+from gmall_flink_parent_spark.registry import register
 from gmall_flink_parent_spark.sources.tables import fan_out, load_table
 
 _BPE_MERGES = 64  # merge-table size for the registered head
@@ -159,7 +159,7 @@ def bpe_encode(docs: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
     )
 
 
-@register("doc_bpe_tokens", oracle=None, tags=("text", "tokenize", "bpe", "iterative"))
+@register("doc_bpe_tokens", oracle=None, tags=("text", "tokenize", "bpe", "iterative", "unbenched"))
 def doc_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real BPE piece counts per document — the tokenizer-exact budget
     signal behind ``doc_text_profile``'s regex piece heuristic.

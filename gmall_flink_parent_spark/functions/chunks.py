@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gmall_flink_parent_spark.plans.registry import register
+from gmall_flink_parent_spark.registry import register
 from gmall_flink_parent_spark.sources.tables import fan_out, load_table
 
 CHUNK_TOKENS = 32  # window width C
@@ -140,7 +140,7 @@ HAVING COUNT(DISTINCT doc_id) >= 2
 @register(
     "chunk_dup_overlap",
     oracle=CHUNK_DUP_ORACLE,
-    tags=("text", "chunk", "dedup"),
+    tags=("text", "chunk", "dedup", "unbenched"),
     past_window=True,
 )
 def chunk_dup_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:

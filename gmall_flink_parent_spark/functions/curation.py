@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gmall_flink_parent_spark.functions.stopwords import _STOP_SQL, STOPWORDS
-from gmall_flink_parent_spark.plans.registry import register, scoped_persist
+from gmall_flink_parent_spark.registry import register, scoped_persist
 from gmall_flink_parent_spark.sources.tables import fan_out, load_table
 
 # ------------------------------------------------------------ repetition
@@ -329,7 +329,7 @@ def doc_length_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("doc_length_quantiles_approx", oracle=None, tags=("text", "stats", "approx"))
+@register("doc_length_quantiles_approx", oracle=None, tags=("text", "stats", "approx", "unbenched"))
 def doc_length_quantiles_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 100 TB form of ``doc_length_quantiles``: ``approx_percentile``
     (Greenwald–Khanna sketch, rel. error ≤ 1/accuracy) in the same
@@ -830,7 +830,7 @@ def unigram_logprob_frame(tf: DataFrame) -> DataFrame:
 @register(
     "doc_unigram_logprob",
     oracle=UNIGRAM_ORACLE,
-    tags=("text", "quality", "lm"),
+    tags=("text", "quality", "lm", "unbenched"),
     past_window=True,
 )
 def doc_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -900,7 +900,7 @@ FROM scored GROUP BY doc_id
     # rows-only); its deviation vs doc_unigram_logprob stays bounded in
     # tests
     oracle=TOPV_LOGPROB_ORACLE,
-    tags=("text", "quality", "lm", "approx"),
+    tags=("text", "quality", "lm", "approx", "unbenched"),
     past_window=True,
 )
 def doc_unigram_logprob_topv(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -999,7 +999,7 @@ GROUP BY dtf.doc_id
 @register(
     "doc_bigram_logprob",
     oracle=BIGRAM_ORACLE,
-    tags=("text", "quality", "lm"),
+    tags=("text", "quality", "lm", "unbenched"),
     past_window=True,
 )
 def doc_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1290,7 +1290,7 @@ GROUP BY s.doc_id
 @register(
     "doc_boilerplate_fraction",
     oracle=BOILERPLATE_ORACLE,
-    tags=("text", "quality", "dedup"),
+    tags=("text", "quality", "dedup", "unbenched"),
     past_window=True,
 )
 def doc_boilerplate_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1408,7 +1408,7 @@ FROM verdict
     oracle=CURATION_FUNNEL_ORACLE.format(
         filter_oracle=FILTER_PIPELINE_ORACLE.format(stop=_STOP_SQL)
     ),
-    tags=("text", "quality", "stats", "pipeline"),
+    tags=("text", "quality", "stats", "pipeline", "unbenched"),
     past_window=True,
 )
 def curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:

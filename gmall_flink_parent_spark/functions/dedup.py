@@ -33,7 +33,7 @@ from gmall_flink_parent_spark.functions.simhash import (
     _TOK32_DUCK,
     token_hashes_col,
 )
-from gmall_flink_parent_spark.plans.registry import register, scoped_persist
+from gmall_flink_parent_spark.registry import register, scoped_persist
 from gmall_flink_parent_spark.sources.tables import fan_out, load_table
 
 NUM_HASHES = 16
@@ -230,7 +230,7 @@ SELECT 'ngram3' AS tier, * FROM ({NGRAM_JACCARD_ORACLE})
 @register(
     "dedup_jaccard_tiers",
     oracle=JACCARD_TIERS_ORACLE,
-    tags=("dedup", "ngram"),
+    tags=("dedup", "ngram", "unbenched"),
     past_window=True,
 )
 def dedup_jaccard_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -699,7 +699,7 @@ def _band_pairs(
 @register(
     "dedup_cluster_keep",
     oracle=_cluster_keep_oracle(),
-    tags=("dedup", "iterative"),
+    tags=("dedup", "iterative", "unbenched"),
     past_window=True,
 )
 def dedup_cluster_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -767,7 +767,7 @@ FROM (
 @register(
     "leakage_safe_split",
     oracle=_leakage_split_oracle(),
-    tags=("text", "sampling", "dedup", "iterative"),
+    tags=("text", "sampling", "dedup", "iterative", "unbenched"),
     past_window=True,
 )
 def leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1388,7 +1388,7 @@ def jaccard_prefix_join_frame(docs: DataFrame, tau: float) -> DataFrame:
 @register(
     "jaccard_prefix_join",
     oracle=PREFIX_JOIN_ORACLE,
-    tags=("dedup", "similarity-join"),
+    tags=("dedup", "similarity-join", "unbenched"),
     # promoted into the driver window in the round-10 rotation (cheap at
     # the driver's sf0.01; the 153 s output-bound cost is sf0.1-only)
 )
@@ -1426,7 +1426,7 @@ WHERE jaccard >= {STRICT_PREFIX_TAU}
 @register(
     "jaccard_prefix_join_strict",
     oracle=STRICT_PREFIX_ORACLE,
-    tags=("dedup", "similarity-join"),
+    tags=("dedup", "similarity-join", "unbenched"),
     past_window=True,
 )
 def jaccard_prefix_join_strict(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1549,7 +1549,7 @@ def containment_prefix_join_frame(docs: DataFrame, t: float) -> DataFrame:
 @register(
     "containment_prefix_join",
     oracle=CONTAINMENT_JOIN_ORACLE,
-    tags=("dedup", "similarity-join", "containment"),
+    tags=("dedup", "similarity-join", "containment", "unbenched"),
 )
 def containment_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The t=0.9 registered head of ``containment_prefix_join_frame``.
@@ -1587,7 +1587,7 @@ GROUP BY 1, 2
 @register(
     "minhash_estimator_calibration",
     oracle=_calibration_oracle(),
-    tags=("dedup", "minhash", "calibration", "validation"),
+    tags=("dedup", "minhash", "calibration", "validation", "unbenched"),
 )
 def minhash_estimator_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Joint (estimated, exact) Jaccard distribution over the MinHash

@@ -30,7 +30,7 @@ from gmall_flink_parent_spark.functions.curation import (
     corpus_filter_pipeline,
 )
 from gmall_flink_parent_spark.functions.stopwords import _STOP_SQL
-from gmall_flink_parent_spark.plans.registry import (
+from gmall_flink_parent_spark.registry import (
     register,
     release_caches,
     retain_latest,
@@ -459,7 +459,7 @@ FROM mix
     oracle=TRAINING_MIXTURE_ORACLE.format(
         filter_oracle=FILTER_PIPELINE_ORACLE.format(stop=_STOP_SQL)
     ),
-    tags=("text", "mixing", "pipeline"),
+    tags=("text", "mixing", "pipeline", "unbenched"),
     past_window=True,
 )
 def training_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -645,7 +645,7 @@ FROM sm
 @register(
     "mixture_budget_weights",
     oracle=MIX_BUDGET_ORACLE,
-    tags=("text", "mixing", "planning"),
+    tags=("text", "mixing", "planning", "unbenched"),
     past_window=True,
 )
 def mixture_budget_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -846,7 +846,7 @@ GROUP BY m.source, a.n_docs_available
 @register(
     "mixture_composition",
     oracle=MIX_COMPOSITION_ORACLE,
-    tags=("text", "mixing", "stats"),
+    tags=("text", "mixing", "stats", "unbenched"),
     past_window=True,
 )
 def mixture_composition(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -913,7 +913,7 @@ FROM mix
 @register(
     "sql_mixture_surface",
     oracle=SQL_MIXTURE_ORACLE,
-    tags=("sql", "mixing"),
+    tags=("sql", "mixing", "unbenched"),
     past_window=True,
 )
 def sql_mixture_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1210,7 +1210,7 @@ FROM per JOIN tot USING (phase)
 @register(
     "curriculum_token_budget",
     oracle=TOKEN_BUDGET_ORACLE,
-    tags=("text", "mixing", "curriculum", "report"),
+    tags=("text", "mixing", "curriculum", "report", "unbenched"),
     past_window=True,
 )
 def curriculum_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1320,7 +1320,7 @@ FROM mix
 @register(
     "quality_annealed_mixture",
     oracle=_qa_oracle(),
-    tags=("text", "mixing", "curriculum", "quality"),
+    tags=("text", "mixing", "curriculum", "quality", "unbenched"),
     past_window=True,
 )
 def quality_annealed_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:

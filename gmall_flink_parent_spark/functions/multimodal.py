@@ -62,7 +62,7 @@ from typing import Iterator
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gmall_flink_parent_spark.plans.registry import register, scoped_persist
+from gmall_flink_parent_spark.registry import register, scoped_persist
 from gmall_flink_parent_spark.sources.tables import fan_out, load_table
 
 # Synthesized-payload geometry (fixed so headers are constant literals).
@@ -566,7 +566,7 @@ FROM p
 @register(
     "multimodal_meta_features",
     oracle=MULTIMODAL_META_FEATURES_ORACLE,
-    tags=("multimodal",),
+    tags=("multimodal", "unbenched"),
 )
 def multimodal_meta_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Typed metadata (JVM-side) + real decode features (Arrow
@@ -787,7 +787,7 @@ FROM f
 """
 
 
-@register("multimodal_frame_sample", oracle=FRAME_SAMPLE_ORACLE, tags=("multimodal",))
+@register("multimodal_frame_sample", oracle=FRAME_SAMPLE_ORACLE, tags=("multimodal", "unbenched"))
 def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frame sampling + thumbnail resize over binary payloads, all four
     mimes: BMP/PNG frames are scanlines cut from the decoded pixel

@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gmall_flink_parent_spark.plans.registry import register
+from gmall_flink_parent_spark.registry import register
 from gmall_flink_parent_spark.sources.tables import fan_out, load_table
 
 # --------------------------------------------------------------- thresholds
@@ -421,7 +421,7 @@ GROUP BY source, threshold
 @register(
     "quality_threshold_sweep",
     oracle=SWEEP_ORACLE,
-    tags=("text", "quality", "classifier", "report"),
+    tags=("text", "quality", "classifier", "report", "unbenched"),
     past_window=True,
 )
 def quality_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:

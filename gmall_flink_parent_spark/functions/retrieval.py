@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gmall_flink_parent_spark.functions.chunks import _CHUNK_CTE, chunk_windows_frame
-from gmall_flink_parent_spark.plans.registry import register, scoped_persist
+from gmall_flink_parent_spark.registry import register, scoped_persist
 from gmall_flink_parent_spark.sources.tables import fan_out, load_table
 
 # The fixed demo query; any term set works — scoring cost is O(|terms|)
@@ -387,7 +387,7 @@ FROM g CROSS JOIN n
 @register(
     "term_postings_stats",
     oracle=POSTINGS_ORACLE,
-    tags=("text", "chunk", "retrieval"),
+    tags=("text", "chunk", "retrieval", "unbenched"),
     past_window=True,
 )
 def term_postings_stats(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -41,7 +41,7 @@ from gmall_flink_parent_spark.functions.mixture import (
     _mid_pid,
     _range_sorted_positions,
 )
-from gmall_flink_parent_spark.plans.registry import register, scoped_persist
+from gmall_flink_parent_spark.registry import register, scoped_persist
 from gmall_flink_parent_spark.sources.tables import fan_out, load_table
 
 _DSIR_BUCKETS = 1024  # feature-hash space (the paper uses 10k; shape is equal)
@@ -229,7 +229,7 @@ LIMIT {_DSIR_K}
 @register(
     "dsir_gumbel_resample",
     oracle=GUMBEL_ORACLE,
-    tags=("text", "selection", "dsir"),
+    tags=("text", "selection", "dsir", "unbenched"),
     past_window=True,
 )
 def dsir_gumbel_resample(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -26,7 +26,7 @@ from typing import Iterator
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from gmall_flink_parent_spark.plans.registry import register, scoped_persist
+from gmall_flink_parent_spark.registry import register, scoped_persist
 from gmall_flink_parent_spark.sources.tables import fan_out, load_table
 
 DIM = 64
@@ -570,7 +570,7 @@ def _assign_cells(emb: DataFrame, cents: DataFrame) -> DataFrame:
     )
 
 
-@register("ivf_kmeans_assign", oracle=None, tags=("similarity", "iterative"))
+@register("ivf_kmeans_assign", oracle=None, tags=("similarity", "iterative", "unbenched"))
 def ivf_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lloyd k-means (k=10, 3 fixed iterations) building IVF cells from
     raw embeddings — the iterative-algorithm capability (rows-only
@@ -988,7 +988,7 @@ GROUP BY vec_id
     # (same construction as dedup_cluster_keep's) — formerly rows-only;
     # transitivity/keeper invariants stay pinned in tests/test_operators.py
     oracle=EMBED_KEEP_ORACLE,
-    tags=("dedup", "similarity", "iterative"),
+    tags=("dedup", "similarity", "iterative", "unbenched"),
     past_window=True,
 )
 def embedding_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from gmall_flink_parent_spark.functions.curation import _CONTAM_N, contamination_shingles
 from gmall_flink_parent_spark.functions.selection import _H32_DUCK, _h32
-from gmall_flink_parent_spark.plans.registry import register, scoped_persist
+from gmall_flink_parent_spark.registry import register, scoped_persist
 from gmall_flink_parent_spark.sources.tables import fan_out, load_table
 
 _CMS_D = 4  # hash rows

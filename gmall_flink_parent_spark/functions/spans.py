@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gmall_flink_parent_spark.plans.registry import register, scoped_persist
+from gmall_flink_parent_spark.registry import register, scoped_persist
 from gmall_flink_parent_spark.sources.tables import fan_out, load_table
 
 _WIN_K = 5  # winnowing k-gram width (tokens)
@@ -160,7 +160,7 @@ FROM w
 @register(
     "winnow_fingerprints",
     oracle=WINNOW_FPS_ORACLE,
-    tags=("text", "dedup", "fingerprint"),
+    tags=("text", "dedup", "fingerprint", "unbenched"),
     past_window=True,
 )
 def winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from gmall_flink_parent_spark.functions.stopwords import _STOP_SQL, STOPWORDS
-from gmall_flink_parent_spark.plans.registry import register
+from gmall_flink_parent_spark.registry import register
 from gmall_flink_parent_spark.sources.tables import load_table
 
 _STOP_ARRAY_SQL = "array(" + ", ".join(f"'{s}'" for s in STOPWORDS) + ")"

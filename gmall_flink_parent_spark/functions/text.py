@@ -26,7 +26,7 @@ from gmall_flink_parent_spark.functions.simhash import (
     _TOK32_DUCK,
     token_hashes_col,
 )
-from gmall_flink_parent_spark.plans.registry import register
+from gmall_flink_parent_spark.registry import register
 from gmall_flink_parent_spark.sources.tables import fan_out, load_table
 
 # Stopword list for quality / language heuristics (tiny, broadcast as a
@@ -317,7 +317,7 @@ FROM xy GROUP BY source
 @register(
     "source_zipf_slope",
     oracle=ZIPF_ORACLE,
-    tags=("text", "stats", "quality"),
+    tags=("text", "stats", "quality", "unbenched"),
     past_window=True,
 )
 def source_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -429,7 +429,7 @@ def collocation_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     summing the count table, never re-scanning the corpus), the
     unigram broadcasts, the final ratio — is vocab-sized.
     """
-    from gmall_flink_parent_spark.plans.registry import scoped_persist
+    from gmall_flink_parent_spark.registry import scoped_persist
 
     docs = fan_out(spark, load_table(spark, sf_dir, "documents"))
     counts = scoped_persist(gram_count_frame(docs))
@@ -663,7 +663,7 @@ def source_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     totals broadcast.
     """
     docs = fan_out(spark, load_table(spark, sf_dir, "documents"))
-    from gmall_flink_parent_spark.plans.registry import scoped_persist
+    from gmall_flink_parent_spark.registry import scoped_persist
 
     cnt = scoped_persist(
         docs.select("source", F.explode(F.split("text", " ")).alias("tok"))

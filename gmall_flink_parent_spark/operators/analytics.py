@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from gmall_flink_parent_spark.plans.registry import register, scoped_persist
+from gmall_flink_parent_spark.registry import register, scoped_persist
 from gmall_flink_parent_spark.sources.tables import fan_out, gated_broadcast, load_table
 
 VALUE_DIST_ORACLE = """
@@ -139,7 +139,7 @@ FROM customer c
 @register(
     "customer_order_status",
     oracle=SEMI_ANTI_ORACLE,
-    tags=("join", "semi-anti"),
+    tags=("join", "semi-anti", "unbenched"),
     past_window=True,
 )
 def customer_order_status(spark: SparkSession, sf_dir: str) -> DataFrame:

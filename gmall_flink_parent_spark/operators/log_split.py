@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gmall_flink_parent_spark.plans.registry import register
+from gmall_flink_parent_spark.registry import register
 from gmall_flink_parent_spark.sources.tables import load_table
 
 LOG_SPLIT_START_ORACLE = """
@@ -37,7 +37,7 @@ WHERE event_type = 'signup'
 """
 
 
-@register("log_split_start", oracle=LOG_SPLIT_START_ORACLE, tags=("X1", "P1", "P8"), past_window=True)
+@register("log_split_start", oracle=LOG_SPLIT_START_ORACLE, tags=("X1", "P1", "P8", "unbenched"), past_window=True)
 def log_split_start(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Start-log branch of the 3-way split (BaseLogTask.java:117-121).
 
@@ -73,7 +73,7 @@ WHERE event_type IN ('view', 'click')
 @register(
     "log_split_page",
     oracle=LOG_SPLIT_PAGE_ORACLE,
-    tags=("X1", "P1", "P8"),
+    tags=("X1", "P1", "P8", "unbenched"),
     past_window=True,
 )
 def log_split_page(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -115,7 +115,7 @@ WHERE CAST(json_extract(props, '$.k') AS BIGINT) IS NOT NULL
 """
 
 
-@register("props_json_extract", oracle=PROPS_EXTRACT_ORACLE, tags=("P1", "json"), past_window=True)
+@register("props_json_extract", oracle=PROPS_EXTRACT_ORACLE, tags=("P1", "json", "unbenched"), past_window=True)
 def props_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Schema-on-read JSON field extraction (P1) + derived bucket (P6).
 
@@ -143,7 +143,7 @@ def props_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "display_explode",
     oracle=TOKEN_EXPLODE_ORACLE,
-    tags=("X2",),
+    tags=("X2", "unbenched"),
     # rotated out of the driver window in round 11 (log_split_start +
     # props_json_extract keep the X-family in-window)
     past_window=True,

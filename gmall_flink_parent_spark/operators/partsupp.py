@@ -38,7 +38,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from gmall_flink_parent_spark.plans.registry import register, scoped_persist
+from gmall_flink_parent_spark.registry import register, scoped_persist
 from gmall_flink_parent_spark.sources.tables import gated_broadcast, load_table
 
 # DuckDB-side construction — prefixed to every oracle in this module.

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gmall_flink_parent_spark.plans.registry import register
+from gmall_flink_parent_spark.registry import register
 from gmall_flink_parent_spark.sources.tables import fan_out, load_table
 
 # Models the MySQL table_process rows (bean/TableProcess.java:17-31):
@@ -164,7 +164,7 @@ def routing_facts(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "routing_dims",
     oracle=_ROUTING_ORACLE_TEMPLATE.format(sink_type="hbase"),
-    tags=("X3", "J4", "P5", "K3"),
+    tags=("X3", "J4", "P5", "K3", "unbenched"),
     past_window=True,
 )
 def routing_dims(spark: SparkSession, sf_dir: str) -> DataFrame:

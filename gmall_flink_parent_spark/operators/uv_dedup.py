@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from gmall_flink_parent_spark.plans.registry import register
+from gmall_flink_parent_spark.registry import register
 from gmall_flink_parent_spark.sources.tables import load_table
 
 UV_DEDUP_ORACLE = """
@@ -75,7 +75,7 @@ GROUP BY strftime(ts, '%Y%m%d')
 
 # rotated out of the driver window (round 10): long-green since round 1,
 # shape priced by uv_dedup; hash parity still enforced by the local sweep
-@register("dau_by_day", oracle=DAU_ORACLE, tags=("W2", "dws"), past_window=True)
+@register("dau_by_day", oracle=DAU_ORACLE, tags=("W2", "dws", "unbenched"), past_window=True)
 def dau_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily active users — the DWS consumer of the UV stream.
 

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from gmall_flink_parent_spark.plans.registry import register
+from gmall_flink_parent_spark.registry import register
 from gmall_flink_parent_spark.sources.tables import load_table
 
 VISITOR_REPAIR_ORACLE = """

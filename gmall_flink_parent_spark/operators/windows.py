@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from gmall_flink_parent_spark.plans.registry import register, scoped_persist
+from gmall_flink_parent_spark.registry import register, scoped_persist
 from gmall_flink_parent_spark.sources.tables import gated_broadcast, load_table
 
 HOURLY_STATS_ORACLE = """
@@ -361,7 +361,7 @@ def sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 APPROX_DAU_ORACLE = None  # approximate by design — rows-only check
 
 
-@register("approx_dau_by_day", oracle=APPROX_DAU_ORACLE, tags=("dws", "approx"))
+@register("approx_dau_by_day", oracle=APPROX_DAU_ORACLE, tags=("dws", "approx", "unbenched"))
 def approx_dau_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HLL-based DAU — the 100 TB scale path for distinct counts.
 
@@ -766,7 +766,7 @@ GROUP BY relation
 @register(
     "session_allen_relations",
     oracle=ALLEN_RELATIONS_ORACLE.replace("{SESSION_BOUNDS_SQL}", SESSION_BOUNDS_SQL),
-    tags=("dws", "session", "interval", "allen"),
+    tags=("dws", "session", "interval", "allen", "unbenched"),
     past_window=True,
 )
 def session_allen_relations(spark: SparkSession, sf_dir: str) -> DataFrame:

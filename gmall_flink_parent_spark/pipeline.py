@@ -26,13 +26,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# Populate the registry FIRST: the operator modules below are wired for
-# the plans-package import order (mixture reads curation's oracle SQL at
-# import time), so entering through a function module directly would hit
-# the partially-initialized-module cycle. Importing ``plans`` makes this
-# module a safe standalone entry point.
-from gmall_flink_parent_spark import plans as _plans  # noqa: F401
-
 from gmall_flink_parent_spark.functions.curation import (
     _BENCH_MOD,
     contamination_counts,
@@ -49,7 +42,7 @@ from gmall_flink_parent_spark.functions.mixture import (
     training_order,
     write_training_shards,
 )
-from gmall_flink_parent_spark.plans.registry import release_caches, scoped_persist
+from gmall_flink_parent_spark.registry import release_caches, scoped_persist
 from gmall_flink_parent_spark.sources.tables import fan_out, load_table
 
 

@@ -1,10 +1,13 @@
 """Query registry — the engine's declared surface.
 
-Importing this package populates the registry from every operator module;
-``__spark_entry__`` and the test harness both read from it.
+Importing this package populates the registry
+(``gmall_flink_parent_spark.registry``) from every operator module;
+``__spark_entry__`` and the test harness both read from it. Operator
+modules import the registry module itself, never this package, so any of
+them can be the first import of a process.
 """
 
-from gmall_flink_parent_spark.plans.registry import QuerySpec, all_queries, oracle_map, query_map, register
+from gmall_flink_parent_spark.registry import QuerySpec, all_queries, oracle_map, query_map, register
 
 # Operator modules register their queries at import time.
 from gmall_flink_parent_spark.operators import (  # noqa: F401  (import for side effects)

@@ -573,7 +573,7 @@ def user_value_distribution_from_store(spark: SparkSession, store_path: str) -> 
     cadence: a long-lived refresh loop holds at most ONE live cache
     instead of accumulating one per call."""
     from gmall_flink_parent_spark.operators.analytics import value_distribution_frame
-    from gmall_flink_parent_spark.plans.registry import release_caches
+    from gmall_flink_parent_spark.registry import release_caches
 
     release_caches()
     return value_distribution_frame(spark, merged_spend_from_store(spark, store_path))
@@ -1810,7 +1810,7 @@ def boilerplate_fraction_from_store(
     from gmall_flink_parent_spark.functions.curation import (
         boilerplate_fraction_frame,
     )
-    from gmall_flink_parent_spark.plans.registry import (
+    from gmall_flink_parent_spark.registry import (
         release_caches,
         scoped_persist,
     )
@@ -1865,7 +1865,7 @@ def doc_unigram_logprob_from_store(
     from gmall_flink_parent_spark.functions.curation import (
         unigram_logprob_frame,
     )
-    from gmall_flink_parent_spark.plans.registry import (
+    from gmall_flink_parent_spark.registry import (
         release_caches,
         scoped_persist,
     )
@@ -1946,7 +1946,7 @@ def dsir_weights_from_store(spark: SparkSession, store_path: str) -> DataFrame:
     sample) costs one pass over the bucket-grain store, never a corpus
     re-tokenize."""
     from gmall_flink_parent_spark.functions.selection import dsir_weight_frame
-    from gmall_flink_parent_spark.plans.registry import (
+    from gmall_flink_parent_spark.registry import (
         release_caches,
         scoped_persist,
     )
@@ -2012,7 +2012,7 @@ def ahash_near_dup_from_store(spark: SparkSession, store_path: str) -> DataFrame
         ahash_pairs_frame,
         conf_hot_threshold,
     )
-    from gmall_flink_parent_spark.plans.registry import (
+    from gmall_flink_parent_spark.registry import (
         release_caches,
         scoped_persist,
     )
@@ -2137,7 +2137,7 @@ def span_dedup_from_store(spark: SparkSession, store_path: str) -> DataFrame:
     (``store_row_count`` — driver-side metadata, no count() job), so
     constructing this head launches no Spark action."""
     from gmall_flink_parent_spark.functions.spans import span_dedup_frame
-    from gmall_flink_parent_spark.plans.registry import (
+    from gmall_flink_parent_spark.registry import (
         release_caches,
         scoped_persist,
     )
@@ -2159,7 +2159,7 @@ def winnow_near_dup_from_store(spark: SparkSession, store_path: str) -> DataFram
     one-shot ``winnow_near_dup`` over the same corpus, with zero text
     re-scans (documents were fingerprinted once, at ingest)."""
     from gmall_flink_parent_spark.functions.spans import winnow_pairs_frame
-    from gmall_flink_parent_spark.plans.registry import (
+    from gmall_flink_parent_spark.registry import (
         release_caches,
         scoped_persist,
     )
@@ -2332,7 +2332,7 @@ def term_postings_from_store(spark: SparkSession, store_path: str) -> DataFrame:
     re-scanning document text. Same ``postings_stats_frame`` core as
     the batch ``term_postings_stats``, so the two cannot drift."""
     from gmall_flink_parent_spark.functions.retrieval import postings_stats_frame
-    from gmall_flink_parent_spark.plans.registry import release_caches
+    from gmall_flink_parent_spark.registry import release_caches
 
     release_caches()
     return postings_stats_frame(
@@ -2353,7 +2353,7 @@ def phrase_search_from_store(spark: SparkSession, store_path: str) -> DataFrame:
     exactly the batch_id partition landing — no merge pass exists to
     drift."""
     from gmall_flink_parent_spark.functions.retrieval import phrase_match_frame
-    from gmall_flink_parent_spark.plans.registry import release_caches
+    from gmall_flink_parent_spark.registry import release_caches
 
     release_caches()
     return phrase_match_frame(
@@ -2368,7 +2368,7 @@ def term_proximity_from_store(spark: SparkSession, store_path: str) -> DataFrame
     ``proximity_match_frame`` core, so store and batch results are
     hash-identical over the same corpus."""
     from gmall_flink_parent_spark.functions.retrieval import proximity_match_frame
-    from gmall_flink_parent_spark.plans.registry import release_caches
+    from gmall_flink_parent_spark.registry import release_caches
 
     release_caches()
     return proximity_match_frame(
@@ -2394,7 +2394,7 @@ def collocation_pmi_from_store(spark: SparkSession, gram_path: str) -> DataFrame
     append-only by doc — same contract as the postings store). Store
     and batch scores are hash-identical over the same corpus."""
     from gmall_flink_parent_spark.functions.text import pmi_from_counts
-    from gmall_flink_parent_spark.plans.registry import release_caches, scoped_persist
+    from gmall_flink_parent_spark.registry import release_caches, scoped_persist
 
     release_caches()
     merged = scoped_persist(
@@ -2420,7 +2420,7 @@ def chunk_bm25_from_store(spark: SparkSession, store_path: str) -> DataFrame:
     ``bm25_topk_frame`` core, so store and batch rankings are
     hash-identical over the same corpus."""
     from gmall_flink_parent_spark.functions.retrieval import bm25_topk_frame
-    from gmall_flink_parent_spark.plans.registry import release_caches
+    from gmall_flink_parent_spark.registry import release_caches
 
     release_caches()
     return bm25_topk_frame(
@@ -2681,7 +2681,7 @@ def stickiness_hll_from_store(spark: SparkSession, store_path: str) -> DataFrame
         .agg(F.hll_union_agg("users_sketch").alias("users_sketch"))
         .select(F.to_date("ymd", "yyyyMMdd").alias("day"), "users_sketch")
     )
-    from gmall_flink_parent_spark.plans.registry import release_caches, scoped_persist
+    from gmall_flink_parent_spark.registry import release_caches, scoped_persist
 
     release_caches()
     sk = scoped_persist(sk)  # feeds both the DAU projection and the window

@@ -52,7 +52,7 @@ from gmall_flink_parent_spark.functions.multimodal import (
     N_AHASH_SALT,
     ahash_pairs_frame,
 )
-from gmall_flink_parent_spark.plans.registry import release_caches, scoped_persist
+from gmall_flink_parent_spark.registry import release_caches, scoped_persist
 from gmall_flink_parent_spark.session import get_spark
 
 

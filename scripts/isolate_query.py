@@ -1,8 +1,8 @@
 """Isolated per-query measurement + plan capture for optimization work.
 
 Runs the named registered queries (or the N slowest from a bench detail
-map) one at a time in THIS process: min-of-REPS noop-sink timing with
-the exact bench methodology, and optionally writes
+map) one at a time in THIS process: min-of-REPS noop-sink timing through
+``bench.warm_up`` / ``bench.time_head``, and optionally writes
 ``<plandir>/<name>_<tag>.txt`` (default ``plans/r15``) with the
 ``.explain('formatted')`` output so plan claims are reviewable without
 Spark.
@@ -19,7 +19,6 @@ import io
 import json
 import os
 import sys
-import time
 from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -35,6 +34,7 @@ def main() -> int:
     ap.add_argument("--slowest", type=int, default=0)
     args = ap.parse_args()
 
+    from bench import time_head, warm_up
     from gmall_flink_parent_spark import plans
     from gmall_flink_parent_spark.session import get_spark
 
@@ -52,11 +52,7 @@ def main() -> int:
     spark = get_spark("isolate-query")
     spark.sparkContext.setLogLevel("ERROR")
     qmap = plans.query_map()
-
-    # warmup (same as bench.py)
-    qmap["pricing_summary"](spark, "/root/testdata/sf0.001").write.format(
-        "noop"
-    ).mode("overwrite").save()
+    warm_up(spark)
 
     out: dict[str, float] = {}
     for name in names:
@@ -71,14 +67,8 @@ def main() -> int:
         if args.reps == 0:
             print(f"plan-only  {name}", flush=True)
             continue
-        best = float("inf")
-        for _ in range(args.reps):
-            spark.sparkContext.setJobDescription(f"isolate:{name}")
-            t0 = time.perf_counter()
-            qmap[name](spark, args.sf).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            best = min(best, time.perf_counter() - t0)
+        spark.sparkContext.setJobDescription(f"isolate:{name}")
+        best, _ = time_head(spark, qmap[name], args.sf, args.reps)
         out[name] = round(best, 3)
         la = round(os.getloadavg()[0], 1)
         print(f"{out[name]:8.3f}  load={la:5.1f}  {name}", flush=True)

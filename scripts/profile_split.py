@@ -29,15 +29,14 @@ def main() -> int:
     ap.add_argument("--reps", type=int, default=3)
     args = ap.parse_args()
 
+    from bench import warm_up
     from gmall_flink_parent_spark import plans
     from gmall_flink_parent_spark.session import get_spark
 
     spark = get_spark("profile-split")
     spark.sparkContext.setLogLevel("ERROR")
     qmap = plans.query_map()
-    qmap["pricing_summary"](spark, "/root/testdata/sf0.001").write.format(
-        "noop"
-    ).mode("overwrite").save()
+    warm_up(spark)
 
     print(f"{'constr':>8} {'explain':>8} {'write':>8} {'total':>8}  name")
     for name in args.names:

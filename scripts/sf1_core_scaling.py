@@ -8,8 +8,9 @@ overhead. So the sf0.1 core-ratio block cannot distinguish a parallel
 head from a serial one. This harness measures the ratio where compute
 dominates: the slowest bench heads over the 10× sf1 shards
 (``sf1_scale_run.generate``), each head min-of-REPS in ONE session per
-core count (fresh subprocess, ``SPARK_GRAFT_CPUS`` honored by
-``get_spark`` exactly as the driver's bench runs do).
+core count (a fresh ``scripts/isolate_query.py`` subprocess,
+``SPARK_GRAFT_CPUS`` honored by ``get_spark`` exactly as the driver's
+bench runs do).
 
 Usage: python scripts/sf1_core_scaling.py [out.json]
 Results → SCALE.md "sf1 core scaling (round 15)".
@@ -28,7 +29,7 @@ sys.path.insert(0, HERE)
 
 from scripts.sf1_scale_run import SF1_DIR  # noqa: E402
 
-# the slowest r14 bench heads (BENCH_DETAIL_r14.json, 32-core sweep),
+# the slowest bench heads of the round-14 32-core sweep,
 # skipping sub-1.7 s heads — at sf1 these are the compute-bound tier
 HEADS = [
     "part_label_propagation",
@@ -52,52 +53,30 @@ REPS = int(os.environ.get("SF1_SCALING_REPS", "2"))
 if os.environ.get("SF1_SCALING_HEADS"):
     HEADS = os.environ["SF1_SCALING_HEADS"].split(",")
 
-_RUNNER = r"""
-import json, os, sys, time
-sys.path.insert(0, os.environ["SCALING_REPO"])
-heads = json.loads(os.environ["SCALING_HEADS"])
-sf_dir = os.environ["SCALING_SF_DIR"]
-reps = int(os.environ["SCALING_REPS"])
-from gmall_flink_parent_spark.session import get_spark
-from gmall_flink_parent_spark import plans
-spark = get_spark("sf1-core-scaling")
-spark.sparkContext.setLogLevel("ERROR")
-qmap = plans.query_map()
-# same warmup as bench.py
-qmap["pricing_summary"](spark, "/root/testdata/sf0.001").write.format(
-    "noop").mode("overwrite").save()
-out = {}
-for name in heads:
-    best = None
-    for _ in range(reps):
-        t0 = time.perf_counter()
-        qmap[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
-        best = dt if best is None else min(best, dt)
-    out[name] = round(best, 2)
-print("SCALING_JSON:" + json.dumps(out))
-"""
-
 
 def _run(cpus: int) -> dict[str, float]:
-    env = dict(
-        os.environ,
-        SPARK_GRAFT_CPUS=str(cpus),
-        SCALING_REPO=HERE,
-        SCALING_HEADS=json.dumps(HEADS),
-        SCALING_SF_DIR=SF1_DIR,
-        SCALING_REPS=str(REPS),
-    )
+    """One fresh ``scripts/isolate_query.py`` session at ``cpus`` cores."""
     proc = subprocess.run(
-        [sys.executable, "-c", _RUNNER], env=env, capture_output=True, text=True
+        [
+            sys.executable,
+            os.path.join(HERE, "scripts", "isolate_query.py"),
+            "--sf",
+            SF1_DIR,
+            "--reps",
+            str(REPS),
+            *HEADS,
+        ],
+        env=dict(os.environ, SPARK_GRAFT_CPUS=str(cpus)),
+        capture_output=True,
+        text=True,
     )
-    for line in proc.stdout.splitlines():
-        if line.startswith("SCALING_JSON:"):
-            return json.loads(line[len("SCALING_JSON:"):])
-    raise SystemExit(
-        f"cpus={cpus} runner produced no result line\n"
-        f"stdout tail: {proc.stdout[-2000:]}\nstderr tail: {proc.stderr[-2000:]}"
-    )
+    try:
+        return json.loads(proc.stdout.strip().splitlines()[-1])["queries"]
+    except (IndexError, ValueError, KeyError):
+        raise SystemExit(
+            f"cpus={cpus} isolate_query.py produced no result line\n"
+            f"stdout tail: {proc.stdout[-2000:]}\nstderr tail: {proc.stderr[-2000:]}"
+        ) from None
 
 
 def main() -> None:

@@ -57,11 +57,6 @@ def _state_peak(query) -> dict:
 
 
 def run(work: str | None = None) -> dict:
-    # plans first: fully initializes the registry so the curation import
-    # below doesn't re-enter a partially initialized module (curation →
-    # plans.registry → plans.__init__ → mixture → curation)
-    import gmall_flink_parent_spark.plans  # noqa: F401
-
     from gmall_flink_parent_spark.functions.curation import _MIX_HEAD_WEIGHTS
     from gmall_flink_parent_spark.session import get_spark
     from gmall_flink_parent_spark.streaming.jobs import (

@@ -11,7 +11,7 @@ scoped caches when the next query is constructed, and exposes
 from __future__ import annotations
 
 from gmall_flink_parent_spark import plans
-from gmall_flink_parent_spark.plans.registry import release_caches
+from gmall_flink_parent_spark.registry import release_caches
 
 # Every registered query that persists an intermediate frame, and the
 # number of scoped caches it is allowed to hold while live.

@@ -755,7 +755,7 @@ def test_ahash_pairs_salted_hot_bucket_invariant_and_bounded(spark):
         N_AHASH_SALT,
         ahash_pairs_frame,
     )
-    from gmall_flink_parent_spark.plans.registry import scoped_persist
+    from gmall_flink_parent_spark.registry import scoped_persist
 
     # Every hash shares low byte 0x07 → table-0 bucket (0, 7) holds ALL
     # rows (the hot bucket). High bytes: one distinct weight-2 byte per
@@ -1680,7 +1680,7 @@ def test_training_order_deterministic_contiguous_and_interleaved(spark, sf_dir):
         "pid" in line or "_groupingexpression" in line for line in hash_lines
     ), hash_lines
 
-    from gmall_flink_parent_spark.plans import registry
+    from gmall_flink_parent_spark import registry
 
     n_caches = len(registry._LIVE_CACHES)
     again = [
@@ -1982,7 +1982,7 @@ def test_boilerplate_size_gate_branches_are_value_identical(spark, duck, sf_dir)
         boilerplate_fraction_frame,
         contamination_shingles,
     )
-    from gmall_flink_parent_spark.plans.registry import (
+    from gmall_flink_parent_spark.registry import (
         release_caches,
         scoped_persist,
     )
@@ -2051,7 +2051,7 @@ def test_span_dedup_size_gate_branches_are_value_identical(spark, duck, sf_dir):
         span_dedup_frame,
         span_frame,
     )
-    from gmall_flink_parent_spark.plans.registry import (
+    from gmall_flink_parent_spark.registry import (
         release_caches,
         scoped_persist,
     )
@@ -2110,7 +2110,7 @@ def test_span_rewrite_token_counts_match_full_rewrite(spark, sf_dir):
         span_frame,
         span_rewrite_token_counts,
     )
-    from gmall_flink_parent_spark.plans.registry import (
+    from gmall_flink_parent_spark.registry import (
         release_caches,
         scoped_persist,
     )

@@ -257,7 +257,7 @@ def test_build_with_span_rewrite_stage(spark, sf_dir, tmp_path):
         span_dedup_frame,
         span_frame,
     )
-    from gmall_flink_parent_spark.plans.registry import scoped_persist
+    from gmall_flink_parent_spark.registry import scoped_persist
     from gmall_flink_parent_spark.sources.tables import load_table
 
     wts = {f"src{i}": (1.5, 0.7)[i % 2] for i in range(20)}

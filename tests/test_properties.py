@@ -1134,9 +1134,6 @@ spend_strategy = st.lists(
 
 
 def _gini_of(spark, cents_list):
-    from gmall_flink_parent_spark import plans  # noqa: F401  (import order:
-    # the registry package first, so operators.analytics is never the
-    # partially-initialized first import of the operator tree)
     from gmall_flink_parent_spark.operators.analytics import (
         spend_concentration_frame,
     )

@@ -940,7 +940,7 @@ def test_topk_spend_job_matches_batch(spark, sf_dir, tmp_path):
     # the head persists an intermediate; repeated refreshes (the
     # long-lived dashboard loop) must hold at most ONE live cache —
     # each construction releases the previous call's frame
-    from gmall_flink_parent_spark.plans import registry
+    from gmall_flink_parent_spark import registry
 
     for _ in range(3):
         user_value_distribution_from_store(spark, str(tmp_path / "store")).count()
