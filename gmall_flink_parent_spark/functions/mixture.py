@@ -30,6 +30,7 @@ from gmall_flink_parent_spark.functions.curation import (
     corpus_filter_pipeline,
 )
 from gmall_flink_parent_spark.functions.stopwords import _STOP_SQL
+from gmall_flink_parent_spark.positions import ordered_positions
 from gmall_flink_parent_spark.registry import (
     register,
     release_caches,
@@ -114,65 +115,6 @@ def corpus_mix_weighted(
     )
 
 
-def _mid_pid() -> Column:
-    """Partition id from the ``monotonically_increasing_id`` layout
-    (31-bit partition id << 33 | 33-bit record number)."""
-    return F.shiftright("__mid", 33)
-
-
-def _mid_local_offset() -> Column:
-    """Record offset within its partition, from the
-    ``monotonically_increasing_id`` layout (31-bit partition id << 33 |
-    33-bit record number)."""
-    return F.col("__mid").bitwiseAND(F.lit((1 << 33) - 1))
-
-
-def _range_sorted_positions(
-    df: DataFrame, sort_cols: list[str], eager: bool = False,
-    persist_input: bool = False,
-) -> DataFrame:
-    """The shared global-position core of ``training_order`` and
-    ``pack_sequences``: range-partition on the sort key (Spark samples
-    bounds; each partition sorts locally — never a single-reducer total
-    sort), then stamp ``__mid`` = ``monotonically_increasing_id`` over
-    the sorted partitions. Decode with ``_mid_pid`` /
-    ``_mid_local_offset``. The frame is PERSISTED (query-scoped)
-    because every caller reads it from two branches (a tiny per-pid
-    summary and the full output): without one materialization the
-    branches could re-execute the range exchange with different sampled
-    bounds and disagree on partition membership."""
-    n_parts = df.sparkSession.sparkContext.defaultParallelism
-    if persist_input:
-        # repartitionByRange runs a SEPARATE bounds-sampling job over the
-        # child plan before the exchange, so an expensive upstream (the
-        # text-filter pipeline) executes twice. Persisting the input lets
-        # the sampling pass fill the cache and the exchange read it: one
-        # upstream execution instead of two (guide §2.4/§5). Measured
-        # FLAT on packed_training_stream at sf0.1 (interleaved 2×2
-        # min-of-4: 3.18 s off vs 3.27 s on; repeat 3.15 vs 3.15) — the
-        # cache write costs what the second pass saves there — so no
-        # caller opts in today; the knob exists for upstreams whose
-        # recompute provably dominates a mixture-sized cache fill.
-        df = scoped_persist(df)
-    return scoped_persist(
-        df.repartitionByRange(n_parts, *sort_cols)
-        .sortWithinPartitions(*sort_cols)
-        .withColumn("__mid", F.monotonically_increasing_id()),
-        eager=eager,
-    )
-
-
-def _partition_offsets(part: DataFrame, value: Column, name: str) -> DataFrame:
-    """Cumulative per-partition offsets from a #partitions-row summary:
-    sum ``value`` per pid, then an exclusive running total in pid order.
-    The tiny-summary trick shared with ``user_value_distribution``."""
-    totals = part.groupBy(_mid_pid().alias("pid")).agg(F.sum(value).alias("v"))
-    w_off = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    return totals.select(
-        "pid", F.coalesce(F.sum("v").over(w_off), F.lit(0)).alias(name)
-    )
-
-
 def training_order(mix: DataFrame, seed: str = "order-v1") -> DataFrame:
     """Deterministic global shuffle of a (doc_id, source, epoch) mixture
     into training order — the step after ``corpus_mix_weighted``.
@@ -189,21 +131,10 @@ def training_order(mix: DataFrame, seed: str = "order-v1") -> DataFrame:
     so every fractionally-kept row sorts into the low end of the stream
     instead of interleaving.
 
-    Scale shape: ONE range-partitioned sort (Spark samples key bounds,
-    each partition sorts locally — no single-reducer total sort). Local
-    positions come from ``monotonically_increasing_id`` over the sorted
-    partitions — (partition << 33) | row-offset, read back with a shift
-    and mask — NOT from a ``row_number`` window, which would demand a
-    second full-data hash exchange on the partition id that the range
-    exchange already clustered. Global position = local offset + the
-    partition's cumulative count (the same tiny-summary offset trick as
-    ``user_value_distribution``'s rank). The sorted frame is persisted
-    (query-scoped) because BOTH the counts summary and the final select
-    read it: without one materialization the two branches could
-    re-execute the range exchange with different sampled bounds and
-    disagree on partition membership. ``sample_idx`` itself is
-    boundary-independent either way — it reproduces the total
-    (__k, doc_id, epoch) order wherever the range bounds fall.
+    Scale shape: ONE range-partitioned sort plus a #partitions-row
+    offset summary (``positions.ordered_positions``) — no single-reducer
+    total sort, no second full-data exchange. ``sample_idx`` reproduces
+    the total (__k, doc_id, epoch) order wherever the range bounds fall.
     """
     release_caches()  # one live full-data cache per call, like the
     # registered-query cadence — a loop re-deriving streams must not
@@ -216,20 +147,9 @@ def training_order(mix: DataFrame, seed: str = "order-v1") -> DataFrame:
             F.col("doc_id").cast("string"),
         )
     )
-    part = _range_sorted_positions(
+    return ordered_positions(
         mix.withColumn("__k", key), ["__k", "doc_id", "epoch"]
-    )
-    offsets = _partition_offsets(part, F.lit(1).cast("long"), "off")
-    return (
-        part.withColumn("pid", _mid_pid())
-        .join(F.broadcast(offsets), "pid")
-        .select(
-            (F.col("off") + _mid_local_offset()).alias("sample_idx"),
-            "doc_id",
-            "source",
-            "epoch",
-        )
-    )
+    ).select(F.col("pos").alias("sample_idx"), "doc_id", "source", "epoch")
 
 
 def assemble_training_mixture(
@@ -288,16 +208,9 @@ def pack_sequences(stream: DataFrame, cap: int = _PACK_CAP) -> DataFrame:
     packed sequences needs no join back); only ``seq_id``/``seq_offset``
     are added.
 
-    The global prefix sum never serializes: range-partition on
-    ``sample_idx`` (each partition holds a contiguous index range),
-    cumsum WITHIN each partition via an Arrow ``mapInPandas`` pass that
-    preserves partitioning and order (a window by partition id would
-    re-shuffle the full stream just to prove clustering Catalyst
-    already has), then add each partition's broadcast cumulative token
-    offset — a #partitions-row summary (``_partition_offsets``). One
-    range exchange moves the data; the persisted frame
-    (``_range_sorted_positions``) keeps the counts and output branches
-    on one materialization.
+    The global prefix sum never serializes: one range exchange on
+    ``sample_idx``, an Arrow in-partition cumsum and a #partitions-row
+    offset summary (``positions.ordered_positions``).
     """
     # Downstream-stage cadence: persist + EAGER-fill the range-sorted
     # frame while the upstream stage's cache (training_order's sorted
@@ -305,39 +218,21 @@ def pack_sequences(stream: DataFrame, cap: int = _PACK_CAP) -> DataFrame:
     # once — then drop everything but this frame (`retain_latest`):
     # same one-live-cache end state as training_order, without
     # recomputing the verdict/mix subtree during the fill.
-    part = _range_sorted_positions(stream, ["sample_idx"], eager=True)
+    ranked = ordered_positions(stream, ["sample_idx"], weight="n_tokens", eager=True)
     retain_latest()
+    return ranked.select(*stream.columns, *_seq_assignment(cap))
 
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in part.schema.fields
-    ) + ", cum_in_part long"
 
-    def cumsum(batches):
-        offset = 0
-        for pdf in batches:
-            # accumulate in int64: an int32 n_tokens column would wrap
-            # silently once a partition's running total passes 2^31
-            toks = pdf["n_tokens"].astype("int64")
-            pdf = pdf.assign(cum_in_part=offset + toks.cumsum() - toks)
-            offset += int(toks.sum())
-            yield pdf
-
-    cum = part.mapInPandas(cumsum, schema=schema)
-    offsets = _partition_offsets(part, F.col("n_tokens").cast("long"), "part_off")
-    return (
-        cum.withColumn("pid", _mid_pid())
-        .join(F.broadcast(offsets), "pid")
-        .withColumn("cum_before", F.col("part_off") + F.col("cum_in_part"))
-        .select(
-            *stream.columns,
-            # `div` = long integral division: float `/` loses exactness
-            # past ~2^52 cumulative tokens (quotient rounds up at block
-            # boundaries), while div matches the oracle's `//` at any
-            # scale; `%` on longs is already exact
-            F.expr(f"cum_before div {int(cap)}").cast("long").alias("seq_id"),
-            (F.col("cum_before") % cap).cast("long").alias("seq_offset"),
-        )
-    )
+def _seq_assignment(cap: int) -> list[Column]:
+    """(seq_id, seq_offset) of each sample from its ``cum_before``."""
+    return [
+        # `div` = long integral division: float `/` loses exactness
+        # past ~2^52 cumulative tokens (quotient rounds up at block
+        # boundaries), while div matches the oracle's `//` at any
+        # scale; `%` on longs is already exact
+        F.expr(f"cum_before div {int(cap)}").cast("long").alias("seq_id"),
+        (F.col("cum_before") % cap).cast("long").alias("seq_offset"),
+    ]
 
 
 # ------------------------------------- registered mixture-pipeline heads
@@ -573,47 +468,17 @@ def packed_training_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     mixt = mix.join(
         gated_broadcast(spark, sf_dir, "documents", toks), "doc_id"
     ).withColumn("__k", key)
-    part = _range_sorted_positions(mixt, ["__k", "doc_id", "epoch"], eager=True)
+    ranked = ordered_positions(
+        mixt, ["__k", "doc_id", "epoch"], weight="n_tokens", eager=True
+    )
     retain_latest()
-    totals = part.groupBy(_mid_pid().alias("pid")).agg(
-        F.count(F.lit(1)).cast("long").alias("cnt"),
-        F.sum(F.col("n_tokens").cast("long")).alias("tok"),
-    )
-    w_off = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.select(
-        "pid",
-        F.coalesce(F.sum("cnt").over(w_off), F.lit(0)).alias("off"),
-        F.coalesce(F.sum("tok").over(w_off), F.lit(0)).alias("part_off"),
-    )
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in part.schema.fields
-    ) + ", cum_in_part long"
-
-    def cumsum(batches):
-        offset = 0
-        for pdf in batches:
-            # int64 accumulation: an int32 n_tokens would wrap silently
-            # once a partition's running total passes 2^31
-            t = pdf["n_tokens"].astype("int64")
-            pdf = pdf.assign(cum_in_part=offset + t.cumsum() - t)
-            offset += int(t.sum())
-            yield pdf
-
-    cum = part.mapInPandas(cumsum, schema=schema)
-    return (
-        cum.withColumn("pid", _mid_pid())
-        .join(F.broadcast(offsets), "pid")
-        .withColumn("cum_before", F.col("part_off") + F.col("cum_in_part"))
-        .select(
-            (F.col("off") + _mid_local_offset()).alias("sample_idx"),
-            "doc_id",
-            "source",
-            "epoch",
-            "n_tokens",
-            # long integral division, same exactness note as pack_sequences
-            F.expr(f"cum_before div {int(_PACK_CAP)}").cast("long").alias("seq_id"),
-            (F.col("cum_before") % _PACK_CAP).cast("long").alias("seq_offset"),
-        )
+    return ranked.select(
+        F.col("pos").alias("sample_idx"),
+        "doc_id",
+        "source",
+        "epoch",
+        "n_tokens",
+        *_seq_assignment(_PACK_CAP),
     )
 
 
@@ -1078,20 +943,14 @@ def curriculum_order(mix: DataFrame, seed: str = "curr-order-v1") -> DataFrame:
             F.col("doc_id").cast("string"),
         )
     )
-    part = _range_sorted_positions(
+    return ordered_positions(
         mix.withColumn("__k", key), ["phase", "__k", "doc_id", "epoch"]
-    )
-    offsets = _partition_offsets(part, F.lit(1).cast("long"), "off")
-    return (
-        part.withColumn("pid", _mid_pid())
-        .join(F.broadcast(offsets), "pid")
-        .select(
-            (F.col("off") + _mid_local_offset()).alias("sample_idx"),
-            F.col("phase").cast("int").alias("phase"),
-            "doc_id",
-            "source",
-            "epoch",
-        )
+    ).select(
+        F.col("pos").alias("sample_idx"),
+        F.col("phase").cast("int").alias("phase"),
+        "doc_id",
+        "source",
+        "epoch",
     )
 
 

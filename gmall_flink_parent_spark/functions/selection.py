@@ -37,10 +37,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from gmall_flink_parent_spark.functions.mixture import (
-    _mid_pid,
-    _range_sorted_positions,
-)
+from gmall_flink_parent_spark.positions import ordered_positions
 from gmall_flink_parent_spark.registry import register, scoped_persist
 from gmall_flink_parent_spark.sources.tables import fan_out, load_table
 
@@ -418,61 +415,25 @@ def token_budget_select_frame(
     the running token total stays within ``floor(frac · total_tokens)``
     — strict semantics, the last doc that would overshoot is dropped.
 
-    The global running total is the ``pack_sequences`` machinery, not a
-    window: range-partition on the (negated) margin, Arrow in-partition
-    cumsum, broadcast per-partition offsets — one range exchange and a
-    #partitions-row summary, never a single-reducer ORDER BY over the
-    corpus. The budget scalar rides a 1-row broadcast.
+    The global running total is ``positions.ordered_positions``, not a
+    window: one range exchange on the (negated) margin, an Arrow
+    in-partition cumsum and a #partitions-row summary, never a
+    single-reducer ORDER BY over the corpus. The budget total rides that
+    same summary, not a separate full-frame aggregate (one job and one
+    broadcast fewer).
     """
     ranked = scored.select(
         "doc_id", "clf_margin", F.col("n_tokens").cast("long").alias("n_tokens")
     ).withColumn("_negm", -F.col("clf_margin"))
-    part = _range_sorted_positions(ranked, ["_negm", "doc_id"], eager=True)
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in part.schema.fields
-    ) + ", cum_in_part long"
-
-    def cumsum(batches):
-        offset = 0
-        for pdf in batches:
-            toks = pdf["n_tokens"].astype("int64")
-            pdf = pdf.assign(cum_in_part=offset + toks.cumsum() - toks)
-            offset += int(toks.sum())
-            yield pdf
-
-    cum = part.mapInPandas(cumsum, schema=schema)
-    # The budget total rides the SAME #partitions-row summary as the
-    # offsets (a window over all pids) — a separate full-frame aggregate
-    # + crossJoin broadcast paid one extra job + broadcast build for a
-    # scalar the summary already holds.
-    totals = part.groupBy(_mid_pid().alias("pid")).agg(
-        F.sum(F.col("n_tokens").cast("long")).alias("v")
-    )
-    w_off = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    w_all = Window.orderBy("pid").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    offsets = totals.select(
-        "pid",
-        F.coalesce(F.sum("v").over(w_off), F.lit(0)).alias("part_off"),
-        F.sum("v").over(w_all).alias("_total"),
-    )
-    return (
-        cum.withColumn("pid", _mid_pid())
-        .join(F.broadcast(offsets), "pid")
-        .withColumn(
-            "cum_before", (F.col("part_off") + F.col("cum_in_part")).cast("long")
-        )
-        .filter(
-            F.col("cum_before") + F.col("n_tokens")
-            <= F.floor(F.lit(frac) * F.col("_total")).cast("long")
-        )
-        .select(
-            "doc_id",
-            F.col("clf_margin").alias("quality_margin"),
-            "n_tokens",
-            "cum_before",
-        )
+    sel = ordered_positions(ranked, ["_negm", "doc_id"], weight="n_tokens", eager=True)
+    return sel.filter(
+        F.col("cum_before") + F.col("n_tokens")
+        <= F.floor(F.lit(frac) * F.col("total")).cast("long")
+    ).select(
+        "doc_id",
+        F.col("clf_margin").alias("quality_margin"),
+        "n_tokens",
+        "cum_before",
     )
 
 

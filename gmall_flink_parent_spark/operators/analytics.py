@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from gmall_flink_parent_spark.positions import ordered_positions
 from gmall_flink_parent_spark.registry import register, scoped_persist
 from gmall_flink_parent_spark.sources.tables import fan_out, gated_broadcast, load_table
 
@@ -31,7 +32,7 @@ WINDOW w AS (PARTITION BY event_type ORDER BY spend, user_id)
 """
 
 
-def value_distribution_frame(spark: SparkSession, spend: DataFrame) -> DataFrame:
+def value_distribution_frame(spend: DataFrame) -> DataFrame:
     """Per-type spend distribution over a (event_type, user_id, spend)
     frame: percent_rank, cume_dist, quartiles —
     computed as a two-pass range-partition rank, NOT a per-type window.
@@ -52,13 +53,10 @@ def value_distribution_frame(spark: SparkSession, spend: DataFrame) -> DataFrame
        partitions×types-sized frame) give each range's cumulative
        offset and each type's total via a window over that TINY
        summary frame;
-    3. global position = within-range local offset + broadcast offset.
-       The local offset comes from ``monotonically_increasing_id``
-       stamped over the SORTED partitions ((partition << 33) |
-       row-offset, decoded with a shift and mask) minus the group's
-       first offset from the summary — NOT from a ``row_number``
-       window, which would re-shuffle the full frame on (pid, type)
-       to prove a clustering the range exchange already produced.
+    3. global position = within-range local offset + broadcast offset
+       (``positions.ordered_positions`` — NOT a ``row_number`` window,
+       which would re-shuffle the full frame on (pid, type) to prove a
+       clustering the range exchange already produced).
 
     Because (spend, user_id) is unique within a type (the aggregate's
     grain), the order is total: rank == position ``p``,
@@ -66,37 +64,12 @@ def value_distribution_frame(spark: SparkSession, spend: DataFrame) -> DataFrame
     follows arithmetically (first n mod 4 buckets get ⌈n/4⌉ rows) — no
     per-type sort task ever sees more than one range partition.
     """
-    n_ranges = spark.sparkContext.defaultParallelism
-    # persisted (query-scoped): both the ranked path and the offsets
-    # summary consume it (and must agree on partition membership), and
-    # it is the REDUCED frame (one row per (type, user)) — without the
-    # cache the scan + aggregate + range shuffle all run twice.
-    part = scoped_persist(
-        spend.repartitionByRange(n_ranges, "event_type", "spend", "user_id")
-        .sortWithinPartitions("event_type", "spend", "user_id")
-        .withColumn("__mid", F.monotonically_increasing_id())
+    # The stamped frame is the REDUCED one (one row per (type, user)),
+    # persisted lazily: the scan + aggregate + range shuffle run once.
+    ranked = ordered_positions(
+        spend, ["event_type", "spend", "user_id"], group=["event_type"]
     )
-    pid = F.shiftright("__mid", 33)
-    mid_off = F.col("__mid").bitwiseAND(F.lit((1 << 33) - 1))
-    counts = part.groupBy(pid.alias("pid"), "event_type").agg(
-        F.count(F.lit(1)).alias("cnt"), F.min(mid_off).alias("first_off")
-    )
-    w_off = (
-        Window.partitionBy("event_type")
-        .orderBy("pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = counts.select(
-        "pid",
-        "event_type",
-        "first_off",
-        F.coalesce(F.sum("cnt").over(w_off), F.lit(0)).alias("off"),
-        F.sum("cnt").over(Window.partitionBy("event_type")).alias("n"),
-    )
-    ranked = part.withColumn("pid", pid).join(
-        F.broadcast(offsets), ["pid", "event_type"]
-    )
-    p = F.col("off") + (mid_off - F.col("first_off")) + 1
+    p = F.col("pos") + 1
     n = F.col("n")
     big, small, rem = (n / 4).cast("long") + 1, (n / 4).cast("long"), n % 4
     quartile = F.when(p <= big * rem, F.ceil(p / big)).otherwise(
@@ -122,7 +95,7 @@ def user_value_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gmall_flink_parent_spark.operators.windows import spend_by_type_user
 
     return value_distribution_frame(
-        spark, spend_by_type_user(load_table(spark, sf_dir, "events"))
+        spend_by_type_user(load_table(spark, sf_dir, "events"))
     )
 
 

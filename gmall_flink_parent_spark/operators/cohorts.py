@@ -163,7 +163,7 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    dist = value_distribution_frame(spark, stacked)
+    dist = value_distribution_frame(stacked)
     quart = lambda m: F.max(  # noqa: E731  (one row per (user, metric))
         F.when(F.col("event_type") == m, F.col("quartile"))
     )

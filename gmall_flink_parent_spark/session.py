@@ -44,10 +44,11 @@ def get_spark(app_name: str = "gmall_flink_parent_spark") -> SparkSession:
         # 1.91→1.50 s, LPA 2.93→1.97 s interleaved min-of-3). Scale-safe:
         # AQE merges only small ADJACENT partitions and leaves large
         # cached frames fully partitioned. Merging does change the __mid
-        # stamps (their high bits are the partition index), but positions
-        # decoded from them stay order-consistent: adjacent merges keep
-        # range order, the sort keys are unique, and each stamped frame
-        # is materialized once, so every consumer reads the same stamps.
+        # stamps of positions.py (their high bits are the partition
+        # index), but positions decoded from them stay order-consistent:
+        # adjacent merges keep range order, the sort keys are unique, and
+        # each stamped frame is materialized once, so every consumer
+        # reads the same stamps.
         .config(
             "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
         )

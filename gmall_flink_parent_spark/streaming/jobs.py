@@ -576,7 +576,7 @@ def user_value_distribution_from_store(spark: SparkSession, store_path: str) -> 
     from gmall_flink_parent_spark.registry import release_caches
 
     release_caches()
-    return value_distribution_frame(spark, merged_spend_from_store(spark, store_path))
+    return value_distribution_frame(merged_spend_from_store(spark, store_path))
 
 
 def dau_hll_job(events: DataFrame, store_path: str, checkpoint_dir: str):

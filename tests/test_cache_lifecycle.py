@@ -20,6 +20,9 @@ CACHING = {
     "dedup_cascade_verify": 1,
     "simhash_near_dup": 1,
     "user_value_distribution": 1,
+    # one live cache each: positions.ordered_positions' stamped frame
+    "packed_training_stream": 1,
+    "token_budget_select": 1,
 }
 
 
