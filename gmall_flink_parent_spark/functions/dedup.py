@@ -33,7 +33,7 @@ from gmall_flink_parent_spark.functions.simhash import (
     _TOK32_DUCK,
     token_hashes_col,
 )
-from gmall_flink_parent_spark.registry import register, scoped_persist
+from gmall_flink_parent_spark.registry import cached, register, scoped_persist
 from gmall_flink_parent_spark.sources.tables import fan_out, load_table
 
 NUM_HASHES = 16
@@ -837,8 +837,8 @@ def connected_components(
         pairs.select(
             F.col("doc_id_b").alias("doc_id_a"), F.col("doc_id_a").alias("doc_id_b")
         )
-    ).persist()
-    try:
+    )
+    with cached(edges) as edges:
         labels = nodes.select("doc_id", F.col("doc_id").alias("label"))
         for _round in range(max_rounds):
             neighbor_min = (
@@ -847,38 +847,30 @@ def connected_components(
                 .agg(F.min("label").alias("nbr_label"))
                 .withColumnRenamed("doc_id_a", "doc_id")
             )
-            # persist before the pointer jump: the jump self-joins
+            propagated = labels.join(neighbor_min, "doc_id", "left").select(
+                "doc_id",
+                F.least("label", F.coalesce("nbr_label", "label")).alias("label"),
+            )
+            # cache before the pointer jump: the jump self-joins
             # `propagated`, and without a cache BOTH sides re-run the
             # edge join + aggregate — the round's dominant cost paid
             # twice (measured on the 100x-doc shard: 870 s -> 554 s
             # for the 6-round fixed point over 1.16B directed edges)
-            propagated = (
-                labels.join(neighbor_min, "doc_id", "left")
-                .select(
-                    "doc_id",
-                    F.least(
-                        F.col("label"), F.coalesce("nbr_label", F.col("label"))
-                    ).alias("label"),
+            with cached(propagated) as propagated:
+                # pointer jump: label ← label[label]. The jump
+                # self-references `propagated`, which would DOUBLE the
+                # logical plan every round (exponential analysis cost);
+                # localCheckpoint truncates lineage to the materialized
+                # result each round — at cluster scale the same role is
+                # played by reliable checkpoint() on durable storage.
+                ptr = propagated.select(
+                    F.col("doc_id").alias("p_id"), F.col("label").alias("p_label")
                 )
-                .persist()
-            )
-            # pointer jump: label ← label[label]. The jump self-references
-            # `propagated`, which would DOUBLE the logical plan every round
-            # (exponential analysis cost); localCheckpoint truncates lineage
-            # to the materialized result each round — at cluster scale the
-            # same role is played by reliable checkpoint() on durable storage.
-            ptr = propagated.select(
-                F.col("doc_id").alias("p_id"), F.col("label").alias("p_label")
-            )
-            new_labels = (
-                propagated.join(ptr, propagated.label == ptr.p_id, "left")
-                .select(
-                    "doc_id",
-                    F.coalesce("p_label", "label").alias("label"),
+                new_labels = (
+                    propagated.join(ptr, propagated.label == ptr.p_id, "left")
+                    .select("doc_id", F.coalesce("p_label", "label").alias("label"))
+                    .localCheckpoint(eager=True)
                 )
-                .localCheckpoint(eager=True)
-            )
-            propagated.unpersist()
             changed = (
                 new_labels.alias("n")
                 .join(labels.alias("o"), "doc_id")
@@ -893,8 +885,6 @@ def connected_components(
         raise RuntimeError(
             f"connected_components did not converge within {max_rounds} rounds"
         )
-    finally:
-        edges.unpersist()
 
 
 # ------------------------------------------------------- cascade verify

@@ -32,8 +32,8 @@ from gmall_flink_parent_spark.functions.curation import (
 from gmall_flink_parent_spark.functions.stopwords import _STOP_SQL
 from gmall_flink_parent_spark.positions import ordered_positions
 from gmall_flink_parent_spark.registry import (
+    query_scope,
     register,
-    release_caches,
     retain_latest,
     scoped_persist,
 )
@@ -115,6 +115,7 @@ def corpus_mix_weighted(
     )
 
 
+@query_scope
 def training_order(mix: DataFrame, seed: str = "order-v1") -> DataFrame:
     """Deterministic global shuffle of a (doc_id, source, epoch) mixture
     into training order — the step after ``corpus_mix_weighted``.
@@ -135,10 +136,9 @@ def training_order(mix: DataFrame, seed: str = "order-v1") -> DataFrame:
     offset summary (``positions.ordered_positions``) — no single-reducer
     total sort, no second full-data exchange. ``sample_idx`` reproduces
     the total (__k, doc_id, epoch) order wherever the range bounds fall.
+    A ``query_scope``: a loop re-deriving streams holds one mixture-sized
+    cache, not one per iteration.
     """
-    release_caches()  # one live full-data cache per call, like the
-    # registered-query cadence — a loop re-deriving streams must not
-    # accumulate a mixture-sized cache per iteration
     key = F.md5(
         F.concat_ws(
             ":",
@@ -922,6 +922,7 @@ def corpus_mix_curriculum(
     )
 
 
+@query_scope
 def curriculum_order(mix: DataFrame, seed: str = "curr-order-v1") -> DataFrame:
     """Global training order across curriculum phases — ONE range sort.
 
@@ -933,7 +934,6 @@ def curriculum_order(mix: DataFrame, seed: str = "curr-order-v1") -> DataFrame:
     pass as ``training_order``. Positions are continuous across the
     phase boundary by construction.
     """
-    release_caches()
     key = F.md5(
         F.concat_ws(
             ":",

@@ -13,7 +13,9 @@ outputs are rounded identically on both sides.
 from __future__ import annotations
 
 import functools
-from collections.abc import Callable
+import threading
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -22,29 +24,51 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 # ------------------------------------------------------- cache lifecycle
 #
-# Registered queries are lazy — with one deliberate exception: a query
-# that passes ``eager=True`` here (the MinHash family) runs its cache
-# fill at CONSTRUCTION time, so constructing those queries executes the
-# signature jobs even if the caller only wants ``.schema``/``.explain``.
-# That is the accepted price of the concurrent-consumer fix documented
-# below; everything else materializes only when the caller acts. Either
-# way the caller materializes the RESULT after construction, so a query
-# that persists an intermediate frame has no point in its own body at
-# which it could unpersist (the cache would be dropped before/while
-# used). The pool below defers release to the next registered query's
-# construction — matching the construct → materialize → next-query
-# cadence the driver and bench run — with `release_caches()` for
-# explicit cleanup at session end. Without this, a ~50-query driver
-# session accumulates every query's cached frames in executor storage.
+# This module is the one place that persists and releases a frame. A
+# cache has one of two lifetimes:
+#
+# - Block lifetime (``cached``): the frame is unpersisted when its
+#   ``with`` block exits, error or not. For work that finishes inside
+#   one call: a micro-batch body, a store upsert or compaction, a
+#   fixpoint round.
+# - Query lifetime (``scoped_persist``): the caller materializes the
+#   RESULT after construction, so a query that persists an intermediate
+#   frame has no point in its own body at which it could unpersist.
+#   The cache lives until the same thread constructs its next query —
+#   any ``query_scope`` function, which every registered query is —
+#   matching the construct → materialize → next-query cadence the
+#   driver and bench run. Without this, a ~50-query driver session
+#   accumulates every query's cached frames in executor storage.
+#
+# Query-lifetime caches are owned by the constructing thread: building
+# a query releases that thread's previous caches and those of threads
+# that have exited, never the caches of a live thread, so queries
+# built side by side on one session do not evict each other.
+# ``release_caches()`` drops every thread's caches (end-of-run
+# cleanup). A query that passes ``eager=True`` fills its cache at
+# CONSTRUCTION time, so constructing it executes the fill job even if
+# the caller only wants ``.schema``/``.explain``; everything else
+# materializes only when the caller acts.
 
-_LIVE_CACHES: list[DataFrame] = []
+_LIVE_CACHES: dict[threading.Thread, list[DataFrame]] = {}
+_LOCK = threading.Lock()
+
+
+@contextmanager
+def cached(df: DataFrame) -> Iterator[DataFrame]:
+    """Persist ``df`` for the ``with`` block; unpersisted on exit."""
+    out = df.persist()
+    try:
+        yield out
+    finally:
+        out.unpersist()
 
 
 def scoped_persist(df: DataFrame, eager: bool = False) -> DataFrame:
-    """Persist ``df`` with query-scoped lifetime.
+    """Persist ``df`` with query lifetime.
 
     The frame stays cached while its query is materialized and is
-    unpersisted when the NEXT registered query is constructed (or on
+    unpersisted when the calling thread constructs its NEXT query (or on
     ``release_caches()``).
 
     ``eager=True`` materializes the cache NOW with a ``count()``. Use it
@@ -58,30 +82,57 @@ def scoped_persist(df: DataFrame, eager: bool = False) -> DataFrame:
     cluster-wide with no contention.
     """
     out = df.persist()
-    _LIVE_CACHES.append(out)
+    with _LOCK:
+        _LIVE_CACHES.setdefault(threading.current_thread(), []).append(out)
     if eager:
         out.count()
     return out
 
 
+def _release(owned: Callable[[threading.Thread], bool]) -> None:
+    """Unpersist the caches of every thread ``owned`` selects."""
+    with _LOCK:
+        drop = [df for t in list(_LIVE_CACHES) if owned(t)
+                for df in _LIVE_CACHES.pop(t)]
+    for df in drop:
+        df.unpersist()
+
+
 def release_caches() -> None:
-    """Unpersist every scoped cache (idempotent, safe to call anytime)."""
-    while _LIVE_CACHES:
-        _LIVE_CACHES.pop().unpersist()
+    """Unpersist every thread's query-lifetime caches (idempotent)."""
+    _release(lambda t: True)
+
+
+def query_scope(fn: Callable[..., DataFrame]) -> Callable[..., DataFrame]:
+    """Decorator: constructing ``fn``'s query first releases the calling
+    thread's previous query-lifetime caches (and those of exited
+    threads) — by now the caller has taken its action(s)."""
+
+    @functools.wraps(fn)
+    def scoped(*args, **kwargs) -> DataFrame:
+        me = threading.current_thread()
+        _release(lambda t: t is me or not t.is_alive())
+        return fn(*args, **kwargs)
+
+    return scoped
 
 
 def retain_latest() -> None:
-    """Unpersist every scoped cache EXCEPT the most recently persisted.
+    """Unpersist the calling thread's caches EXCEPT the most recent one.
 
     The downstream-stage cadence: a stage that persists a frame derived
     from an earlier persisted frame should fill its cache eagerly WHILE
     the upstream cache is still alive (one execution of the shared
     subtree), then call this — leaving exactly one live cache, same
-    end-state as ``release_caches()``-then-persist but without
+    end-state as releasing first and then persisting, but without
     recomputing the upstream lineage during the fill (measured ~12% on
     the composed mix→order→pack chain at sf0.1)."""
-    while len(_LIVE_CACHES) > 1:
-        _LIVE_CACHES.pop(0).unpersist()
+    with _LOCK:
+        own = _LIVE_CACHES.get(threading.current_thread(), [])
+        drop = own[:-1]
+        del own[:-1]
+    for df in drop:
+        df.unpersist()
 
 
 @dataclass(frozen=True)
@@ -119,15 +170,9 @@ def register(
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
 
-        @functools.wraps(fn)
-        def scoped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            # Drop the previous query's scoped caches before building
-            # this one — by now the caller has taken its action(s).
-            release_caches()
-            return fn(spark, sf_dir)
-
+        doc = (fn.__doc__ or "").strip()
         _REGISTRY[name] = QuerySpec(
-            name, scoped, oracle, tuple(tags), (fn.__doc__ or "").strip(), past_window
+            name, query_scope(fn), oracle, tuple(tags), doc, past_window
         )
         return fn
 

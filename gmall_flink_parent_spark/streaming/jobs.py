@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gmall_flink_parent_spark.operators.routing import ROUTING_CONFIG, ROUTING_CONFIG_SCHEMA
+from gmall_flink_parent_spark.registry import cached, query_scope, scoped_persist
 # Every job below lands its rows through streaming.store (the one
 # ingest-store module: batch_store_job / land_batch / start_batches);
 # its public names are re-exported for existing call sites. The private
@@ -44,8 +45,7 @@ def log_split_job(events: DataFrame, out_dir: str, checkpoint_dir: str):
     """
 
     def split(batch: DataFrame, batch_id: int) -> None:
-        batch.persist()
-        try:
+        with cached(batch) as batch:
             start = batch.filter(F.col("event_type") == "signup")
             page = batch.filter(F.col("event_type").isin("view", "click"))
             start.write.mode("append").parquet(f"{out_dir}/dwd_start_log")
@@ -58,8 +58,6 @@ def log_split_job(events: DataFrame, out_dir: str, checkpoint_dir: str):
                     F.from_json("props", "map<string,string>")
                 ).alias("prop_key", "prop_value"),
             ).write.mode("append").parquet(f"{out_dir}/dwd_display_log")
-        finally:
-            batch.unpersist()
 
     return start_batches(events, split, f"{checkpoint_dir}/log_split")
 
@@ -181,12 +179,11 @@ def routing_job(
         spark = batch.sparkSession
         # fresh snapshot = poll tick
         config = spark.read.schema(ROUTING_CONFIG_SCHEMA).json(config_path)
-        joined = batch.join(
-            F.broadcast(config),
-            batch.event_type == config.source_type,
-            "inner",
-        ).persist()
-        try:
+        with cached(
+            batch.join(
+                F.broadcast(config), batch.event_type == config.source_type, "inner"
+            )
+        ) as joined:
             cols = F.split(F.col("sink_columns"), ",")
             projected = joined.select(
                 "event_id",
@@ -247,8 +244,6 @@ def routing_job(
                     ensure_dim_table(
                         spark, tbl, f"{out_dir}/dims/{tbl}", schema_frame
                     )
-        finally:
-            joined.unpersist()
 
     return start_batches(cdc_stream, route, f"{checkpoint_dir}/routing")
 
@@ -558,6 +553,7 @@ def user_spend_concentration_from_store(
     return spend_concentration_frame(merged_spend_from_store(spark, store_path))
 
 
+@query_scope
 def user_value_distribution_from_store(spark: SparkSession, store_path: str) -> DataFrame:
     """Second head over the SAME ``topk_spend_job`` store: the full
     per-type spend distribution (percent_rank / cume_dist / ntile via
@@ -573,9 +569,7 @@ def user_value_distribution_from_store(spark: SparkSession, store_path: str) -> 
     cadence: a long-lived refresh loop holds at most ONE live cache
     instead of accumulating one per call."""
     from gmall_flink_parent_spark.operators.analytics import value_distribution_frame
-    from gmall_flink_parent_spark.registry import release_caches
 
-    release_caches()
     return value_distribution_frame(merged_spend_from_store(spark, store_path))
 
 
@@ -787,6 +781,7 @@ def event_value_holt_forecast_from_store(
     return holt_frame(spark, _daily_cents_from_store(spark, store_path))
 
 
+@query_scope
 def event_dow_seasonality_from_store(
     spark: SparkSession, store_path: str
 ) -> DataFrame:
@@ -799,6 +794,7 @@ def event_dow_seasonality_from_store(
     return dow_seasonality_frame(_daily_cents_from_store(spark, store_path))
 
 
+@query_scope
 def event_daily_robust_outliers_from_store(
     spark: SparkSession, store_path: str
 ) -> DataFrame:
@@ -811,6 +807,7 @@ def event_daily_robust_outliers_from_store(
     return robust_outliers_frame(_daily_cents_from_store(spark, store_path))
 
 
+@query_scope
 def event_trend_mann_kendall_from_store(
     spark: SparkSession, store_path: str
 ) -> DataFrame:
@@ -985,6 +982,7 @@ def sequence_support_store_job(events: DataFrame, store_path: str, checkpoint_di
     )
 
 
+@query_scope
 def sequence_support_from_store(spark: SparkSession, store_path: str) -> DataFrame:
     """Final pass over ``sequence_support_store_job``'s extrema
     partials: min-of-mins / max-of-maxes (exact merge), then the shared
@@ -1406,14 +1404,11 @@ def minhash_dedup_job(
         # and deduping against "no store" would silently drop every
         # pair with an earlier doc (upsert_parquet heals too late)
         heal_store_dirs(spark, store_path)
-        sigs = minhash_signatures(batch).persist()
-        try:
+        with cached(minhash_signatures(batch)) as sigs:
             fs, store = _hadoop_fs(spark, store_path)
             store_sigs = spark.read.parquet(store_path) if fs.exists(store) else None
             land_batch(dedup_minhash_incremental(sigs, store_sigs), pairs_path, batch_id)
             upsert_parquet(spark, sigs, store_path, key="doc_id")
-        finally:
-            sigs.unpersist()
 
     return start_batches(docs, process, f"{checkpoint_dir}/minhash_dedup")
 
@@ -1800,6 +1795,7 @@ def shingle_store_job(docs: DataFrame, store_path: str, checkpoint_dir: str):
     return batch_store_job(docs, frame, store_path, f"{checkpoint_dir}/shingle_store")
 
 
+@query_scope
 def boilerplate_fraction_from_store(
     spark: SparkSession, store_path: str
 ) -> DataFrame:
@@ -1810,15 +1806,7 @@ def boilerplate_fraction_from_store(
     from gmall_flink_parent_spark.functions.curation import (
         boilerplate_fraction_frame,
     )
-    from gmall_flink_parent_spark.registry import (
-        release_caches,
-        scoped_persist,
-    )
 
-    # one-live-cache cadence (same as user_value_distribution_from_store):
-    # a long-lived refresh loop holds at most ONE store-sized cache
-    # instead of accumulating one per call
-    release_caches()
     # broadcast gate decided from parquet FOOTERS (driver-side metadata,
     # no count() job over the store) — at ingest cadence the gate count
     # was a full store pass per head invocation before the cache filled
@@ -1853,6 +1841,7 @@ def vocab_store_job(docs: DataFrame, store_path: str, checkpoint_dir: str):
     return batch_store_job(docs, frame, store_path, f"{checkpoint_dir}/vocab_store")
 
 
+@query_scope
 def doc_unigram_logprob_from_store(
     spark: SparkSession, store_path: str
 ) -> DataFrame:
@@ -1865,13 +1854,7 @@ def doc_unigram_logprob_from_store(
     from gmall_flink_parent_spark.functions.curation import (
         unigram_logprob_frame,
     )
-    from gmall_flink_parent_spark.registry import (
-        release_caches,
-        scoped_persist,
-    )
 
-    # one-live-cache cadence (same as boilerplate_fraction_from_store)
-    release_caches()
     return unigram_logprob_frame(
         scoped_persist(
             spark.read.parquet(store_path).select("doc_id", "tok", "tf")
@@ -1936,6 +1919,7 @@ def dsir_store_job(docs: DataFrame, store_path: str, checkpoint_dir: str):
     return batch_store_job(docs, frame, store_path, f"{checkpoint_dir}/dsir_store")
 
 
+@query_scope
 def dsir_weights_from_store(spark: SparkSession, store_path: str) -> DataFrame:
     """Per-training-run DSIR importance weights over the gram store:
     target/raw bucket distributions re-derived from the accumulated tf
@@ -1946,13 +1930,7 @@ def dsir_weights_from_store(spark: SparkSession, store_path: str) -> DataFrame:
     sample) costs one pass over the bucket-grain store, never a corpus
     re-tokenize."""
     from gmall_flink_parent_spark.functions.selection import dsir_weight_frame
-    from gmall_flink_parent_spark.registry import (
-        release_caches,
-        scoped_persist,
-    )
 
-    # one-live-cache cadence (same as boilerplate_fraction_from_store)
-    release_caches()
     return dsir_weight_frame(
         scoped_persist(
             spark.read.parquet(store_path).select(
@@ -1999,6 +1977,7 @@ def media_fingerprint_job(docs: DataFrame, store_path: str, checkpoint_dir: str)
     )
 
 
+@query_scope
 def ahash_near_dup_from_store(spark: SparkSession, store_path: str) -> DataFrame:
     """Perceptual near-dup pairs over the fingerprint store: the probe
     tables and Hamming rerank run on stored 16-byte hash rows — no
@@ -2012,13 +1991,7 @@ def ahash_near_dup_from_store(spark: SparkSession, store_path: str) -> DataFrame
         ahash_pairs_frame,
         conf_hot_threshold,
     )
-    from gmall_flink_parent_spark.registry import (
-        release_caches,
-        scoped_persist,
-    )
 
-    # one-live-cache cadence (same as boilerplate_fraction_from_store)
-    release_caches()
     return ahash_pairs_frame(
         scoped_persist(spark.read.parquet(store_path).select("doc_id", "ahash")),
         hot_threshold=conf_hot_threshold(spark, AHASH_HOT_BUCKET_CONF),
@@ -2127,6 +2100,7 @@ def span_store_job(docs: DataFrame, store_path: str, checkpoint_dir: str):
     return batch_store_job(docs, frame, store_path, f"{checkpoint_dir}/span_store")
 
 
+@query_scope
 def span_dedup_from_store(spark: SparkSession, store_path: str) -> DataFrame:
     """Repeated-span removal over the span store: corpus frequency +
     size-gated probe join + per-doc reassembly through the SAME
@@ -2137,13 +2111,7 @@ def span_dedup_from_store(spark: SparkSession, store_path: str) -> DataFrame:
     (``store_row_count`` — driver-side metadata, no count() job), so
     constructing this head launches no Spark action."""
     from gmall_flink_parent_spark.functions.spans import span_dedup_frame
-    from gmall_flink_parent_spark.registry import (
-        release_caches,
-        scoped_persist,
-    )
 
-    # one-live-cache cadence (same as boilerplate_fraction_from_store)
-    release_caches()
     return span_dedup_frame(
         scoped_persist(
             spark.read.parquet(store_path).select("doc_id", "pos", "span", "sk")
@@ -2152,6 +2120,7 @@ def span_dedup_from_store(spark: SparkSession, store_path: str) -> DataFrame:
     )
 
 
+@query_scope
 def winnow_near_dup_from_store(spark: SparkSession, store_path: str) -> DataFrame:
     """Near-dup pairs over the winnowing-fingerprint store: the
     posting-list self-join + pair agg through the SAME
@@ -2159,13 +2128,7 @@ def winnow_near_dup_from_store(spark: SparkSession, store_path: str) -> DataFram
     one-shot ``winnow_near_dup`` over the same corpus, with zero text
     re-scans (documents were fingerprinted once, at ingest)."""
     from gmall_flink_parent_spark.functions.spans import winnow_pairs_frame
-    from gmall_flink_parent_spark.registry import (
-        release_caches,
-        scoped_persist,
-    )
 
-    # one-live-cache cadence (same as boilerplate_fraction_from_store)
-    release_caches()
     return winnow_pairs_frame(
         scoped_persist(
             spark.read.parquet(store_path).select("doc_id", "n_fps", "fp")
@@ -2313,17 +2276,15 @@ def curation_ingest_job(
     )
 
     def process(batch: DataFrame, batch_id: int) -> None:
-        wide = fan_out(batch.sparkSession, batch).persist()
-        try:
+        with cached(fan_out(batch.sparkSession, batch)) as wide:
             for path, frame, cols in stores:
                 if path is not None:
                     land_batch(frame(wide.select(*cols)), path, batch_id)
-        finally:
-            wide.unpersist()
 
     return start_batches(docs, process, f"{checkpoint_dir}/curation_ingest")
 
 
+@query_scope
 def term_postings_from_store(spark: SparkSession, store_path: str) -> DataFrame:
     """Inverted-index statistics over the ingest-time chunk store
     (``curation_ingest_job``'s ``chunk_path``): df/cf/idf per term from
@@ -2332,14 +2293,13 @@ def term_postings_from_store(spark: SparkSession, store_path: str) -> DataFrame:
     re-scanning document text. Same ``postings_stats_frame`` core as
     the batch ``term_postings_stats``, so the two cannot drift."""
     from gmall_flink_parent_spark.functions.retrieval import postings_stats_frame
-    from gmall_flink_parent_spark.registry import release_caches
 
-    release_caches()
     return postings_stats_frame(
         spark.read.parquet(store_path).select("doc_id", "chunk_id", "chunk_text")
     )
 
 
+@query_scope
 def phrase_search_from_store(spark: SparkSession, store_path: str) -> DataFrame:
     """Exact phrase search over the ingest-time POSITIONAL postings
     store (``curation_ingest_job``'s ``postings_path``): the tokenize +
@@ -2353,14 +2313,13 @@ def phrase_search_from_store(spark: SparkSession, store_path: str) -> DataFrame:
     exactly the batch_id partition landing — no merge pass exists to
     drift."""
     from gmall_flink_parent_spark.functions.retrieval import phrase_match_frame
-    from gmall_flink_parent_spark.registry import release_caches
 
-    release_caches()
     return phrase_match_frame(
         spark, spark.read.parquet(store_path).select("doc_id", "pos", "token")
     )
 
 
+@query_scope
 def term_proximity_from_store(spark: SparkSession, store_path: str) -> DataFrame:
     """The NEAR operator over the SAME ingest-time positional postings
     store that serves ``phrase_search_from_store`` — one stored index,
@@ -2368,14 +2327,13 @@ def term_proximity_from_store(spark: SparkSession, store_path: str) -> DataFrame
     ``proximity_match_frame`` core, so store and batch results are
     hash-identical over the same corpus."""
     from gmall_flink_parent_spark.functions.retrieval import proximity_match_frame
-    from gmall_flink_parent_spark.registry import release_caches
 
-    release_caches()
     return proximity_match_frame(
         spark, spark.read.parquet(store_path).select("doc_id", "pos", "token")
     )
 
 
+@query_scope
 def collocation_pmi_from_store(spark: SparkSession, gram_path: str) -> DataFrame:
     """PMI collocations from the ingest-time GRAM-COUNT partial store
     (``curation_ingest_job``'s ``gram_path``) — the positional family's
@@ -2394,9 +2352,7 @@ def collocation_pmi_from_store(spark: SparkSession, gram_path: str) -> DataFrame
     append-only by doc — same contract as the postings store). Store
     and batch scores are hash-identical over the same corpus."""
     from gmall_flink_parent_spark.functions.text import pmi_from_counts
-    from gmall_flink_parent_spark.registry import release_caches, scoped_persist
 
-    release_caches()
     merged = scoped_persist(
         spark.read.parquet(gram_path)
         .groupBy("n", "w1", "w2")
@@ -2411,6 +2367,7 @@ def collocation_pmi_from_store(spark: SparkSession, gram_path: str) -> DataFrame
     return pmi_from_counts(cnt1, cnt2_all)
 
 
+@query_scope
 def chunk_bm25_from_store(spark: SparkSession, store_path: str) -> DataFrame:
     """BM25 top-k over the ingest-time chunk store — query-time lexical
     ranking with zero text re-scans: the store already holds the chunk
@@ -2420,9 +2377,7 @@ def chunk_bm25_from_store(spark: SparkSession, store_path: str) -> DataFrame:
     ``bm25_topk_frame`` core, so store and batch rankings are
     hash-identical over the same corpus."""
     from gmall_flink_parent_spark.functions.retrieval import bm25_topk_frame
-    from gmall_flink_parent_spark.registry import release_caches
 
-    release_caches()
     return bm25_topk_frame(
         spark.read.parquet(store_path).select(
             "doc_id", "chunk_idx", "chunk_id", "chunk_text"
@@ -2666,6 +2621,7 @@ def outliers_from_store(
     )
 
 
+@query_scope
 def stickiness_hll_from_store(spark: SparkSession, store_path: str) -> DataFrame:
     """DAU / trailing-28-day MAU from ``dau_hll_job``'s sketch store —
     the THIRD head over those sketches (DAU estimate, and now the
@@ -2681,9 +2637,7 @@ def stickiness_hll_from_store(spark: SparkSession, store_path: str) -> DataFrame
         .agg(F.hll_union_agg("users_sketch").alias("users_sketch"))
         .select(F.to_date("ymd", "yyyyMMdd").alias("day"), "users_sketch")
     )
-    from gmall_flink_parent_spark.registry import release_caches, scoped_persist
 
-    release_caches()
     sk = scoped_persist(sk)  # feeds both the DAU projection and the window
     dau = sk.select("day", F.hll_sketch_estimate("users_sketch").alias("approx_dau"))
     cov = sk.select(

@@ -34,6 +34,8 @@ from pyspark.errors import ArithmeticException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gmall_flink_parent_spark.registry import cached
+
 
 def _hadoop_fs(spark: SparkSession, path: str):
     """(FileSystem, Path) for ``path`` — works on HDFS/S3A/local alike,
@@ -113,8 +115,7 @@ def upsert_parquet(
     never see them. NOTE a swap WITHOUT a sidecar drops any existing
     one — sidecar-bearing stores must pass theirs on every upsert.
     """
-    new_rows = new_rows.dropDuplicates([key]).persist()
-    try:
+    with cached(new_rows.dropDuplicates([key])) as new_rows:
         fs, dest = _hadoop_fs(spark, path)
         _clear_swap_leftovers(spark, path)
         if fs.exists(dest):
@@ -123,8 +124,6 @@ def upsert_parquet(
         else:
             merged = new_rows
         _swap_parquet_dir(spark, merged, path, sidecars=sidecars)
-    finally:
-        new_rows.unpersist()
 
 
 def _clear_swap_leftovers(spark: SparkSession, path: str) -> None:
@@ -331,24 +330,20 @@ def compact_partial_store(
     # already returns the stored binary type and cannot overflow)
     guarded = [f for f in value_cols if not isinstance(f.dataType, BinaryType)]
     if value_cols:
-        raw = (
-            fold.groupBy(*group_cols)
-            .agg(
-                *[_merge_expr(f) for f in value_cols],
-                # per-column non-null input counts: a decimal column with
-                # precision >= 29 can overflow INSIDE F.sum itself (result
-                # precision caps at 38, → NULL in non-ANSI mode) before any
-                # cast-back runs, so "inputs existed but the sum is NULL"
-                # must also read as overflow, not as a legitimate total
-                *[F.count(F.col(f.name)).alias(f"__nn_{f.name}") for f in guarded],
-            )
-            .persist()
+        folded = fold.groupBy(*group_cols).agg(
+            *[_merge_expr(f) for f in value_cols],
+            # per-column non-null input counts: a decimal column with
+            # precision >= 29 can overflow INSIDE F.sum itself (result
+            # precision caps at 38, → NULL in non-ANSI mode) before any
+            # cast-back runs, so "inputs existed but the sum is NULL"
+            # must also read as overflow, not as a legitimate total
+            *[F.count(F.col(f.name)).alias(f"__nn_{f.name}") for f in guarded],
         )
     else:
         # every column is a group key (extrema stores, where partials
         # are idempotent): the fold is a pure dedup — nothing to sum
-        raw = fold.select(*group_cols).distinct().persist()
-    try:
+        folded = fold.select(*group_cols).distinct()
+    with cached(folded) as raw:
         # A merged total that no longer fits the stored type would
         # either corrupt the store silently (non-ANSI cast → NULL) or
         # die mid-swap with a raw JVM error (ANSI cast). try_cast is
@@ -391,8 +386,6 @@ def compact_partial_store(
             keep.select(*group_cols, *[f.name for f in value_cols], "batch_id")
         )
         _swap_parquet_dir(spark, merged, store_path, partition_by=["batch_id"])
-    finally:
-        raw.unpersist()
     return COMPACT_BASE_ID
 
 

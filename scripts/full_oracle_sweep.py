@@ -1,28 +1,29 @@
-"""Full-registry oracle sweep at an arbitrary scale factor.
+"""Oracle-check registered queries against DuckDB at any scale factor.
 
 The local test suite checks oracle parity at sf0.001 (speed) and the
-round driver checks its 50-query window at sf0.01; this script closes
-the remaining gap by running EVERY oracle-backed registered query —
-past-window entries included — against DuckDB at any SF, with the same
-column-sorted, type-normalized comparison the harness uses, plus a
-nonempty check for the rows-only queries.
+round driver checks its 50-query window at sf0.01. With no query names
+this script closes the remaining gap by running EVERY registered query —
+past-window entries included; with names it checks just those (the
+per-change loop). Same comparison as the harness: row count + Arrow
+schema + column-sorted, type-normalized value hash vs DuckDB; rows-only
+queries get a nonempty check.
 
 Usage:
-    python scripts/full_oracle_sweep.py [SF_DIR]
+    python scripts/full_oracle_sweep.py [--sf SF_DIR] [NAME ...]
 
-Default: /root/testdata/sf0.01 (the driver's correctness scale).
+Default SF_DIR: /root/testdata/sf0.01 (the driver's correctness scale).
 Prints one line per query and exits nonzero on any mismatch.
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(
-    0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tests")
-)
+HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, HERE)
+sys.path.insert(0, os.path.join(HERE, "tests"))
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -30,7 +31,10 @@ TABLES = (
 
 
 def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    ap = argparse.ArgumentParser()
+    ap.add_argument("names", nargs="*", help="queries to check (default: all)")
+    ap.add_argument("--sf", default="/root/testdata/sf0.01")
+    args = ap.parse_args()
 
     import duckdb
 
@@ -39,22 +43,25 @@ def main() -> int:
     from oracle_harness import assert_arrow_schema_matches, assert_matches_oracle
 
     spark = get_spark("full-oracle-sweep")
+    spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{args.sf}/{t}.parquet'")
 
+    specs = plans.all_queries()
     failures: list[tuple[str, str]] = []
-    for name, spec in plans.all_queries().items():
+    for name in args.names or specs:
+        spec = specs[name]
         try:
             if spec.oracle is None:
-                n = spec.fn(spark, sf_dir).count()
+                n = spec.fn(spark, args.sf).count()
                 assert n > 0, "rows-only query returned 0 rows"
                 print(f"{name} OK rows-only ({n})", flush=True)
             else:
                 # build the frame ONCE: both assertions execute it, and a
                 # second spec.fn() call would re-run the whole query at
                 # the larger SFs this script exists to cover
-                df = spec.fn(spark, sf_dir)
+                df = spec.fn(spark, args.sf)
                 n = assert_matches_oracle(df, con, spec.oracle, name=name)
                 assert_arrow_schema_matches(df, con, spec.oracle, name=name)
                 print(f"{name} OK ({n})", flush=True)

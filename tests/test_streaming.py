@@ -5,6 +5,7 @@ must reproduce: mid 101 bounces, mid 102 does not."""
 from __future__ import annotations
 
 import os
+import threading
 
 import pandas as pd
 import pytest
@@ -40,6 +41,24 @@ def _run_to_memory(df, spark, name: str, with_query: bool = False, timeout: int 
 
 def _rows(df, cols):
     return sorted(tuple(r[c] for c in cols) for r in df.collect())
+
+
+def _persistent_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def _assert_reader_releases_earlier_caches(spark, sf_dir, reader, store_path):
+    """Materialize a caching head, then build and materialize a caching
+    store reader: the reader's construction releases the head's caches,
+    so only the reader's own stay live."""
+    base = _persistent_ids(spark)
+    plans.query_map()["user_value_distribution"](spark, sf_dir).write.format(
+        "noop"
+    ).mode("overwrite").save()
+    held = _persistent_ids(spark) - base
+    reader(spark, store_path).write.format("noop").mode("overwrite").save()
+    live = _persistent_ids(spark) - base
+    assert held and live and not held & live, (held, live)
 
 
 def test_visitor_repair_stream_matches_batch(spark, sf_dir):
@@ -944,7 +963,7 @@ def test_topk_spend_job_matches_batch(spark, sf_dir, tmp_path):
 
     for _ in range(3):
         user_value_distribution_from_store(spark, str(tmp_path / "store")).count()
-    assert len(registry._LIVE_CACHES) <= 1
+    assert len(registry._LIVE_CACHES[threading.current_thread()]) <= 1
     registry.release_caches()
 
 
@@ -4377,6 +4396,16 @@ def test_daily_value_store_serves_correlation_and_pivot_exactly(
         rob_cols,
     ) == want_rob
 
+    # each caching reader holds only its own caches once built
+    for reader in (
+        event_dow_seasonality_from_store,
+        event_daily_robust_outliers_from_store,
+        event_trend_mann_kendall_from_store,
+    ):
+        _assert_reader_releases_earlier_caches(
+            spark, sf_dir, reader, str(tmp_path / "store")
+        )
+
 
 def test_interval_join_skew_hot_key_is_split_by_aqe(spark):
     """Adversarial skew on the interval join's equi-key (VERDICT r9
@@ -4802,6 +4831,9 @@ def test_sequence_support_store_job_matches_batch(spark, sf_dir, tmp_path):
     dup = spark.read.parquet(store_path)
     dup.write.mode("append").parquet(store_path)
     assert _rows(sequence_support_from_store(spark, store_path), cols) == want
+    _assert_reader_releases_earlier_caches(
+        spark, sf_dir, sequence_support_from_store, store_path
+    )
 
 
 def test_order_wide_semi_stream_matches_batch_semi_join(spark, sf_dir):
