@@ -9,12 +9,17 @@ are dropped with "No this key in TableProcess" (``:85-95``). The dynamic
 Kafka sink picks the topic per record from the routed ``sink_table``
 field (``app/dwd/BaseDbTask.java:74-85``, K2).
 
-Spark-first design: the config is a tiny DataFrame **broadcast-joined**
-against the CDC stream — per-record map lookups become one map-side hash
-join; the 5 s poll becomes a re-read per micro-batch inside
-``foreachBatch`` (W9; streaming wiring in ``streaming/jobs.py``). Column
-whitelisting is expressed relationally: a column not in ``sink_columns``
-is nulled, mirroring ``filterColumns``'s entry removal.
+Spark-first design: the config rows become one literal
+``map(source_type → array(struct(sink_type, sink_table, sink_columns)))``
+and ``route`` explodes each event's entry — the per-record map lookup of
+the reference, evaluated inside the scan's own stage, with no join and no
+broadcast exchange. An event whose type has no config row (or is NULL)
+finds no entry and drops; a source with several config rows fans out to
+one row per route, exactly as an inner join would. The 5 s poll becomes a
+re-read per micro-batch inside ``foreachBatch`` (W9; streaming wiring in
+``streaming/jobs.py``). Column whitelisting is expressed relationally: a
+column not in ``sink_columns`` is nulled, mirroring ``filterColumns``'s
+entry removal.
 """
 
 from __future__ import annotations
@@ -60,26 +65,53 @@ WHERE tp.sink_type = '{{sink_type}}'
 """
 
 
-def _routed(spark: SparkSession, sf_dir: str, sink_type: str) -> DataFrame:
-    events = load_table(spark, sf_dir, "events")
-    config = spark.createDataFrame(ROUTING_CONFIG, ROUTING_CONFIG_SCHEMA)
-    cols = F.split(F.col("sink_columns"), ",")
-    return (
-        events.join(F.broadcast(config), events.event_type == config.source_type, "inner")
-        .filter(F.col("sink_type") == sink_type)
-        .select(
-            "event_id",
-            "user_id",
-            "ts",
-            "sink_table",
-            F.when(
-                # decimal cast fixes the money scale; DOUBLE at the output edge
-                F.array_contains(cols, "value"),
-                F.col("value").cast("decimal(18,2)").cast("double"),
-            ).alias("value"),
-            F.when(F.array_contains(cols, "props"), F.col("props")).alias("props"),
-        )
+_ROUTES_TYPE = (
+    "map<string, array<struct<sink_type: string, sink_table: string, "
+    "sink_columns: string>>>"
+)
+
+
+def route(events: DataFrame, config_rows) -> DataFrame:
+    """Route ``events`` through the config rows (``(source_type,
+    sink_type, sink_table, sink_columns)`` tuples or Rows): one output
+    row per (event, matching config row), carrying ``sink_type`` for the
+    caller's fact/dim split. Batch ``_routed`` and the streaming
+    ``routing_job`` share it, so both sides route identically."""
+    routes: dict[str, list] = {}
+    for source_type, sink_type, sink_table, sink_columns in config_rows:
+        if source_type is not None:  # a NULL key never matches, as in a join
+            routes.setdefault(source_type, []).append(
+                F.struct(
+                    F.lit(sink_type).cast("string").alias("sink_type"),
+                    F.lit(sink_table).cast("string").alias("sink_table"),
+                    F.lit(sink_columns).cast("string").alias("sink_columns"),
+                )
+            )
+    table = (
+        F.create_map(*[x for k, v in routes.items() for x in (F.lit(k), F.array(*v))])
+        if routes
+        else F.lit(None)
+    ).cast(_ROUTES_TYPE)
+    r = events.select("*", F.explode(F.element_at(table, F.col("event_type"))).alias("__r"))
+    cols = F.split(F.col("__r.sink_columns"), ",")
+    return r.select(
+        "event_id",
+        "user_id",
+        "ts",
+        F.col("__r.sink_table").alias("sink_table"),
+        F.col("__r.sink_type").alias("sink_type"),
+        F.when(
+            # decimal cast fixes the money scale; DOUBLE at the output edge
+            F.array_contains(cols, "value"),
+            F.col("value").cast("decimal(18,2)").cast("double"),
+        ).alias("value"),
+        F.when(F.array_contains(cols, "props"), F.col("props")).alias("props"),
     )
+
+
+def _routed(spark: SparkSession, sf_dir: str, sink_type: str) -> DataFrame:
+    routed = route(load_table(spark, sf_dir, "events"), ROUTING_CONFIG)
+    return routed.filter(F.col("sink_type") == sink_type).drop("sink_type")
 
 
 CDC_ENVELOPE_ORACLE = """

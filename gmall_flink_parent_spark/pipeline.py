@@ -23,6 +23,8 @@ re-derives sample N from the manifest alone.
 
 from __future__ import annotations
 
+from contextlib import ExitStack
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -42,7 +44,7 @@ from gmall_flink_parent_spark.functions.mixture import (
     training_order,
     write_training_shards,
 )
-from gmall_flink_parent_spark.registry import release_caches, scoped_persist
+from gmall_flink_parent_spark.registry import cached, release_caches
 from gmall_flink_parent_spark.sources.tables import fan_out, load_table
 
 
@@ -177,157 +179,164 @@ def build_pretraining_dataset(
     ``spans`` subdir (``curation_ingest_job`` ``span_path=…/spans``)
     with the footer-decided broadcast gate.
     """
-    if stores_path is not None:
-        if weights is None:
-            raise ValueError(
-                "stores_path builds need explicit weights matching the "
-                "mixture store (the budget planner reads document text)"
-            )
-        if expectations is not None:
-            raise ValueError(
-                "the expectations admission gate validates the corpus "
-                "frame, which a stores build never reads — run the suite "
-                "at ingest (over the corpus feeding curation_ingest_job) "
-                "or on the scan path"
-            )
-        if corpus is not None:
-            raise ValueError("pass either corpus or stores_path, not both")
-        flags_store = spark.read.parquet(f"{stores_path}/filter")
-        verdict = filter_verdict_frame(flags_store).select("doc_id", "keep")
-        sh = spark.read.parquet(f"{stores_path}/shingles").select("doc_id", "g")
-        toks = spark.read.parquet(f"{stores_path}/profile").select(
-            "doc_id", "n_tokens"
-        )
-        mix_store = spark.read.parquet(f"{stores_path}/mixture").select(
-            "doc_id", "source", "epoch"
-        )
-        _check_mixture_store(spark, mix_store, weights, f"{seed}:mix")
-        docs = None
-        if span_rewrite:
-            from gmall_flink_parent_spark.functions.spans import (
-                span_rewrite_token_counts,
-            )
-            from gmall_flink_parent_spark.streaming.store import store_row_count
-
-            rewrite_counts = span_rewrite_token_counts(
-                scoped_persist(
-                    spark.read.parquet(f"{stores_path}/spans").select(
-                        "doc_id", "pos", "span", "sk"
-                    )
-                ),
-                row_count=store_row_count(f"{stores_path}/spans"),
-            )
-    else:
-        docs = corpus if corpus is not None else load_table(spark, sf_dir, "documents")
-        if expectations is not None:
-            # admission control: one corpus scan, k report rows; a failed
-            # check halts the build BEFORE any downstream stage pays for
-            # the corpus, and the report lands in the manifest either way
-            from gmall_flink_parent_spark.functions.expectations import (
-                expectation_report,
-            )
-
-            expectation_rows = [
-                r.asDict() for r in expectation_report(docs, expectations).collect()
-            ]
-            failed = [r["check_name"] for r in expectation_rows if r["status"] != "pass"]
-            if failed:
+    # The build's own caches (flags, the span frame, rewrite_counts)
+    # live for this block: training_order's query scope releases only
+    # query-lifetime caches, and the mix, pack join and span total
+    # still read these after it runs.
+    with ExitStack() as hold:
+        if stores_path is not None:
+            if weights is None:
                 raise ValueError(
-                    "corpus failed admission expectations: " + ", ".join(failed)
+                    "stores_path builds need explicit weights matching the "
+                    "mixture store (the budget planner reads document text)"
                 )
-        if weights is None:
-            plan = mixture_budget_frame(docs).collect()
-            weights = {r["source"]: float(r["mix_weight"]) for r in plan}
-        verdict = corpus_filter_frame(fan_out(spark, docs)).select("doc_id", "keep")
-        sh = contamination_shingles(docs)
-        if span_rewrite:
-            from gmall_flink_parent_spark.functions.spans import (
-                span_frame,
-                span_rewrite_token_counts,
+            if expectations is not None:
+                raise ValueError(
+                    "the expectations admission gate validates the corpus "
+                    "frame, which a stores build never reads — run the suite "
+                    "at ingest (over the corpus feeding curation_ingest_job) "
+                    "or on the scan path"
+                )
+            if corpus is not None:
+                raise ValueError("pass either corpus or stores_path, not both")
+            flags_store = spark.read.parquet(f"{stores_path}/filter")
+            verdict = filter_verdict_frame(flags_store).select("doc_id", "keep")
+            sh = spark.read.parquet(f"{stores_path}/shingles").select("doc_id", "g")
+            toks = spark.read.parquet(f"{stores_path}/profile").select(
+                "doc_id", "n_tokens"
             )
+            mix_store = spark.read.parquet(f"{stores_path}/mixture").select(
+                "doc_id", "source", "epoch"
+            )
+            _check_mixture_store(spark, mix_store, weights, f"{seed}:mix")
+            docs = None
+            if span_rewrite:
+                from gmall_flink_parent_spark.functions.spans import (
+                    span_rewrite_token_counts,
+                )
+                from gmall_flink_parent_spark.streaming.store import store_row_count
 
-            rewrite_counts = span_rewrite_token_counts(
-                scoped_persist(span_frame(fan_out(spark, docs)))
-            )
+                rewrite_counts = span_rewrite_token_counts(
+                    hold.enter_context(
+                        cached(
+                            spark.read.parquet(f"{stores_path}/spans").select(
+                                "doc_id", "pos", "span", "sk"
+                            )
+                        )
+                    ),
+                    row_count=store_row_count(f"{stores_path}/spans"),
+                )
         else:
-            toks = docs.select(
-                "doc_id", F.size(F.split("text", " ")).cast("long").alias("n_tokens")
+            docs = corpus if corpus is not None else load_table(spark, sf_dir, "documents")
+            if expectations is not None:
+                # admission control: one corpus scan, k report rows; a failed
+                # check halts the build BEFORE any downstream stage pays for
+                # the corpus, and the report lands in the manifest either way
+                from gmall_flink_parent_spark.functions.expectations import (
+                    expectation_report,
+                )
+
+                expectation_rows = [
+                    r.asDict() for r in expectation_report(docs, expectations).collect()
+                ]
+                failed = [r["check_name"] for r in expectation_rows if r["status"] != "pass"]
+                if failed:
+                    raise ValueError(
+                        "corpus failed admission expectations: " + ", ".join(failed)
+                    )
+            if weights is None:
+                plan = mixture_budget_frame(docs).collect()
+                weights = {r["source"]: float(r["mix_weight"]) for r in plan}
+            verdict = corpus_filter_frame(fan_out(spark, docs)).select("doc_id", "keep")
+            sh = contamination_shingles(docs)
+            if span_rewrite:
+                from gmall_flink_parent_spark.functions.spans import (
+                    span_frame,
+                    span_rewrite_token_counts,
+                )
+
+                rewrite_counts = span_rewrite_token_counts(
+                    hold.enter_context(cached(span_frame(fan_out(spark, docs))))
+                )
+            else:
+                toks = docs.select(
+                    "doc_id", F.size(F.split("text", " ")).cast("long").alias("n_tokens")
+                )
+        if span_rewrite:
+            # three consumers (funnel flag, removed-span total, pack join)
+            rewrite_counts = hold.enter_context(cached(rewrite_counts))
+            toks = rewrite_counts.select("doc_id", "n_tokens")
+
+        # --- funnel: quality verdict ∧ not benchmark ∧ not contaminated
+        #     (∧ selection keep-list, when one is plugged in
+        #      ∧ nonempty-after-rewrite, when the span surgery is on)
+        bench = sh.filter(F.col("doc_id") % bench_mod == 0).select("g").distinct()
+        contaminated = contamination_counts(
+            sh.filter(F.col("doc_id") % bench_mod != 0), bench
+        ).select("doc_id")
+        flagged = verdict.withColumn("is_bench", F.col("doc_id") % bench_mod == 0).join(
+            contaminated.withColumn("is_contam", F.lit(True)), "doc_id", "left"
+        )
+        if keep_docs is not None:
+            flagged = flagged.join(
+                keep_docs.select("doc_id").distinct().withColumn("in_sel", F.lit(True)),
+                "doc_id",
+                "left",
             )
-    if span_rewrite:
-        # three consumers (funnel flag, removed-span total, pack join)
-        rewrite_counts = scoped_persist(rewrite_counts)
-        toks = rewrite_counts.select("doc_id", "n_tokens")
+        if span_rewrite:
+            # a doc whose every span is cut has no tokens to train on — it
+            # leaves the funnel HERE (counted), not at the pack join, so
+            # sample indices stay contiguous
+            flagged = flagged.join(
+                rewrite_counts.filter(F.col("n_tokens") > 0)
+                .select("doc_id")
+                .withColumn("has_text", F.lit(True)),
+                "doc_id",
+                "left",
+            )
+        flags = hold.enter_context(cached(flagged))
+        trainable = F.col("keep") & ~F.col("is_bench")
+        survives_decontam = trainable & F.col("is_contam").isNull()
+        in_sel = F.col("in_sel").isNotNull() if keep_docs is not None else F.lit(True)
+        nonempty = F.col("has_text").isNotNull() if span_rewrite else F.lit(True)
+        final_keep = survives_decontam & in_sel & nonempty
+        funnel = flags.agg(
+            F.count(F.lit(1)).alias("n_corpus"),
+            F.sum(F.col("keep").cast("long")).alias("n_quality_kept"),
+            F.sum(trainable.cast("long")).alias("n_trainable"),
+            F.sum((trainable & F.col("is_contam").isNotNull()).cast("long")).alias(
+                "n_contaminated"
+            ),
+            F.sum((survives_decontam & ~in_sel).cast("long")).alias(
+                "n_selection_dropped"
+            ),
+            F.sum((survives_decontam & in_sel & ~nonempty).cast("long")).alias(
+                "n_empty_after_rewrite"
+            ),
+            F.sum(final_keep.cast("long")).alias("n_final"),
+        ).collect()[0]
 
-    # --- funnel: quality verdict ∧ not benchmark ∧ not contaminated
-    #     (∧ selection keep-list, when one is plugged in
-    #      ∧ nonempty-after-rewrite, when the span surgery is on)
-    bench = sh.filter(F.col("doc_id") % bench_mod == 0).select("g").distinct()
-    contaminated = contamination_counts(
-        sh.filter(F.col("doc_id") % bench_mod != 0), bench
-    ).select("doc_id")
-    flagged = verdict.withColumn("is_bench", F.col("doc_id") % bench_mod == 0).join(
-        contaminated.withColumn("is_contam", F.lit(True)), "doc_id", "left"
-    )
-    if keep_docs is not None:
-        flagged = flagged.join(
-            keep_docs.select("doc_id").distinct().withColumn("in_sel", F.lit(True)),
-            "doc_id",
-            "left",
-        )
-    if span_rewrite:
-        # a doc whose every span is cut has no tokens to train on — it
-        # leaves the funnel HERE (counted), not at the pack join, so
-        # sample indices stay contiguous
-        flagged = flagged.join(
-            rewrite_counts.filter(F.col("n_tokens") > 0)
-            .select("doc_id")
-            .withColumn("has_text", F.lit(True)),
-            "doc_id",
-            "left",
-        )
-    flags = scoped_persist(flagged)
-    trainable = F.col("keep") & ~F.col("is_bench")
-    survives_decontam = trainable & F.col("is_contam").isNull()
-    in_sel = F.col("in_sel").isNotNull() if keep_docs is not None else F.lit(True)
-    nonempty = F.col("has_text").isNotNull() if span_rewrite else F.lit(True)
-    final_keep = survives_decontam & in_sel & nonempty
-    funnel = flags.agg(
-        F.count(F.lit(1)).alias("n_corpus"),
-        F.sum(F.col("keep").cast("long")).alias("n_quality_kept"),
-        F.sum(trainable.cast("long")).alias("n_trainable"),
-        F.sum((trainable & F.col("is_contam").isNotNull()).cast("long")).alias(
-            "n_contaminated"
-        ),
-        F.sum((survives_decontam & ~in_sel).cast("long")).alias(
-            "n_selection_dropped"
-        ),
-        F.sum((survives_decontam & in_sel & ~nonempty).cast("long")).alias(
-            "n_empty_after_rewrite"
-        ),
-        F.sum(final_keep.cast("long")).alias("n_final"),
-    ).collect()[0]
-
-    # --- assemble: mix (hash-decided) → order (one range sort) → pack
-    kept = flags.filter(final_keep).select("doc_id")
-    if stores_path is not None:
-        # per-doc independence: the store's mixed copies filtered to
-        # kept docs ≡ mixing the kept docs (the any-split property the
-        # mixture_job family rests on)
-        mixed = mix_store.join(kept, "doc_id", "left_semi")
-    else:
-        mix_in = docs.select("doc_id", "source").join(kept, "doc_id", "left_semi")
-        mixed = corpus_mix_weighted(mix_in, weights, f"{seed}:mix")
-    stream = training_order(mixed, f"{seed}:order")
-    packed = pack_sequences(stream.join(toks, "doc_id"), cap=pack_cap)
-    write_training_shards(packed, out_path, block=block)
-    n_spans_removed = 0
-    if span_rewrite:  # spans cut from the docs that made the stream
-        n_spans_removed = int(
-            rewrite_counts.join(kept, "doc_id", "left_semi")
-            .agg(F.sum("n_removed_spans"))
-            .collect()[0][0]
-            or 0
-        )
+        # --- assemble: mix (hash-decided) → order (one range sort) → pack
+        kept = flags.filter(final_keep).select("doc_id")
+        if stores_path is not None:
+            # per-doc independence: the store's mixed copies filtered to
+            # kept docs ≡ mixing the kept docs (the any-split property the
+            # mixture_job family rests on)
+            mixed = mix_store.join(kept, "doc_id", "left_semi")
+        else:
+            mix_in = docs.select("doc_id", "source").join(kept, "doc_id", "left_semi")
+            mixed = corpus_mix_weighted(mix_in, weights, f"{seed}:mix")
+        stream = training_order(mixed, f"{seed}:order")
+        packed = pack_sequences(stream.join(toks, "doc_id"), cap=pack_cap)
+        write_training_shards(packed, out_path, block=block)
+        n_spans_removed = 0
+        if span_rewrite:  # spans cut from the docs that made the stream
+            n_spans_removed = int(
+                rewrite_counts.join(kept, "doc_id", "left_semi")
+                .agg(F.sum("n_removed_spans"))
+                .collect()[0][0]
+                or 0
+            )
     release_caches()
 
     # --- totals from the WRITTEN store: the manifest describes what is

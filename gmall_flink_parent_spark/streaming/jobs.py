@@ -10,10 +10,14 @@ sinks from ``streaming/sources.py``.
 from __future__ import annotations
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from gmall_flink_parent_spark.operators.routing import ROUTING_CONFIG, ROUTING_CONFIG_SCHEMA
+from gmall_flink_parent_spark.operators.routing import (
+    ROUTING_CONFIG,
+    ROUTING_CONFIG_SCHEMA,
+    route,
+)
 from gmall_flink_parent_spark.registry import cached, query_scope, scoped_persist
 # Every job below lands its rows through streaming.store (the one
 # ingest-store module: batch_store_job / land_batch / start_batches);
@@ -170,82 +174,84 @@ def routing_job(
 
     The 5 s config poll (W9, ``TableProcessFunction.java:51-57``) becomes
     a re-read of the config table at each micro-batch — the natural poll
-    point; the broadcast join replaces per-record map lookups (J4); the
-    fact branch lands partitioned by ``sink_table`` (K2's dynamic topic),
-    the dim branch upserts per sink table (K3).
+    point, one ``collect()``; ``operators.routing.route`` turns its rows
+    into a literal map lookup (J4); the fact branch lands partitioned by
+    ``sink_table`` (K2's dynamic topic), the dim branch upserts per sink
+    table (K3).
+
+    A micro-batch runs as few Spark jobs as its outputs need — with one
+    non-empty dim table, four: the config collect, the facts write, and
+    the upsert's merge shuffle and write. At a tick's few hundred rows
+    each job's tasks take milliseconds while its wait for a free slot
+    behind the other streaming apps' stages takes up to seconds, so the
+    job count, not the row count, sets the batch latency. So the routed
+    batch is not persisted (each dim upsert re-reads it inside its own
+    jobs), and an ``Observation`` on the facts write finds the dim
+    tables with rows without a job of its own.
     """
 
-    def route(batch: DataFrame, batch_id: int) -> None:
+    def route_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         # fresh snapshot = poll tick
-        config = spark.read.schema(ROUTING_CONFIG_SCHEMA).json(config_path)
-        with cached(
-            batch.join(
-                F.broadcast(config), batch.event_type == config.source_type, "inner"
-            )
-        ) as joined:
-            cols = F.split(F.col("sink_columns"), ",")
-            projected = joined.select(
-                "event_id",
-                "user_id",
-                "ts",
-                "sink_table",
-                "sink_type",
-                F.when(
-                    F.array_contains(cols, "value"),
-                    # money scale via decimal, DOUBLE output: match batch _routed
-                    F.col("value").cast("decimal(18,2)").cast("double"),
-                ).alias("value"),
-                F.when(F.array_contains(cols, "props"), F.col("props")).alias("props"),
-            )
-            projected.filter(F.col("sink_type") == "kafka").drop("sink_type").write.mode(
-                "append"
-            ).partitionBy("sink_table").parquet(f"{out_dir}/facts")
-            dims = projected.filter(F.col("sink_type") == "hbase").drop("sink_type")
-            tables = [
-                r["sink_table"] for r in dims.select("sink_table").distinct().collect()
-            ]
+        config = spark.read.schema(ROUTING_CONFIG_SCHEMA).json(config_path).collect()
+        routed = route(batch, config)
+        dim_tables = sorted(
+            {r["sink_table"] for r in config if r["sink_type"] == "hbase"} - {None}
+        )
+        # rows per dim table, counted while the facts write scans the
+        # batch; the metrics sit below the kafka filter, so they see
+        # every routed row
+        is_dim = F.col("sink_type") == "hbase"
+        seen = Observation()
+        metrics = [
+            F.count_if(is_dim & (F.col("sink_table") == t)).alias(t) for t in dim_tables
+        ]
+        scanned = routed.observe(seen, *metrics) if metrics else routed
+        scanned.filter(F.col("sink_type") == "kafka").drop("sink_type").write.mode(
+            "append"
+        ).partitionBy("sink_table").parquet(f"{out_dir}/facts")
+        tables = [t for t in dim_tables if seen.get[t]] if metrics else []
+        dims = routed.filter(is_dim).drop("sink_type")
 
-            # Concurrent per-table upserts: each table's swap touches its
-            # own directory (no cross-table interference), every filter
-            # reads the persisted batch, and Spark's scheduler is
-            # thread-safe — so the per-batch dim latency is the SLOWEST
-            # table, not the sum (the round-5 verdict's watch item).
-            # pool.map propagates the first failure, failing the batch
-            # before its checkpoint commit — replay semantics unchanged.
-            # Pool threads do NOT inherit the streaming run's job group
-            # (pinned-thread mode gives each Python thread a fresh JVM
-            # thread with empty local properties), so re-set it inside
-            # each worker — otherwise query.stop() could not cancel
-            # in-flight dim rewrites and a swap could land after stop().
-            sc = spark.sparkContext
-            group = sc.getLocalProperty("spark.jobGroup.id")
-            desc = sc.getLocalProperty("spark.job.description")
-            interrupt = sc.getLocalProperty("spark.job.interruptOnCancel")
+        # Concurrent per-table upserts: each table's swap touches its
+        # own directory (no cross-table interference), and Spark's
+        # scheduler is thread-safe — so the per-batch dim latency is the
+        # SLOWEST table, not the sum (the round-5 verdict's watch item).
+        # pool.map propagates the first failure, failing the batch
+        # before its checkpoint commit — replay semantics unchanged.
+        # Pool threads do NOT inherit the streaming run's job group
+        # (pinned-thread mode gives each Python thread a fresh JVM
+        # thread with empty local properties), so re-set it inside
+        # each worker — otherwise query.stop() could not cancel
+        # in-flight dim rewrites and a swap could land after stop().
+        sc = spark.sparkContext
+        group = sc.getLocalProperty("spark.jobGroup.id")
+        desc = sc.getLocalProperty("spark.job.description")
+        interrupt = sc.getLocalProperty("spark.job.interruptOnCancel")
 
-            def _upsert(tbl: str) -> str:
-                if group is not None:
-                    sc.setJobGroup(group, desc, interrupt == "true")
-                rows = dims.filter(F.col("sink_table") == tbl).drop("sink_table")
-                upsert_rows(spark, rows, f"{out_dir}/dims/{tbl}", key="event_id")
-                return tbl
+        def _upsert(tbl: str) -> str:
+            if group is not None:
+                sc.setJobGroup(group, desc, interrupt == "true")
+            rows = dims.filter(F.col("sink_table") == tbl).drop("sink_table")
+            upsert_rows(spark, rows, f"{out_dir}/dims/{tbl}", key="event_id")
+            return tbl
 
-            if tables:
-                from concurrent.futures import ThreadPoolExecutor
+        if tables:
+            from concurrent.futures import ThreadPoolExecutor
 
-                with ThreadPoolExecutor(max_workers=min(4, len(tables))) as pool:
-                    list(pool.map(_upsert, tables))
-                # catalog DDL stays serial: embedded metastores (Derby)
-                # reject concurrent DDL, and it is metadata-cheap anyway.
-                # Every table shares one column schema (the projection
-                # above), so derive it once.
-                schema_frame = dims.drop("sink_table")
-                for tbl in tables:
-                    ensure_dim_table(
-                        spark, tbl, f"{out_dir}/dims/{tbl}", schema_frame
-                    )
+            with ThreadPoolExecutor(max_workers=min(4, len(tables))) as pool:
+                list(pool.map(_upsert, tables))
+            # catalog DDL stays serial: embedded metastores (Derby)
+            # reject concurrent DDL, and it is metadata-cheap anyway.
+            # Every table shares one column schema (``route``'s
+            # projection), so derive it once.
+            schema_frame = dims.drop("sink_table")
+            for tbl in tables:
+                ensure_dim_table(
+                    spark, tbl, f"{out_dir}/dims/{tbl}", schema_frame
+                )
 
-    return start_batches(cdc_stream, route, f"{checkpoint_dir}/routing")
+    return start_batches(cdc_stream, route_batch, f"{checkpoint_dir}/routing")
 
 
 def write_routing_config(spark: SparkSession, path: str) -> None:

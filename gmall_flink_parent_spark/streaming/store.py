@@ -93,18 +93,31 @@ def upsert_parquet(
     key: str,
     sidecars: dict[str, DataFrame] | None = None,
 ) -> None:
-    """K3 (DimSink Phoenix upsert) without Delta: anti-join + union rewrite.
+    """K3 (DimSink Phoenix upsert) without Delta: a one-shuffle merge
+    rewrite.
 
-    Emulates MERGE for plain parquet — read current, keep rows whose key
-    is not being replaced, union, write to a side directory, then swap
-    directories with two filesystem renames (metadata ops, not data
-    copies). The exposure window is the instant between the two renames;
-    a crash there leaves the previous table intact under ``._old`` —
-    recoverable by renaming it back — whereas a crash during a direct
-    overwrite of ``path`` loses the table outright. Leftover ``._tmp``/
-    ``._old`` from a previous crash are cleared on entry, so the op is
-    self-healing across retries (idempotent per batch). With Delta/
-    Iceberg on the classpath this is one transactional ``MERGE INTO``.
+    Emulates MERGE for plain parquet: the stored rows (tag 0) and the
+    new rows (tag 1) are unioned and each key keeps its highest-tagged
+    row (``max_by(struct(row), tag)``), so a new row replaces the stored
+    one, duplicate new keys collapse to one row, and a NULL key is one
+    key like any other. That is one shuffle and one write — two Spark
+    jobs, with no persist and no anti-join. The result goes to a side
+    directory, then the directories swap with two filesystem renames
+    (metadata ops, not data copies). The exposure window is the instant
+    between the two renames; a crash there leaves the previous table
+    intact under ``._old`` — recoverable by renaming it back — whereas a
+    crash during a direct overwrite of ``path`` loses the table
+    outright. Leftover ``._tmp``/``._old`` from a previous crash are
+    cleared on entry, so the op is self-healing across retries
+    (idempotent per batch). With Delta/Iceberg on the classpath this is
+    one transactional ``MERGE INTO``.
+
+    Fixed-schema contract: the stored table is read with ``new_rows``'
+    schema, so no schema-inference job runs. A stored value of another
+    type is read as ``new_rows``' type or fails the merge before the
+    swap. Before that read, the driver reads one stored footer (no Spark
+    job) and raises ``ValueError`` if the stored column names differ
+    from ``new_rows``' — schema drift fails before anything is written.
 
     ``sidecars`` maps names to small frames landed at
     ``path/_<name>`` INSIDE the swapped directory — committed
@@ -115,15 +128,46 @@ def upsert_parquet(
     never see them. NOTE a swap WITHOUT a sidecar drops any existing
     one — sidecar-bearing stores must pass theirs on every upsert.
     """
-    with cached(new_rows.dropDuplicates([key])) as new_rows:
-        fs, dest = _hadoop_fs(spark, path)
-        _clear_swap_leftovers(spark, path)
-        if fs.exists(dest):
-            cur = spark.read.parquet(path)
-            merged = cur.join(new_rows, on=key, how="left_anti").unionByName(new_rows)
-        else:
-            merged = new_rows
-        _swap_parquet_dir(spark, merged, path, sidecars=sidecars)
+    fs, dest = _hadoop_fs(spark, path)
+    _clear_swap_leftovers(spark, path)
+    rows = new_rows.withColumn("__tag", F.lit(1))
+    if fs.exists(dest):
+        stored = _stored_columns(spark, path)
+        if stored is not None and sorted(stored) != sorted(new_rows.columns):
+            raise ValueError(
+                f"upsert_parquet: {path} holds columns {stored}, the new rows "
+                f"{new_rows.columns}; the store's schema is fixed"
+            )
+        cur = spark.read.schema(new_rows.schema).parquet(path)
+        rows = cur.withColumn("__tag", F.lit(0)).unionByName(rows)
+    merged = (
+        rows.groupBy(key)
+        .agg(F.max_by(F.struct(*new_rows.columns), "__tag").alias("__row"))
+        .select("__row.*")
+    )
+    _swap_parquet_dir(spark, merged, path, sidecars=sidecars)
+
+
+def _stored_columns(spark: SparkSession, path: str) -> list[str] | None:
+    """Top-level column names from the footer of one data file under
+    ``path`` — a driver-side JVM metadata read that starts no Spark job.
+    ``None`` when ``path`` holds no data file."""
+    jvm = spark._jvm
+    fs, dest = _hadoop_fs(spark, path)
+    for st in fs.listStatus(dest):
+        name = st.getPath().getName()
+        if st.isFile() and not name.startswith(("_", ".")):
+            reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
+                jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+                    st.getPath(), spark._jsc.hadoopConfiguration()
+                )
+            )
+            try:
+                schema = reader.getFooter().getFileMetaData().getSchema()
+            finally:
+                reader.close()
+            return [f.getName() for f in schema.getFields()]
+    return None
 
 
 def _clear_swap_leftovers(spark: SparkSession, path: str) -> None:

@@ -532,3 +532,48 @@ def test_dataset_diff_between_two_builds(spark, sf_dir, tmp_path):
     assert summary["kept"]["n_docs"] == n_kept
     assert summary["kept"]["token_delta"] == 0
     assert summary["removed"]["token_delta"] < 0 < summary["reweighted"]["token_delta"]
+
+
+def test_build_holds_its_caches_until_the_shards_are_written(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The build's own caches — the funnel flags, the span frame and
+    the rewritten token counts — are read again after ``training_order``
+    runs (the mix, the pack join, the removed-span total).
+    ``training_order``'s query scope must not release them before
+    ``write_training_shards`` returns, or those reads re-run their
+    lineage."""
+    from gmall_flink_parent_spark import pipeline, registry
+
+    registry.release_caches()  # start from an empty pool
+    early: list = []
+    written: list = []
+    real_release, real_write = registry._release, pipeline.write_training_shards
+
+    def spy_release(owned):
+        with registry._LOCK:
+            drop = [df for t, dfs in registry._LIVE_CACHES.items() if owned(t) for df in dfs]
+        if not written:
+            early.extend(drop)
+        real_release(owned)
+
+    def spy_write(*args, **kwargs):
+        out = real_write(*args, **kwargs)
+        written.append(True)
+        return out
+
+    monkeypatch.setattr(registry, "_release", spy_release)
+    monkeypatch.setattr(pipeline, "write_training_shards", spy_write)
+    wts = {f"src{i}": (1.5, 0.7)[i % 2] for i in range(20)}
+    m = build_pretraining_dataset(
+        spark, sf_dir, str(tmp_path / "rw"), weights=wts, seed="t-hold", span_rewrite=True
+    )
+    assert written and m["n_spans_removed"] > 0
+    build_frames = [
+        df.columns
+        for df in early
+        if {"is_bench"} <= set(df.columns)  # flags
+        or {"pos", "span"} <= set(df.columns)  # the span frame
+        or {"n_removed_spans"} <= set(df.columns)  # rewrite_counts
+    ]
+    assert not build_frames, build_frames

@@ -340,8 +340,11 @@ def test_routing_job_upsert_idempotent(spark, sf_dir, tmp_path):
     """Replaying the same batch must not duplicate dim rows (K3 upsert).
 
     Also pins the Spark jobs one micro-batch costs: the first lands new
-    dim tables, the replay upsert-merges into them. Inferring the config
-    file's schema cost one more job per batch (9 and 12)."""
+    dim tables, the replay upsert-merges into them. Both run four: the
+    config collect, the facts write, and the merge's shuffle and write.
+    A broadcast join, a persisted batch, a ``distinct().collect()`` of
+    the dim tables and an anti-join merge with footer inference cost
+    8 and 11."""
     cfg = str(tmp_path / "config")
     write_routing_config(spark, cfg)
     jobs_per_batch = []
@@ -356,7 +359,65 @@ def test_routing_job_upsert_idempotent(spark, sf_dir, tmp_path):
     dims = spark.read.parquet(str(tmp_path / "out/dims/dim_purchase_info"))
     batch_dims = plans.query_map()["routing_dims"](spark, sf_dir)
     assert dims.count() == batch_dims.count()
-    assert jobs_per_batch[0] <= 8 and jobs_per_batch[1] <= 11, jobs_per_batch
+    assert jobs_per_batch[0] <= 4 and jobs_per_batch[1] <= 4, jobs_per_batch
+
+
+def test_route_fans_out_like_the_config_join(spark, sf_dir, tmp_path):
+    """``route`` keeps the inner join's semantics: a source with two
+    config rows fans out to two rows per event, an event type with no
+    config row (``error``) drops, and an empty config routes nothing.
+    In the stream, the Observation finds both dim tables of a
+    fanned-out source, and each lands every purchase event."""
+    from gmall_flink_parent_spark.operators.routing import (
+        ROUTING_CONFIG,
+        ROUTING_CONFIG_SCHEMA,
+        route,
+    )
+
+    config = ROUTING_CONFIG + [
+        ("purchase", "kafka", "dwd_order_log", "event_id,user_id,ts,value"),
+        ("purchase", "hbase", "dim_purchase_audit", "event_id,user_id"),
+    ]
+    events = load_table(spark, sf_dir, "events")
+    cfg = spark.createDataFrame(config, ROUTING_CONFIG_SCHEMA)
+    cols = F.split(F.col("sink_columns"), ",")
+    joined = events.join(cfg, events.event_type == cfg.source_type).select(
+        "event_id",
+        "user_id",
+        "ts",
+        "sink_table",
+        "sink_type",
+        F.when(
+            F.array_contains(cols, "value"),
+            F.col("value").cast("decimal(18,2)").cast("double"),
+        ).alias("value"),
+        F.when(F.array_contains(cols, "props"), F.col("props")).alias("props"),
+    )
+    routed = route(events, config)
+    assert routed.columns == joined.columns
+    assert _rows(routed, routed.columns) == _rows(joined, joined.columns)
+    n_purchase = events.filter("event_type = 'purchase'").count()
+    assert n_purchase > 0 and events.filter("event_type = 'error'").count() > 0
+    assert routed.filter("sink_table = 'dwd_order_log'").count() == n_purchase
+    assert route(events, []).count() == 0  # an emptied config routes nothing
+    routed_ids = routed.select("event_id").distinct()
+    assert not routed_ids.join(
+        events.filter("event_type = 'error'"), "event_id"
+    ).count()
+
+    cfg_path = str(tmp_path / "config")
+    cfg.coalesce(1).write.json(cfg_path)
+    q = routing_job(
+        events_stream(spark, sf_dir), cfg_path, str(tmp_path / "out"), str(tmp_path / "ck")
+    )
+    assert q.awaitTermination(120)
+    for tbl in ("dim_purchase_info", "dim_purchase_audit"):
+        dim = spark.read.parquet(str(tmp_path / "out/dims" / tbl))
+        assert dim.count() == n_purchase, tbl
+    audit = spark.read.parquet(str(tmp_path / "out/dims/dim_purchase_audit"))
+    assert audit.filter("value IS NOT NULL OR props IS NOT NULL").count() == 0
+    facts = spark.read.parquet(str(tmp_path / "out/facts"))
+    assert facts.filter("sink_table = 'dwd_order_log'").count() == n_purchase
 
 
 def test_upsert_parquet_self_heals_after_crash_leftovers(spark, tmp_path):
@@ -412,6 +473,83 @@ def test_upsert_parquet_failed_swap_raises_and_restores(spark, tmp_path, monkeyp
         )
     monkeypatch.undo()
     assert sorted(r["k"] for r in spark.read.parquet(path).collect()) == [0, 1, 2]
+
+
+def _group_jobs(spark, group: str, action) -> list[list[str]]:
+    """Stage names of each Spark job ``action`` runs under ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    st = sc.statusTracker()
+    return [
+        [st.getStageInfo(s).name for s in st.getJobInfo(j).stageIds]
+        for j in sorted(st.getJobIdsForGroup(group))
+    ]
+
+
+def test_upsert_parquet_merge_runs_two_jobs(spark, tmp_path):
+    """A merge into an existing table is one shuffle and one write: the
+    stored table is read with the new rows' schema, so no ``parquet at
+    …`` footer-inference job runs, and nothing is persisted."""
+    from gmall_flink_parent_spark.streaming.store import upsert_parquet
+
+    path = str(tmp_path / "dim")
+    rows = spark.range(3).withColumnRenamed("id", "k").withColumn("v", F.col("k"))
+    upsert_parquet(spark, rows, path, key="k")
+    new = spark.range(2, 5).withColumnRenamed("id", "k").withColumn("v", F.col("k") * 10)
+    jobs = _group_jobs(
+        spark, "upsert-merge", lambda: upsert_parquet(spark, new, path, key="k")
+    )
+    assert len(jobs) == 2, jobs
+    assert not [n for stages in jobs for n in stages if n.startswith("parquet at")], jobs
+    got = sorted(tuple(r) for r in spark.read.parquet(path).collect())
+    assert got == [(0, 0), (1, 1), (2, 20), (3, 30), (4, 40)]
+
+
+def test_upsert_parquet_merge_semantics(spark, tmp_path):
+    """Keep-newest per key: a key in both the store and the new rows
+    keeps the new row, duplicate new keys yield one row, a NULL key is
+    one key, and a store whose columns differ from the new rows raises
+    before anything is written."""
+    import os
+
+    from gmall_flink_parent_spark.streaming.store import upsert_parquet
+
+    path = str(tmp_path / "dim")
+    schema = "k long, v string"
+    upsert_parquet(
+        spark, spark.createDataFrame([(1, "a"), (2, "b"), (None, "n0")], schema), path, "k"
+    )
+    new = spark.createDataFrame(
+        [(2, "B"), (3, "c"), (3, "c"), (None, "n1"), (None, "n1")], schema
+    )
+    upsert_parquet(spark, new, path, key="k")
+    got = sorted(
+        (tuple(r) for r in spark.read.parquet(path).collect()),
+        key=lambda t: (t[0] is None, t[0] or 0),
+    )
+    assert got == [(1, "a"), (2, "B"), (3, "c"), (None, "n1")]
+
+    dup = spark.createDataFrame([(4, "x"), (4, "y")], schema)
+    upsert_parquet(spark, dup, path, key="k")
+    fours = [r["v"] for r in spark.read.parquet(path).filter("k = 4").collect()]
+    assert len(fours) == 1 and fours[0] in ("x", "y")
+
+    before = sorted(map(str, spark.read.parquet(path).collect()))
+    files = sorted(os.listdir(path))
+    drifted = spark.createDataFrame([(5, "e", 1.0)], "k long, v string, w double")
+    with pytest.raises(ValueError, match="columns"):
+        upsert_parquet(spark, drifted, path, key="k")
+    renamed = spark.createDataFrame([(5, "e")], "k long, value string")
+    with pytest.raises(ValueError, match="columns"):
+        upsert_parquet(spark, renamed, path, key="k")
+    assert sorted(os.listdir(path)) == files
+    assert not os.path.exists(path + "._tmp")
+    assert sorted(map(str, spark.read.parquet(path).collect())) == before
 
 
 def test_upsert_rows_merges_parquet_history_when_delta_importable(
