@@ -3,7 +3,7 @@
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}. The line is hard-capped at
 STDOUT_LINE_BUDGET chars (the driver records only the last 2000 chars of
-stdout; BENCH_r05/r08 arrived decapitated when the line outgrew that):
+stdout; a line that outgrows that arrives decapitated and unparsed):
 `queries` is budget-packed slowest-first with `n_queries`/`queries_omitted`
 markers, and the FULL per-query map lives in BENCH_DETAIL.json.
 
@@ -70,11 +70,11 @@ def time_head(spark, fn, sf_dir: str, reps: int) -> tuple[float, float]:
     return best, worst
 
 
-# The driver captures only the LAST 2000 characters of bench stdout
-# (BENCH_r07 "tail" is exactly 2000 chars and parsed; BENCH_r05/r08 lines
-# outgrew it and arrived decapitated -> "parsed": null, no bench signal
-# for the round). The final JSON line MUST fit, with margin for the
-# trailing newline and any straggler log bytes.
+# Only the LAST 2000 characters of bench stdout are captured: a line of
+# exactly 2000 chars still parses, but a longer one arrives
+# decapitated -> "parsed": null, and the run leaves no bench signal.
+# The final JSON line MUST fit, with margin for the trailing newline and
+# any straggler log bytes.
 STDOUT_LINE_BUDGET = 1800
 
 
@@ -114,7 +114,7 @@ def main() -> None:
     # ERROR-only logging for the bench session: the driver's tail capture
     # is finite, and benign WARNs (WindowExec on the tiny-summary frames —
     # #partitions-row / 20-row windows, single-partition by construction)
-    # flooded the BENCH_r06 tail. The JSON line must own the tail.
+    # once flooded the captured tail. The JSON line must own the tail.
     spark.sparkContext.setLogLevel("ERROR")
     qmap = plans.query_map()
     warm_up(spark)
@@ -138,8 +138,8 @@ def main() -> None:
             load_per_query[name] = -1.0
 
     # Host-stall self-diagnosis: on this microVM a stalled sweep inflates
-    # *every* query's slow rep uniformly (BENCH_r04 recorded 3-25x across
-    # the board; the same code measured 0.61x baseline on an idle machine).
+    # *every* query's slow rep uniformly (one stalled sweep recorded 3-25x
+    # across the board; the same code measured 0.61x on an idle machine).
     # A median max/min spread over ~2x across reps is that signature —
     # label the artifact so a stalled run is distinguishable without
     # re-running (SCALE.md "host stall" section).

@@ -438,8 +438,7 @@ def packed_training_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort, ONE #partitions-row summary carries BOTH the row-count offset
     (→ sample_idx) and the token offset (→ seq_id/seq_offset), and one
     Arrow cumsum pass finishes the prefix sum: one range exchange where
-    the composed form paid two, 24 jobs → ~12 at sf0.1 (isolated
-    min-of-3: 4.57 s → see OPTIMIZATION_r14.md). Output is
+    the composed form paid two, 24 jobs → ~12 at sf0.1. Output is
     value-identical (same sort key, same cumsum order); the library
     stages keep their own contracts for external callers.
     """

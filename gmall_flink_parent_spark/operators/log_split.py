@@ -234,8 +234,8 @@ GROUP BY k.key
     past_window=True,
 )
 def props_schema_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """OPEN-ENDED semi-structured access (VERDICT r10 stretch #9): no
-    declared schema anywhere — a schema-on-read FILTER over an
+    """OPEN-ENDED semi-structured access: no declared schema
+    anywhere — a schema-on-read FILTER over an
     undeclared variant path (``$.k >= 50`` via ``try_variant_get``,
     NULL-safe against payload drift) and a full key-space PROFILE via
     the ``variant_explode`` lateral TVF: every key that exists in the

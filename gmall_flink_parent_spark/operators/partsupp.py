@@ -3,7 +3,7 @@
 The test corpus has no partsupp table (TESTDATA.md), so the round-10
 Q2/Q9/Q11/Q16/Q20 heads price supply cost from observed lineitems —
 faithful shapes, non-TPC-H cost basis. This module closes that gap
-(VERDICT r10 next-round #5) with a DETERMINISTIC derived partsupp:
+with a DETERMINISTIC derived partsupp:
 
 - **pairs** = the 4-per-part TPC-H-style supplier spread
   ``(p_partkey + p_partkey div S + k * max(1, S div 4)) mod S`` for

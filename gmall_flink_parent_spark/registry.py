@@ -160,10 +160,10 @@ def register(
     50-query correctness window (the first 50 registry entries): it
     sorts after every windowed oracle-backed query, and its hash parity
     is enforced by the local oracle suite
-    (``tests/test_oracle_parity.py``). The window rotates:
-    ``scripts/rotate_window.py`` sets the flag on long-green heads it
-    retires and clears it on the heads it promotes, keeping exactly 50
-    oracle-backed queries unflagged.
+    (``tests/test_oracle_parity.py``). The window no longer rotates:
+    the flags are fixed, and ``tests/test_oracle_parity.py`` pins exactly
+    50 oracle-backed queries unflagged, so a new oracle-backed query
+    registers with ``past_window=True``.
     """
 
     def deco(fn: QueryFn) -> QueryFn:

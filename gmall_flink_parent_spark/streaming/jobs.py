@@ -899,8 +899,8 @@ def order_wide_enriched_stream(
 
 def pricing_summary_store_job(lineitem: DataFrame, store_path: str, checkpoint_dir: str):
     """Incremental-store twin of batch ``pricing_summary`` (the Q1 DWS
-    rollup, ``operators/order_wide.py``) — VERDICT r10 #7: the daily-
-    value pattern applied to the canonical pricing rollup.
+    rollup, ``operators/order_wide.py``): the daily-value pattern
+    applied to the canonical pricing rollup.
 
     Partials per micro-batch at the (returnflag, linestatus) grain:
     the four DECIMAL measure sums + the row count. Each per-row term
@@ -1207,8 +1207,9 @@ def bounce_stats_store_job(
     Kafka per-partition order with ONE input partition, or a
     ``watermark_delay`` of at least the max cross-partition event-time
     skew (Spark's watermark is global — see ``bounce_detect_stream``);
-    in the file-source harness, a ts-range-partitioned split with
-    staggered mtimes (``scripts/stream_bench._split_table_ordered``).
+    in the file-source harness, the log is split into parts with
+    ``repartitionByRange`` on ``ts``, and the parts' file mtimes are
+    staggered in part order so the source reads them oldest first.
     """
     import uuid
 

@@ -1,17 +1,16 @@
 """Regenerate the machine-derived parts of QUERIES.md from the registry.
 
 QUERIES.md has three zones:
-  1. a hand-maintained prose header (window contract + rotation
-     history) whose COUNTS ("N registered queries; M with DuckDB
+  1. a hand-maintained prose header (the window contract) whose COUNTS ("N registered queries; M with DuckDB
      oracles ... the K oracle-backed queries past the window") are
      machine-owned,
   2. the per-query table — fully machine-owned: one row per registered
      query, summary = first sentence of its registration docstring,
   3. the hand-maintained "## Bench tiers" section.
 
-Round 13 review found the committed table can drift from the registry
-mid-round (counts were stale until the closing stamp caught them), so
-this script is now the single owner of zones 1-counts and 2, with a CI
+A hand-kept table drifts from the registry (its counts go stale as soon
+as a head is registered), so this script is the single owner of zones
+1-counts and 2, with a CI
 staleness test (``tests/test_bench.py::test_queries_md_table_is_fresh``)
 asserting that regeneration is a no-op on the committed file.
 

@@ -3,13 +3,13 @@
 Runs the named registered queries (or the N slowest from a bench detail
 map) one at a time in THIS process: min-of-REPS noop-sink timing through
 ``bench.warm_up`` / ``bench.time_head``, and optionally writes
-``<plandir>/<name>_<tag>.txt`` (default ``plans/r15``) with the
+``plans/<name>_<TAG>.txt`` (git-ignored) with the
 ``.explain('formatted')`` output so plan claims are reviewable without
 Spark.
 
 Usage:
     python scripts/isolate_query.py [--sf DIR] [--reps N] [--plans TAG] q1 q2 ...
-    python scripts/isolate_query.py --slowest K   # from BENCH_DETAIL.json
+    python scripts/isolate_query.py --slowest K   # from a local bench.py run's BENCH_DETAIL.json
 """
 
 from __future__ import annotations
@@ -21,7 +21,8 @@ import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, HERE)
 
 
 def main() -> int:
@@ -29,8 +30,7 @@ def main() -> int:
     ap.add_argument("names", nargs="*")
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
     ap.add_argument("--reps", type=int, default=3)
-    ap.add_argument("--plans", default=None, help="write <plandir>/<q>_<TAG>.txt")
-    ap.add_argument("--plandir", default="plans/r15")
+    ap.add_argument("--plans", default=None, help="write plans/<q>_<TAG>.txt")
     ap.add_argument("--slowest", type=int, default=0)
     args = ap.parse_args()
 
@@ -40,8 +40,7 @@ def main() -> int:
 
     names = list(args.names)
     if args.slowest:
-        here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        detail = json.load(open(os.path.join(here, "BENCH_DETAIL.json")))
+        detail = json.load(open(os.path.join(HERE, "BENCH_DETAIL.json")))
         names += [
             k
             for k, _ in sorted(detail["queries"].items(), key=lambda x: -x[1])[
@@ -54,15 +53,16 @@ def main() -> int:
     qmap = plans.query_map()
     warm_up(spark)
 
+    plandir = os.path.join(HERE, "plans")
     out: dict[str, float] = {}
     for name in names:
         if args.plans:
-            os.makedirs(args.plandir, exist_ok=True)
+            os.makedirs(plandir, exist_ok=True)
             df = qmap[name](spark, args.sf)
             buf = io.StringIO()
             with redirect_stdout(buf):
                 df.explain("formatted")
-            with open(f"{args.plandir}/{name}_{args.plans}.txt", "w") as f:
+            with open(f"{plandir}/{name}_{args.plans}.txt", "w") as f:
                 f.write(buf.getvalue())
         if args.reps == 0:
             print(f"plan-only  {name}", flush=True)

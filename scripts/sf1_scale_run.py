@@ -1,5 +1,5 @@
 """sf1 scale run — prove the expensive and broadcast-gated heads above
-bench scale (VERDICT r9 next-round #2).
+bench scale.
 
 The driver ships test data up to sf0.1; this harness inflates it 10× as
 **ten disjoint key-offset shards** and runs the heads that would hit a
@@ -75,7 +75,7 @@ HEADS = [
     "order_wide_enriched",
     "chunk_bm25_multiquery",
     "token_budget_select",
-    # gated-broadcast heads (VERDICT r9 "What's wrong" #1)
+    # gated-broadcast heads: the first to hit a broadcast wall at scale
     "regional_revenue_gapfill",
     "nation_market_share",
     "nation_trade_volume",

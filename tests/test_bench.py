@@ -7,7 +7,9 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
+from pathlib import Path
 
 import pytest
 
@@ -19,7 +21,7 @@ import bench
 def test_pack_stdout_queries_respects_driver_tail_budget():
     """The driver captures only the last 2000 chars of stdout; the packed
     line must always fit, keep the slowest queries, and self-describe any
-    omission (BENCH_r05/r08 were lost to silent oversizing)."""
+    omission (an oversized line loses the whole run's signal)."""
     base = {
         "metric": "headline_queries_total_runtime",
         "value": 123.456,
@@ -74,8 +76,8 @@ def test_every_registered_query_is_benched_or_tiered():
 
 def test_queries_md_table_is_fresh():
     """QUERIES.md's per-query table and prose counts are machine-owned
-    (``scripts/gen_queries_md.py``); round 13 found the committed table
-    drifting from the registry mid-round. Regeneration must be a no-op
+    (``scripts/gen_queries_md.py``), because a hand-kept table drifts
+    from the registry. Regeneration must be a no-op
     on the committed file — if this fails, run
     ``python scripts/gen_queries_md.py`` and commit the result."""
     import importlib.util
@@ -104,3 +106,30 @@ def test_sf1_inflation_rejects_copies_beyond_embedding_width(monkeypatch, tmp_pa
     with pytest.raises(ValueError, match="embedding width"):
         sr.generate(None)
     assert not (tmp_path / "sf1").exists()
+
+
+_SCRIPT_REF = re.compile(r"scripts/\w+\.py")
+_ROOT_FILE_REF = re.compile(r"(?<![\w/.-])[A-Z][A-Za-z0-9_]*\.(?:json|md)\b")
+
+
+def test_named_scripts_and_root_files_exist():
+    """Every ``scripts/*.py`` path and every root ``*.json``/``*.md`` file
+    named in README.md, DEPLOY.md, QUERIES.md or a Python file outside
+    ``perfbench/`` must exist, so deleting a tool or an artifact also
+    updates whatever points at it. Names the root ``.gitignore`` lists are
+    local outputs (``bench.py`` writes ``BENCH_DETAIL.json``), not
+    committed files."""
+    root = Path(__file__).resolve().parent.parent
+    ignored = set((root / ".gitignore").read_text(encoding="utf-8").split())
+    sources = [root / n for n in ("README.md", "DEPLOY.md", "QUERIES.md")]
+    for path in root.rglob("*.py"):
+        parts = path.relative_to(root).parts
+        if parts[0] != "perfbench" and not any(p.startswith(".") for p in parts):
+            sources.append(path)
+    missing = []
+    for src in sources:
+        text = src.read_text(encoding="utf-8")
+        for name in set(_SCRIPT_REF.findall(text) + _ROOT_FILE_REF.findall(text)):
+            if name not in ignored and not (root / name).exists():
+                missing.append(f"{src.relative_to(root)}: {name}")
+    assert not missing, sorted(missing)

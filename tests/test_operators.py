@@ -521,7 +521,7 @@ def test_multimodal_features_values(spark, sf_dir):
 def test_connected_components_long_chain(spark):
     """Pointer doubling must collapse a 100-node path graph — plain
     neighbor-min propagation would need 99 rounds and the old 32-round
-    cap silently returned wrong labels (ADVICE r1)."""
+    cap silently returned wrong labels."""
     from pyspark.sql import functions as F
 
     from gmall_flink_parent_spark.functions.dedup import connected_components

@@ -64,7 +64,7 @@ BNLJ_ALLOWED = {
 # task, so each entry documents why that input is bounded — never the
 # corpus. Any new head whose plan compiles a global window fails the
 # registry-wide pin below until it is either re-partitioned or added
-# here with its bound (VERDICT r11 "next round" #1).
+# here with its bound.
 GLOBAL_WINDOW_ALLOWED = {
     # Distributed-prefix-sum summary pass: the window orders the
     # PER-PARTITION offset frame (one row per shuffle partition, ≤
@@ -441,7 +441,7 @@ def _no_auto_broadcast(spark):
 
 
 def test_gated_broadcast_hint_follows_the_size_gate(spark, sf_dir):
-    """The scale contract of ``gated_broadcast`` (VERDICT r9 #1): an
+    """The scale contract of ``gated_broadcast``: an
     sf-proportional dim carries a broadcast hint only while its parquet
     footprint fits the gate. With auto-broadcast disabled (so the only
     possible broadcast is the hint itself): under the default gate the
@@ -511,7 +511,7 @@ def test_order_wide_sf_dims_flip_to_shuffle_when_gate_trips(spark, sf_dir, monke
 def test_tripped_gate_shuffle_fallback_is_hash_identical(
     spark, sf_dir, head, monkeypatch
 ):
-    """EXECUTION pin for the tripped broadcast gate (VERDICT r10 #1):
+    """EXECUTION pin for the tripped broadcast gate:
     the flip tests above prove the PLAN changes when the gate trips;
     this proves the shuffle-fallback plan computes the SAME ROWS. Run
     each gated head twice — default gate (dims broadcast) and gate

@@ -1030,7 +1030,7 @@ def test_warc_quarantine_salvages_records_around_injected_dirt(payloads, dirt, p
     assert got_payloads[:pos] == payloads[:pos]
 
 
-# --------------------------- SCD2 / as-of pair (VERDICT r10 stretch #10)
+# --------------------------- SCD2 / as-of pair
 
 scd2_changes_strategy = st.lists(
     st.tuples(
@@ -1334,7 +1334,7 @@ def test_ks_head_matches_exact_python_for_any_multisets(spark, ab, tmp_path_fact
 
 # ------------------------------------------------------------------
 # Chaos property: the store-fence protocol under arbitrary interleaved
-# crash sequences (VERDICT r11 "next round" #8) — the strongest
+# crash sequences — the strongest
 # exactly-once statement available without a broker.
 
 
