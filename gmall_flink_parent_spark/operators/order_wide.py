@@ -30,6 +30,121 @@ from pyspark.sql import functions as F
 from gmall_flink_parent_spark.registry import register
 from gmall_flink_parent_spark.sources.tables import fan_out, gated_broadcast, load_table
 
+_BAND = """
+    o_orderkey = l_orderkey AND
+    l_shipdate >= o_orderdate AND
+    l_shipdate <= o_orderdate + INTERVAL 30 DAYS
+"""
+
+ORDER_COLS = ("o_orderkey", "o_orderdate", "o_orderpriority")
+
+
+def band_join(orders: DataFrame, lineitem: DataFrame, how: str) -> DataFrame:
+    """orders ⋈ lineitem on the order key within the [0, +30 d]
+    ship-date band — the one place the band and its watermarks live.
+
+    Reference: ``OrderWideApp.java:134-141`` joins order_info ⋈
+    order_detail within a ±5 ms band under 3 s watermarks (W5). The
+    watermark belongs to the band it bounds (VLDB 2021, PAPERS.md), so
+    both sides are watermarked here for batch and streaming frames
+    alike. On a streaming frame Spark evicts join state once the
+    watermark proves the band can no longer match; on a batch frame the
+    optimizer drops the watermark (``EliminateEventTimeWatermark``) and
+    the join is the key equi-join with the band as a post-join residual
+    — shuffle only on the key, no cross product.
+    """
+    o = orders.withWatermark("o_orderdate", "3 seconds")
+    d = lineitem.withWatermark("l_shipdate", "3 seconds")
+    return o.join(d, F.expr(_BAND), how)
+
+
+def _detail_rows(joined: DataFrame, *keys: str) -> DataFrame:
+    return joined.select(
+        *keys,
+        "l_linenumber",
+        "o_orderdate",
+        "l_shipdate",
+        F.col("l_extendedprice").cast("decimal(18,2)").cast("double").alias("extended_price"),
+    )
+
+
+def interval_join_frame(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
+    """INNER band join: one row per in-band (order, detail) pair. Batch
+    head: ``order_detail_interval_join``."""
+    return _detail_rows(band_join(orders, lineitem, "inner"), "o_orderkey")
+
+
+def interval_join_outer_frame(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
+    """LEFT OUTER band join: the inner rows plus one null-padded row per
+    order whose band holds no detail. Batch head:
+    ``order_detail_interval_join_outer``."""
+    return _detail_rows(band_join(orders, lineitem, "left"), "o_orderkey")
+
+
+def interval_join_full_frame(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
+    """FULL OUTER band join: the outer rows plus one null-order row per
+    detail no order's band claims; both keys kept. Batch head:
+    ``order_detail_interval_join_full``."""
+    return _detail_rows(band_join(orders, lineitem, "full"), "o_orderkey", "l_orderkey")
+
+
+def semi_join_frame(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
+    """LEFT SEMI band join: each order with at least one in-band detail,
+    once, order columns only. Batch head: ``order_detail_semi_join``."""
+    return band_join(orders, lineitem, "left_semi").select(*ORDER_COLS)
+
+
+def enrich(wide: DataFrame, spark: SparkSession, sf_dir: str, key: str, *extra) -> DataFrame:
+    """The OrderWide dim enrichment chain over a joined orders ×
+    lineitem frame: five size-gated broadcast dims, five LEFT joins and
+    the wide output columns, led by ``key`` and ``l_linenumber`` and
+    followed by ``extra``.
+
+    Left joins keep the reference's pass-through-on-missing-dim
+    behavior (``app/func/DimAsyncFunction.java:40-55`` never drops the
+    row). On a streaming ``wide`` these are stream-static joins: each
+    micro-batch hash-joins against the dim snapshot, so the dims hold
+    no state.
+    """
+    # nation/region are bounded dims (always broadcast); customer/part/
+    # supplier grow with the fact data, so their hints ride the parquet
+    # size gate — at a scale where they stop fitting, the hint drops and
+    # AQE picks the strategy instead of being overridden into an OOM.
+    customer = gated_broadcast(spark, sf_dir, "customer")
+    nation = gated_broadcast(spark, sf_dir, "nation")
+    region = gated_broadcast(spark, sf_dir, "region")
+    part = gated_broadcast(spark, sf_dir, "part")
+    supplier = gated_broadcast(spark, sf_dir, "supplier")
+    return (
+        wide.join(customer, F.col("o_custkey") == F.col("c_custkey"), "left")
+        .join(nation, F.col("c_nationkey") == F.col("n_nationkey"), "left")
+        .join(region, F.col("n_regionkey") == F.col("r_regionkey"), "left")
+        .join(part, F.col("l_partkey") == F.col("p_partkey"), "left")
+        .join(supplier, F.col("l_suppkey") == F.col("s_suppkey"), "left")
+        .select(
+            key,
+            "l_linenumber",
+            F.date_format("o_orderdate", "yyyyMMdd").alias("order_ymd"),
+            "o_orderpriority",
+            "c_custkey",
+            "c_name",
+            "c_mktsegment",
+            F.col("n_name").alias("nation_name"),
+            F.col("r_name").alias("region_name"),
+            F.col("p_name").alias("part_name"),
+            F.col("s_name").alias("supplier_name"),
+            # decimal casts fix the money scale; DOUBLE only at the output edge
+            F.col("l_quantity").cast("decimal(18,2)").cast("double").alias("quantity"),
+            (F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")))
+            .cast("decimal(18,4)")
+            .cast("double")
+            .alias("revenue"),
+            F.col("o_totalprice").cast("decimal(18,2)").cast("double").alias("total_price"),
+            *extra,
+        )
+    )
+
+
 ORDER_WIDE_ORACLE = """
 SELECT l.l_orderkey,
        l.l_linenumber,
@@ -76,46 +191,14 @@ def order_wide_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     lineitem = fan_out(spark, load_table(spark, sf_dir, "lineitem"))
     orders = load_table(spark, sf_dir, "orders")
-    # nation/region are bounded dims (always broadcast); customer/part/
-    # supplier grow with the fact data, so their hints ride the parquet
-    # size gate — at a scale where they stop fitting, the hint drops and
-    # AQE picks the strategy instead of being overridden into an OOM.
-    customer = gated_broadcast(spark, sf_dir, "customer")
-    nation = gated_broadcast(spark, sf_dir, "nation")
-    region = gated_broadcast(spark, sf_dir, "region")
-    part = gated_broadcast(spark, sf_dir, "part")
-    supplier = gated_broadcast(spark, sf_dir, "supplier")
-
-    return (
-        lineitem.join(orders, lineitem.l_orderkey == orders.o_orderkey, "inner")
-        .join(customer, orders.o_custkey == customer.c_custkey, "left")
-        .join(nation, customer.c_nationkey == nation.n_nationkey, "left")
-        .join(region, nation.n_regionkey == region.r_regionkey, "left")
-        .join(part, lineitem.l_partkey == part.p_partkey, "left")
-        .join(supplier, lineitem.l_suppkey == supplier.s_suppkey, "left")
-        .select(
-            "l_orderkey",
-            "l_linenumber",
-            F.date_format("o_orderdate", "yyyyMMdd").alias("order_ymd"),
-            "o_orderpriority",
-            "c_custkey",
-            "c_name",
-            "c_mktsegment",
-            F.col("n_name").alias("nation_name"),
-            F.col("r_name").alias("region_name"),
-            F.col("p_name").alias("part_name"),
-            F.col("s_name").alias("supplier_name"),
-            # decimal casts fix the money scale; DOUBLE only at the output edge
-            F.col("l_quantity").cast("decimal(18,2)").cast("double").alias("quantity"),
-            (F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")))
-            .cast("decimal(18,4)")
-            .cast("double")
-            .alias("revenue"),
-            F.col("o_totalprice").cast("decimal(18,2)").cast("double").alias("total_price"),
-            F.datediff(F.lit("2026-01-01").cast("date"), F.to_date("o_orderdate"))
-            .cast("int")
-            .alias("order_age_days"),
-        )
+    return enrich(
+        lineitem.join(orders, lineitem.l_orderkey == orders.o_orderkey, "inner"),
+        spark,
+        sf_dir,
+        "l_orderkey",
+        F.datediff(F.lit("2026-01-01").cast("date"), F.to_date("o_orderdate"))
+        .cast("int")
+        .alias("order_age_days"),
     )
 
 
@@ -142,22 +225,12 @@ def order_detail_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch analog uses a [0, +30 d] ship-date band on the same order key.
     Physically this is the equi-join on the key with the band as a
     post-join residual filter — no cross product, shuffle only on the
-    key, so it scales like any equi-join. The streaming variant (with
-    watermarks bounding state) lives in ``streaming/jobs.py``.
+    key, so it scales like any equi-join. The same
+    ``interval_join_frame`` runs on streams, where the watermarks bound
+    the join state.
     """
-    orders = load_table(spark, sf_dir, "orders")
-    lineitem = load_table(spark, sf_dir, "lineitem")
-    cond = (
-        (orders.o_orderkey == lineitem.l_orderkey)
-        & (lineitem.l_shipdate >= orders.o_orderdate)
-        & (lineitem.l_shipdate <= F.col("o_orderdate") + F.expr("INTERVAL 30 DAYS"))
-    )
-    return orders.join(lineitem, cond, "inner").select(
-        "o_orderkey",
-        "l_linenumber",
-        "o_orderdate",
-        "l_shipdate",
-        F.col("l_extendedprice").cast("decimal(18,2)").cast("double").alias("extended_price"),
+    return interval_join_frame(
+        load_table(spark, sf_dir, "orders"), load_table(spark, sf_dir, "lineitem")
     )
 
 
@@ -187,21 +260,13 @@ def order_detail_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     padding. Physically a LEFT SEMI equi-join with the band residual:
     the probe side short-circuits on first match, so no detail columns
     are materialized and the output is bounded by |orders| regardless
-    of details-per-order. Streaming twin:
-    ``streaming/jobs.py::order_wide_semi_stream`` — Spark's
-    stream-stream left-semi join under the same watermarks (state
+    of details-per-order. On streams the same ``semi_join_frame`` is
+    Spark's stream-stream left-semi join under the band's watermarks (state
     drops an order as soon as one in-band match commits, the cheapest
     state profile of the three join forms).
     """
-    orders = load_table(spark, sf_dir, "orders")
-    lineitem = load_table(spark, sf_dir, "lineitem")
-    cond = (
-        (orders.o_orderkey == lineitem.l_orderkey)
-        & (lineitem.l_shipdate >= orders.o_orderdate)
-        & (lineitem.l_shipdate <= F.col("o_orderdate") + F.expr("INTERVAL 30 DAYS"))
-    )
-    return orders.join(lineitem, cond, "left_semi").select(
-        "o_orderkey", "o_orderdate", "o_orderpriority"
+    return semi_join_frame(
+        load_table(spark, sf_dir, "orders"), load_table(spark, sf_dir, "lineitem")
     )
 
 
@@ -237,16 +302,9 @@ def order_detail_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrive — the exact Flink timeout-side semantics, expressed as a
     built-in join instead of custom timers.
     """
-    orders = load_table(spark, sf_dir, "orders")
-    lineitem = load_table(spark, sf_dir, "lineitem")
-    cond = (
-        (orders.o_orderkey == lineitem.l_orderkey)
-        & (lineitem.l_shipdate >= orders.o_orderdate)
-        & (lineitem.l_shipdate <= F.col("o_orderdate") + F.expr("INTERVAL 30 DAYS"))
-    )
-    return orders.join(lineitem, cond, "left_anti").select(
-        "o_orderkey", "o_orderdate", "o_orderpriority"
-    )
+    return band_join(
+        load_table(spark, sf_dir, "orders"), load_table(spark, sf_dir, "lineitem"), "left_anti"
+    ).select(*ORDER_COLS)
 
 
 FULL_INTERVAL_JOIN_ORACLE = """
@@ -279,25 +337,12 @@ def order_detail_interval_join_full(spark: SparkSession, sf_dir: str) -> DataFra
     late-data audit reads, where either null region is a data-quality
     finding. Both key columns are kept (they differ exactly on the
     preserved rows). Physically still the equi-join with the band as a
-    residual, null-padding both sides; Spark's streaming engine also
-    supports this form with watermarks (full-outer stream-stream
-    joins), emitting each preserved row at watermark closure — the
-    batch head is the oracle-checked twin of that plan.
+    residual, null-padding both sides. On streams the same
+    ``interval_join_full_frame`` is a full-outer stream-stream join,
+    emitting each preserved row at watermark closure.
     """
-    orders = load_table(spark, sf_dir, "orders")
-    lineitem = load_table(spark, sf_dir, "lineitem")
-    cond = (
-        (orders.o_orderkey == lineitem.l_orderkey)
-        & (lineitem.l_shipdate >= orders.o_orderdate)
-        & (lineitem.l_shipdate <= F.col("o_orderdate") + F.expr("INTERVAL 30 DAYS"))
-    )
-    return orders.join(lineitem, cond, "full").select(
-        "o_orderkey",
-        "l_orderkey",
-        "l_linenumber",
-        "o_orderdate",
-        "l_shipdate",
-        F.col("l_extendedprice").cast("decimal(18,2)").cast("double").alias("extended_price"),
+    return interval_join_full_frame(
+        load_table(spark, sf_dir, "orders"), load_table(spark, sf_dir, "lineitem")
     )
 
 
@@ -378,7 +423,6 @@ LEFT JOIN lineitem l
     "order_detail_interval_join_outer",
     oracle=OUTER_INTERVAL_JOIN_ORACLE,
     tags=("J1", "W5", "outer"),
-    # promoted into the driver window in the round-10 rotation
 )
 def order_detail_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT OUTER event-time band join — the unmatched-order side the
@@ -390,24 +434,13 @@ def order_detail_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFr
 
     Physically identical to the inner head — equi-join on the key, the
     band as a residual — plus null-padding for the preserved side;
-    still shuffle-on-key only. The streaming twin
-    (``order_wide_outer_stream``) emits the null row once the
+    still shuffle-on-key only. On streams the same
+    ``interval_join_outer_frame`` emits the null row once the
     watermark proves the band can no longer match — Flink's interval
     join cannot do outer at all (SURVEY §2.5 notes the reference
     drops unmatched rows), so this is a capability the Spark engine
     ADDS over the reference.
     """
-    orders = load_table(spark, sf_dir, "orders")
-    lineitem = load_table(spark, sf_dir, "lineitem")
-    cond = (
-        (orders.o_orderkey == lineitem.l_orderkey)
-        & (lineitem.l_shipdate >= orders.o_orderdate)
-        & (lineitem.l_shipdate <= F.col("o_orderdate") + F.expr("INTERVAL 30 DAYS"))
-    )
-    return orders.join(lineitem, cond, "left").select(
-        "o_orderkey",
-        "l_linenumber",
-        "o_orderdate",
-        "l_shipdate",
-        F.col("l_extendedprice").cast("decimal(18,2)").cast("double").alias("extended_price"),
+    return interval_join_outer_frame(
+        load_table(spark, sf_dir, "orders"), load_table(spark, sf_dir, "lineitem")
     )

@@ -113,7 +113,13 @@ def sliding_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Streaming with a watermark. The oracle reproduces Spark's
     epoch-aligned window assignment with an explicit 2-element unnest.
     """
-    events = load_table(spark, sf_dir, "events")
+    return sliding_stats_frame(load_table(spark, sf_dir, "events"))
+
+
+def sliding_stats_frame(events: DataFrame) -> DataFrame:
+    """The hopping-window aggregate of ``sliding_stats`` over any events
+    frame; ``streaming/jobs.py::sliding_stats_stream`` runs it on a
+    watermarked stream."""
     return (
         events.groupBy(F.window("ts", "1 hour", "30 minutes"), "event_type")
         .agg(

@@ -13,11 +13,13 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from gmall_flink_parent_spark.operators.order_wide import ORDER_COLS, band_join, enrich
 from gmall_flink_parent_spark.operators.routing import (
     ROUTING_CONFIG,
     ROUTING_CONFIG_SCHEMA,
     route,
 )
+from gmall_flink_parent_spark.operators.windows import sliding_stats_frame
 from gmall_flink_parent_spark.registry import cached, query_scope, scoped_persist
 # Every job below lands its rows through streaming.store (the one
 # ingest-store module: batch_store_job / land_batch / start_batches);
@@ -307,21 +309,7 @@ def sliding_stats_stream(events: DataFrame) -> DataFrame:
     passes its end — matched against the batch query on closed windows
     in ``tests/test_streaming.py``.
     """
-    return (
-        events.withWatermark("ts", "1 minute")
-        .groupBy(F.window("ts", "1 hour", "30 minutes"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
-        )
-        .select(
-            F.col("window.start").alias("win_start"),
-            F.col("window.end").alias("win_end"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
+    return sliding_stats_frame(events.withWatermark("ts", "1 minute"))
 
 
 def sessionize_stream(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
@@ -343,91 +331,6 @@ def sessionize_stream(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
     from gmall_flink_parent_spark.operators.windows import session_stats_frame
 
     return session_stats_frame(events.withWatermark("ts", "1 minute"), gap)
-
-
-def order_wide_stream(
-    orders: DataFrame, details: DataFrame, salt: int = 1
-) -> DataFrame:
-    """EP3 (OrderWideApp): stream-stream interval join with watermarks.
-
-    Reference: ±5 ms band at ``OrderWideApp.java:134-141`` with 3 s
-    watermarks (W5). Here: details join orders on the key within a
-    [0, +30 d] event-time band; both sides watermarked so join state is
-    evicted once the band can no longer match (Spark's built-in interval
-    join state cleanup — the same mechanism Flink uses).
-
-    ``salt`` (default 1 = the plain plan) is the stream-side skew
-    valve (SCALE.md round-10 note): AQE's skew split only covers the
-    BATCH shuffle path, so a hot order key in the streaming join
-    otherwise lands in one state-store partition. With ``salt = n``
-    the detail side tags each row with a deterministic salt in [0, n)
-    (hash of its line number — any assignment is correct) and the
-    order side replicates each row across ALL n salts, so the join key
-    becomes (orderkey, salt) and a hot key's state + matching spread
-    over n partitions. Each detail row still meets exactly one copy of
-    its order (the one sharing its salt), so the result is
-    row-identical to salt=1 — pinned by the salt=4 parity test. Cost:
-    order-side state × n (the smaller side), detail side unchanged.
-    """
-    o = orders.withWatermark("o_orderdate", "3 seconds")
-    d = details.withWatermark("l_shipdate", "3 seconds")
-    if salt > 1:
-        o = o.withColumn(
-            "o_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
-        )
-        d = d.withColumn("l_salt", F.pmod(F.hash("l_linenumber"), F.lit(salt)))
-        join_cond = F.expr(
-            """
-            o_orderkey = l_orderkey AND o_salt = l_salt AND
-            l_shipdate >= o_orderdate AND
-            l_shipdate <= o_orderdate + INTERVAL 30 DAYS
-            """
-        )
-    else:
-        join_cond = F.expr(
-            """
-            o_orderkey = l_orderkey AND
-            l_shipdate >= o_orderdate AND
-            l_shipdate <= o_orderdate + INTERVAL 30 DAYS
-            """
-        )
-    return o.join(
-        d,
-        join_cond,
-        "inner",
-    ).select(
-        "o_orderkey",
-        "l_linenumber",
-        "o_orderdate",
-        "l_shipdate",
-        F.col("l_extendedprice").cast("decimal(18,2)").cast("double").alias("extended_price"),
-    )
-
-
-def order_wide_semi_stream(orders: DataFrame, details: DataFrame) -> DataFrame:
-    """Stream-stream LEFT SEMI interval join — the third join form of
-    EP3 next to the inner and left-outer twins: each order is emitted
-    AT MOST ONCE, as soon as one in-band detail commits, with no
-    detail columns materialized. The cheapest state profile of the
-    three: a matched order leaves the state store immediately (nothing
-    further can change its emitted row), while the inner form must
-    buffer for every future fan-out match and the outer form must hold
-    unmatched rows to the watermark horizon. Batch twin (oracle-backed
-    via EXISTS): ``operators/order_wide.py::order_detail_semi_join``.
-    """
-    o = orders.withWatermark("o_orderdate", "3 seconds")
-    d = details.withWatermark("l_shipdate", "3 seconds")
-    return o.join(
-        d,
-        F.expr(
-            """
-            o_orderkey = l_orderkey AND
-            l_shipdate >= o_orderdate AND
-            l_shipdate <= o_orderdate + INTERVAL 30 DAYS
-            """
-        ),
-        "left_semi",
-    ).select("o_orderkey", "o_orderdate", "o_orderpriority")
 
 
 def order_wide_anti_stream(orders: DataFrame, details: DataFrame) -> DataFrame:
@@ -458,53 +361,10 @@ def order_wide_anti_stream(orders: DataFrame, details: DataFrame) -> DataFrame:
     Batch twin (oracle-backed via NOT EXISTS):
     ``operators/order_wide.py::order_detail_anti_join``.
     """
-    o = orders.withWatermark("o_orderdate", "3 seconds")
-    d = details.withWatermark("l_shipdate", "3 seconds")
     return (
-        o.join(
-            d,
-            F.expr(
-                """
-                o_orderkey = l_orderkey AND
-                l_shipdate >= o_orderdate AND
-                l_shipdate <= o_orderdate + INTERVAL 30 DAYS
-                """
-            ),
-            "leftOuter",
-        )
+        band_join(orders, details, "left")
         .filter(F.col("l_orderkey").isNull())
-        .select("o_orderkey", "o_orderdate", "o_orderpriority")
-    )
-
-
-def order_wide_full_stream(orders: DataFrame, details: DataFrame) -> DataFrame:
-    """Stream-stream FULL OUTER interval join — both preserved sides in
-    one stream: never-shipped orders emit with null detail columns and
-    unclaimed shipments emit with null order columns, each exactly once
-    when the watermark closes its band. Same state bound as the inner
-    form (both sides buffer to the band horizon); the preserved
-    emissions ride the same cleanup. Batch twin (oracle-backed):
-    ``operators/order_wide.py::order_detail_interval_join_full``.
-    """
-    o = orders.withWatermark("o_orderdate", "3 seconds")
-    d = details.withWatermark("l_shipdate", "3 seconds")
-    return o.join(
-        d,
-        F.expr(
-            """
-            o_orderkey = l_orderkey AND
-            l_shipdate >= o_orderdate AND
-            l_shipdate <= o_orderdate + INTERVAL 30 DAYS
-            """
-        ),
-        "fullOuter",
-    ).select(
-        "o_orderkey",
-        "l_orderkey",
-        "l_linenumber",
-        "o_orderdate",
-        "l_shipdate",
-        F.col("l_extendedprice").cast("decimal(18,2)").cast("double").alias("extended_price"),
+        .select(*ORDER_COLS)
     )
 
 
@@ -833,68 +693,19 @@ def order_wide_enriched_stream(
     enrichment inside the streaming plan, exactly where the reference
     does it (``OrderWideApp.java:134-141`` joins, then ``:150-214``
     enriches the joined stream with six dims via async lookups before
-    the sink). ``order_wide_stream`` is the join stage alone; this
-    composes the stage with stream-static LEFT joins against the same
-    size-gated dim frames the batch head uses.
+    the sink). ``operators/order_wide.py::interval_join_frame`` is the
+    join stage alone; this composes the same ``band_join`` with the
+    ``enrich`` chain the batch head ``order_wide_enriched`` uses.
 
-    Stream-static joins need no state for the static side: each
-    micro-batch hash-joins against the dim snapshot (broadcast under
-    the gate), so the only stateful operator remains the watermarked
-    interval join — state identical to ``order_wide_stream``. Left
-    joins keep the reference's pass-through-on-missing-dim behavior
-    (``DimAsyncFunction.java:40-55``). Parity: pinned row-identical to
+    The dim joins are stream-static and need no state for the static
+    side: each micro-batch hash-joins against the dim snapshot
+    (broadcast under the gate), so the only stateful operator remains
+    the watermarked interval join — state identical to
+    ``interval_join_frame`` on the same streams. Parity: pinned row-identical to
     the SAME composition over batch frames, and spot-pinned against
     ``order_wide_enriched`` restricted to in-band rows.
     """
-    from gmall_flink_parent_spark.sources.tables import gated_broadcast
-
-    o = orders.withWatermark("o_orderdate", "3 seconds")
-    d = details.withWatermark("l_shipdate", "3 seconds")
-    wide = o.join(
-        d,
-        F.expr(
-            """
-            o_orderkey = l_orderkey AND
-            l_shipdate >= o_orderdate AND
-            l_shipdate <= o_orderdate + INTERVAL 30 DAYS
-            """
-        ),
-        "inner",
-    )
-    customer = gated_broadcast(spark, sf_dir, "customer")
-    nation = gated_broadcast(spark, sf_dir, "nation")
-    region = gated_broadcast(spark, sf_dir, "region")
-    part = gated_broadcast(spark, sf_dir, "part")
-    supplier = gated_broadcast(spark, sf_dir, "supplier")
-    return (
-        wide.join(customer, F.col("o_custkey") == F.col("c_custkey"), "left")
-        .join(nation, F.col("c_nationkey") == F.col("n_nationkey"), "left")
-        .join(region, F.col("n_regionkey") == F.col("r_regionkey"), "left")
-        .join(part, F.col("l_partkey") == F.col("p_partkey"), "left")
-        .join(supplier, F.col("l_suppkey") == F.col("s_suppkey"), "left")
-        .select(
-            "o_orderkey",
-            "l_linenumber",
-            F.date_format("o_orderdate", "yyyyMMdd").alias("order_ymd"),
-            "o_orderpriority",
-            "c_custkey",
-            "c_name",
-            "c_mktsegment",
-            F.col("n_name").alias("nation_name"),
-            F.col("r_name").alias("region_name"),
-            F.col("p_name").alias("part_name"),
-            F.col("s_name").alias("supplier_name"),
-            F.col("l_quantity").cast("decimal(18,2)").cast("double").alias("quantity"),
-            (F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")))
-            .cast("decimal(18,4)")
-            .cast("double")
-            .alias("revenue"),
-            F.col("o_totalprice")
-            .cast("decimal(18,2)")
-            .cast("double")
-            .alias("total_price"),
-        )
-    )
+    return enrich(band_join(orders, details, "inner"), spark, sf_dir, "o_orderkey")
 
 
 def pricing_summary_store_job(lineitem: DataFrame, store_path: str, checkpoint_dir: str):
@@ -2814,36 +2625,4 @@ def merge_session_fragments(frags: DataFrame) -> DataFrame:
         .select(
             "user_id", "session_start", "session_close", "n_events", "session_value"
         )
-    )
-
-
-def order_wide_outer_stream(orders: DataFrame, details: DataFrame) -> DataFrame:
-    """Stream-stream LEFT OUTER interval join — the capability the
-    reference's Flink interval join lacks (it silently drops unmatched
-    orders): an order whose [0, +30 d] band closes with no detail
-    emits ONE null-padded row as soon as the watermark proves no match
-    can still arrive. Same band, same watermarks, same output schema
-    as ``order_wide_stream``; the outer row is the never-shipped alert
-    signal. State bound is identical to the inner join (both sides
-    buffered until the watermark clears the band) — the null emission
-    costs nothing extra, it rides the same state cleanup.
-    """
-    o = orders.withWatermark("o_orderdate", "3 seconds")
-    d = details.withWatermark("l_shipdate", "3 seconds")
-    return o.join(
-        d,
-        F.expr(
-            """
-            o_orderkey = l_orderkey AND
-            l_shipdate >= o_orderdate AND
-            l_shipdate <= o_orderdate + INTERVAL 30 DAYS
-            """
-        ),
-        "leftOuter",
-    ).select(
-        "o_orderkey",
-        "l_linenumber",
-        "o_orderdate",
-        "l_shipdate",
-        F.col("l_extendedprice").cast("decimal(18,2)").cast("double").alias("extended_price"),
     )

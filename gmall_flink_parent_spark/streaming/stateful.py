@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-BOUNCE_WINDOW_US = 30 * 60 * 1_000_000  # mirrors operators/bounce.py
+from gmall_flink_parent_spark.operators.bounce import BOUNCE_WINDOW_US
 
 
 def _repair_is_new(

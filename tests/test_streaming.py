@@ -12,12 +12,17 @@ import pytest
 from pyspark.sql import functions as F
 
 from gmall_flink_parent_spark import plans
+from gmall_flink_parent_spark.operators.order_wide import (
+    interval_join_frame,
+    interval_join_full_frame,
+    interval_join_outer_frame,
+    semi_join_frame,
+)
 from gmall_flink_parent_spark.streaming.sources import events_stream
 from gmall_flink_parent_spark.streaming import stateful
 from gmall_flink_parent_spark.streaming.jobs import (
     hourly_stats_stream,
     log_split_job,
-    order_wide_stream,
     routing_job,
     sessionize_stream,
     sliding_stats_stream,
@@ -899,6 +904,25 @@ def test_sessionize_stream_matches_batch_closed_sessions(spark, sf_dir):
     assert got <= want_all, "stream emitted sessions batch doesn't have"
 
 
+def _order_streams(spark, sf_dir):
+    """orders and lineitem of ``sf_dir`` as one-file streams."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    orders = spark.readStream.schema(
+        "o_orderkey long, o_custkey long, o_orderstatus string, o_totalprice double, "
+        "o_orderdate timestamp_ntz, o_orderpriority string"
+    ).option("pathGlobFilter", "orders.parquet").parquet(sf_dir).withColumn(
+        "o_orderdate", F.col("o_orderdate").cast("timestamp")
+    )
+    details = spark.readStream.schema(
+        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int, "
+        "l_quantity double, l_extendedprice double, l_discount double, l_tax double, "
+        "l_returnflag string, l_linestatus string, l_shipdate timestamp_ntz"
+    ).option("pathGlobFilter", "lineitem.parquet").parquet(sf_dir).withColumn(
+        "l_shipdate", F.col("l_shipdate").cast("timestamp")
+    )
+    return orders, details
+
+
 def _split_order_streams(spark, sf_dir, tmp_path):
     """orders and lineitem as two-file streams, each split at its median
     event time, so the interval join's state crosses a micro-batch
@@ -921,23 +945,32 @@ def _split_order_streams(spark, sf_dir, tmp_path):
     )
 
 
+def test_order_wide_band_lives_only_in_order_wide_module():
+    """The OrderWide band and its watermarks are spelled once, in
+    ``operators/order_wide.py::band_join``: every batch head and stream
+    form of the join calls it, so the forms cannot drift apart."""
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "gmall_flink_parent_spark"
+    needles = (
+        "INTERVAL 30 DAYS",
+        'withWatermark("o_orderdate"',
+        'withWatermark("l_shipdate"',
+    )
+    found = {
+        (p.relative_to(pkg).as_posix(), needle, text.count(needle))
+        for p in pkg.rglob("*.py")
+        for text in (p.read_text(encoding="utf-8"),)
+        for needle in needles
+        if needle in text
+    }
+    assert found == {("operators/order_wide.py", needle, 1) for needle in needles}
+
+
 def test_order_wide_stream_matches_batch_interval_join(spark, sf_dir, tmp_path):
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    orders = spark.readStream.schema(
-        "o_orderkey long, o_custkey long, o_orderstatus string, o_totalprice double, "
-        "o_orderdate timestamp_ntz, o_orderpriority string"
-    ).option("pathGlobFilter", "orders.parquet").parquet(sf_dir).withColumn(
-        "o_orderdate", F.col("o_orderdate").cast("timestamp")
-    )
-    details = spark.readStream.schema(
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int, "
-        "l_quantity double, l_extendedprice double, l_discount double, l_tax double, "
-        "l_returnflag string, l_linestatus string, l_shipdate timestamp_ntz"
-    ).option("pathGlobFilter", "lineitem.parquet").parquet(sf_dir).withColumn(
-        "l_shipdate", F.col("l_shipdate").cast("timestamp")
-    )
+    orders, details = _order_streams(spark, sf_dir)
     out, q = _run_to_memory(
-        order_wide_stream(orders, details), spark, "ow_out", with_query=True
+        interval_join_frame(orders, details), spark, "ow_out", with_query=True
     )
     progress = q.lastProgress
     batch = plans.query_map()["order_detail_interval_join"](spark, sf_dir)
@@ -956,7 +989,7 @@ def test_order_wide_stream_matches_batch_interval_join(spark, sf_dir, tmp_path):
     assert 0 < state_rows <= n_orders + n_details, (state_rows, n_orders, n_details)
     # the same rows when each side arrives as two in-order files
     out, q = _run_to_memory(
-        order_wide_stream(*_split_order_streams(spark, sf_dir, tmp_path)),
+        interval_join_frame(*_split_order_streams(spark, sf_dir, tmp_path)),
         spark,
         "ow_split_out",
         with_query=True,
@@ -965,62 +998,23 @@ def test_order_wide_stream_matches_batch_interval_join(spark, sf_dir, tmp_path):
     assert _rows(out, cols) == _rows(batch, cols)
 
 
-def test_order_wide_stream_salted_parity(spark, sf_dir):
-    """The salt valve must be result-invariant: with
-    salt=4 the order side replicates ×4 and the join key widens to
-    (orderkey, salt), spreading a hot key's state over 4 partitions —
-    and the output rows must be IDENTICAL to the unsalted plan, since
-    each detail meets exactly the one order copy sharing its salt.
-    Compared against the batch interval join (the salt=1 path's own
-    parity anchor), so all three surfaces agree."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    orders = spark.readStream.schema(
-        "o_orderkey long, o_custkey long, o_orderstatus string, o_totalprice double, "
-        "o_orderdate timestamp_ntz, o_orderpriority string"
-    ).option("pathGlobFilter", "orders.parquet").parquet(sf_dir).withColumn(
-        "o_orderdate", F.col("o_orderdate").cast("timestamp")
-    )
-    details = spark.readStream.schema(
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int, "
-        "l_quantity double, l_extendedprice double, l_discount double, l_tax double, "
-        "l_returnflag string, l_linestatus string, l_shipdate timestamp_ntz"
-    ).option("pathGlobFilter", "lineitem.parquet").parquet(sf_dir).withColumn(
-        "l_shipdate", F.col("l_shipdate").cast("timestamp")
-    )
-    out = _run_to_memory(
-        order_wide_stream(orders, details, salt=4), spark, "ow_salted_out"
-    )
-    batch = plans.query_map()["order_detail_interval_join"](spark, sf_dir)
-    cols = ["o_orderkey", "l_linenumber", "o_orderdate", "l_shipdate", "extended_price"]
-    assert _rows(out, cols) == _rows(batch, cols)
-
-
 def test_order_wide_enriched_stream_matches_batch_composition(spark, sf_dir, tmp_path):
     """Full EP3 in one stream (interval join + 6-way dim enrichment,
     the composition OrderWideApp runs before its sink) must equal the
     SAME band + enrichment computed in batch — written out here as an
     independent expression over the static tables, so a bug in the
-    shared streaming head can't hide in its own reflection."""
+    shared streaming head can't hide in its own reflection.
+
+    Also pins the Spark jobs one micro-batch costs, no-data batches
+    included: six, the five dim broadcasts and the sink write."""
     from gmall_flink_parent_spark.streaming.jobs import order_wide_enriched_stream
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    orders = spark.readStream.schema(
-        "o_orderkey long, o_custkey long, o_orderstatus string, o_totalprice double, "
-        "o_orderdate timestamp_ntz, o_orderpriority string"
-    ).option("pathGlobFilter", "orders.parquet").parquet(sf_dir).withColumn(
-        "o_orderdate", F.col("o_orderdate").cast("timestamp")
-    )
-    details = spark.readStream.schema(
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int, "
-        "l_quantity double, l_extendedprice double, l_discount double, l_tax double, "
-        "l_returnflag string, l_linestatus string, l_shipdate timestamp_ntz"
-    ).option("pathGlobFilter", "lineitem.parquet").parquet(sf_dir).withColumn(
-        "l_shipdate", F.col("l_shipdate").cast("timestamp")
-    )
-    out = _run_to_memory(
+    orders, details = _order_streams(spark, sf_dir)
+    out, first = _run_to_memory(
         order_wide_enriched_stream(orders, details, spark, sf_dir),
         spark,
         "owe_stream_out",
+        with_query=True,
     )
     o = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
@@ -1073,6 +1067,12 @@ def test_order_wide_enriched_stream_matches_batch_composition(spark, sf_dir, tmp
     )
     assert _data_batches(q) >= 2
     assert _rows(out, cols) == _rows(want, cols)
+    tracker = spark.sparkContext.statusTracker()
+    for run in (first, q):
+        jobs = tracker.getJobIdsForGroup(str(run.runId))
+        assert 0 < len(jobs) <= 6 * len(run.recentProgress), (
+            len(jobs), len(run.recentProgress)
+        )
 
 
 def _two_file_stream(spark, tmp_path, df, split_col, schema, subdir="in"):
@@ -4312,8 +4312,6 @@ def test_order_wide_outer_stream_emits_null_rows_for_closed_bands(spark, sf_dir,
     import os
     import time
 
-    from gmall_flink_parent_spark.streaming.jobs import order_wide_outer_stream
-
     o_base = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate"
     )
@@ -4358,7 +4356,7 @@ def test_order_wide_outer_stream_emits_null_rows_for_closed_bands(spark, sf_dir,
         .parquet(str(tmp_path / "l"))
     )
     out, q = _run_to_memory(
-        order_wide_outer_stream(orders, details), spark, "owo_out", with_query=True
+        interval_join_outer_frame(orders, details), spark, "owo_out", with_query=True
     )
     cols = ["o_orderkey", "l_linenumber", "o_orderdate", "l_shipdate", "extended_price"]
     got = sorted(r for r in _rows(out, cols) if r[0] >= 0)  # drop sentinels
@@ -4748,8 +4746,6 @@ def test_interval_join_drops_rows_behind_the_watermark(spark, tmp_path):
 
     import pandas as pd
 
-    from gmall_flink_parent_spark.streaming.jobs import order_wide_stream
-
     base = pd.Timestamp("2026-01-01")
     far = base + pd.Timedelta(days=100)
 
@@ -4806,7 +4802,7 @@ def test_interval_join_drops_rows_behind_the_watermark(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(str(tmp_path / "details"))
     )
-    out = _run_to_memory(order_wide_stream(orders, details), spark, "late_band_out")
+    out = _run_to_memory(interval_join_frame(orders, details), spark, "late_band_out")
     got = sorted((r["o_orderkey"], r["l_linenumber"]) for r in out.collect())
     # order 2's three details join; order 1's late detail never appears
     assert got == [(2, 1), (2, 2), (2, 3)], got
@@ -5005,24 +5001,9 @@ def test_order_wide_semi_stream_matches_batch_semi_join(spark, sf_dir):
     batch EXISTS head's rows (each qualifying order once, order
     columns only) — the third join form next to the inner/outer
     parity pins, with the cheapest state profile of the three."""
-    from gmall_flink_parent_spark.streaming.jobs import order_wide_semi_stream
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    orders = spark.readStream.schema(
-        "o_orderkey long, o_custkey long, o_orderstatus string, o_totalprice double, "
-        "o_orderdate timestamp_ntz, o_orderpriority string"
-    ).option("pathGlobFilter", "orders.parquet").parquet(sf_dir).withColumn(
-        "o_orderdate", F.col("o_orderdate").cast("timestamp")
-    )
-    details = spark.readStream.schema(
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int, "
-        "l_quantity double, l_extendedprice double, l_discount double, l_tax double, "
-        "l_returnflag string, l_linestatus string, l_shipdate timestamp_ntz"
-    ).option("pathGlobFilter", "lineitem.parquet").parquet(sf_dir).withColumn(
-        "l_shipdate", F.col("l_shipdate").cast("timestamp")
-    )
+    orders, details = _order_streams(spark, sf_dir)
     out = _run_to_memory(
-        order_wide_semi_stream(orders, details), spark, "ow_semi_out"
+        semi_join_frame(orders, details), spark, "ow_semi_out"
     )
     batch = plans.query_map()["order_detail_semi_join"](spark, sf_dir)
     cols = ["o_orderkey", "o_orderdate", "o_orderpriority"]
@@ -5106,8 +5087,6 @@ def test_order_wide_full_stream_preserves_both_sides(spark, sf_dir, tmp_path):
     import os
     import time
 
-    from gmall_flink_parent_spark.streaming.jobs import order_wide_full_stream
-
     o_base = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate"
     )
@@ -5148,7 +5127,7 @@ def test_order_wide_full_stream_preserves_both_sides(spark, sf_dir, tmp_path):
         .parquet(str(tmp_path / "l"))
     )
     out = _run_to_memory(
-        order_wide_full_stream(orders, details), spark, "owf_out"
+        interval_join_full_frame(orders, details), spark, "owf_out"
     )
     cols = ["o_orderkey", "l_orderkey", "l_linenumber", "o_orderdate",
             "l_shipdate", "extended_price"]
