@@ -600,10 +600,8 @@ GROUP BY lang
 
 
 def corpus_token_projection(docs: DataFrame) -> DataFrame:
-    """The (lang, source, n_chars, n_tokens) map-stage projection shared
-    by batch ``corpus_summary`` and the streaming
-    ``corpus_summary_job`` partials — one definition of "a token" so
-    the batch query and its partial-store twin cannot drift."""
+    """The (lang, source, n_chars, n_tokens) map-stage projection under
+    ``corpus_summary_partials`` — one definition of "a token"."""
     n = F.size(F.split("text", " "))
     return docs.select("lang", "source", "n_chars", n.alias("n_tokens"))
 
@@ -618,16 +616,37 @@ def corpus_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     token counting stays a per-row array expression in the map stage.
     """
     docs = load_table(spark, sf_dir, "documents")
+    return corpus_summary_merge(corpus_summary_partials(docs))
+
+
+def corpus_summary_partials(docs: DataFrame) -> DataFrame:
+    """(lang, source) partials: doc count, token sum and char sum. The
+    answer is per language, but ``countDistinct(source)`` does not merge
+    from per-language partials, so the partials keep the finer (lang,
+    source) grain, where every measure is a plain sum and the distinct
+    source count falls out of the key set. The rows
+    ``corpus_summary_job`` lands per micro-batch."""
     return (
         corpus_token_projection(docs)
-        .groupBy("lang")
+        .groupBy("lang", "source")
         .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.countDistinct("source").alias("n_sources"),
-            F.sum("n_tokens").cast("long").alias("total_tokens"),
-            F.sum("n_chars").cast("long").alias("total_chars"),
-            F.round(F.avg("n_tokens"), 6).alias("avg_tokens"),
+            F.count(F.lit(1)).alias("n_docs_part"),
+            F.sum("n_tokens").cast("long").alias("tokens_part"),
+            F.sum("n_chars").cast("long").alias("chars_part"),
         )
+    )
+
+
+def corpus_summary_merge(partials: DataFrame) -> DataFrame:
+    """Merge ``corpus_summary_partials`` rows per language. The avg is
+    long sum / long count as double, which is Spark's integral
+    ``avg`` exactly."""
+    return partials.groupBy("lang").agg(
+        F.sum("n_docs_part").alias("n_docs"),
+        F.countDistinct("source").alias("n_sources"),
+        F.sum("tokens_part").alias("total_tokens"),
+        F.sum("chars_part").alias("total_chars"),
+        F.round(F.sum("tokens_part") / F.sum("n_docs_part"), 6).alias("avg_tokens"),
     )
 
 

@@ -2941,18 +2941,34 @@ def event_sequence_support(spark: SparkSession, sf_dir: str) -> DataFrame:
     (A→A) read as repeat behavior: some A after the first A.
     """
     events = load_table(spark, sf_dir, "events")
-    per = events.groupBy("user_id", "event_type").agg(
-        F.min("ts").alias("first_ts"), F.max("ts").alias("last_ts")
+    return sequence_support_finish(sequence_support_merge(sequence_support_partials(events)))
+
+
+def sequence_support_partials(events: DataFrame) -> DataFrame:
+    """Per-(user_id, event_type) first and last event timestamps. min
+    and max are associative, commutative and idempotent, so any batching
+    of the events — replays and duplicates included — merges to the
+    one-shot extrema. The rows ``sequence_support_store_job`` lands per
+    micro-batch."""
+    return events.groupBy("user_id", "event_type").agg(
+        F.min("ts").alias("first_part"), F.max("ts").alias("last_part")
     )
-    return sequence_support_finish(per)
+
+
+def sequence_support_merge(partials: DataFrame) -> DataFrame:
+    """Merge ``sequence_support_partials`` rows into the (user_id,
+    event_type, first_ts, last_ts) extrema ``sequence_support_finish``
+    reads: min of the firsts, max of the lasts."""
+    return partials.groupBy("user_id", "event_type").agg(
+        F.min("first_part").alias("first_ts"), F.max("last_part").alias("last_ts")
+    )
 
 
 def sequence_support_finish(per: DataFrame) -> DataFrame:
     """Finish pair support from a (user_id, event_type, first_ts,
     last_ts) extrema frame — ONE definition shared by the batch head
-    and ``streaming/jobs.py::sequence_support_from_store`` (whose store
-    merges per-batch extrema with min/max, associative and idempotent,
-    before calling this), so the two doors cannot drift. The user
+    and ``streaming/jobs.py::sequence_support_from_store``, both over
+    ``sequence_support_merge``, so the two doors cannot drift. The user
     total is derived from the extrema frame itself (distinct users in
     events ≡ distinct users holding any extrema row)."""
     per = scoped_persist(per)

@@ -230,12 +230,35 @@ def event_value_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     1e12 rows of |value| ≤ 1e6 the sum is still exact.
     """
     events = load_table(spark, sf_dir, "events")
+    return value_outliers_frame(events, type_moments_merge(type_moments_partials(events)))
+
+
+def type_moments_partials(events: DataFrame) -> DataFrame:
+    """Per-type moment partials (n, Σv, Σv²), the sums in exact DECIMAL
+    — associative, so any batching of the events merges to the one-shot
+    moments. The rows ``type_moments_store_job`` lands per micro-batch."""
     v = F.col("value").cast("decimal(18,6)")
-    stats = events.groupBy("event_type").agg(
+    return events.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(v).cast("double").alias("s1"),
-        F.sum(v * v).cast("double").alias("s2"),
+        F.sum(v).alias("s1"),
+        F.sum(v * v).alias("s2"),
     )
+
+
+def type_moments_merge(partials: DataFrame) -> DataFrame:
+    """Merge ``type_moments_partials`` rows into per-type (n, s1, s2),
+    the sums converted to DOUBLE only after the exact merge."""
+    return partials.groupBy("event_type").agg(
+        F.sum("n").alias("n"),
+        F.sum("s1").cast("double").alias("s1"),
+        F.sum("s2").cast("double").alias("s2"),
+    )
+
+
+def value_outliers_frame(events: DataFrame, stats: DataFrame) -> DataFrame:
+    """Score ``events`` against merged per-type moments
+    (``type_moments_merge``): the rows whose z-score exceeds 3 in
+    absolute value."""
     n, s1, s2 = F.col("n"), F.col("s1"), F.col("s2")
     z = (F.col("value") - s1 / n) / F.sqrt((s2 - s1 * s1 / n) / (n - 1))
     return (
@@ -341,9 +364,16 @@ def stickiness_frame(user_days: DataFrame) -> DataFrame:
 )
 def stickiness_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-day DAU / trailing-28-day MAU over the events table."""
-    events = load_table(spark, sf_dir, "events")
-    user_days = events.select("user_id", F.to_date("ts").alias("day")).distinct()
-    return stickiness_frame(user_days)
+    return stickiness_frame(user_days(load_table(spark, sf_dir, "events")))
+
+
+def user_days(events: DataFrame) -> DataFrame:
+    """The distinct (user_id, day) activity pairs — the lifecycle grain
+    behind stickiness, retention and the VisitorStats uv/new counts, and
+    the rows ``user_days_store_job`` lands per micro-batch. A pair set
+    merges by union, so cross-batch repeats collapse in the reader's
+    distinct."""
+    return events.select("user_id", F.to_date("ts").alias("day")).distinct()
 
 
 @register(
@@ -550,12 +580,27 @@ def event_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per-bucket mass sums through DECIMAL for order-independence.
     """
     events = load_table(spark, sf_dir, "events")
+    return value_histogram_merge(value_histogram_partials(events))
+
+
+def value_histogram_partials(events: DataFrame) -> DataFrame:
+    """(type, bucket) histogram partials: the event count and the exact
+    DECIMAL value mass. Both add, so any batching of the events merges
+    to the one-shot histogram — the rows ``value_histogram_job`` lands
+    per micro-batch."""
     bucket = F.floor(F.col("value") / _HIST_WIDTH)
-    return events.groupBy(
-        "event_type", bucket.alias("bucket")
-    ).agg(
+    return events.groupBy("event_type", bucket.alias("bucket")).agg(
         F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
+        F.sum(F.col("value").cast("decimal(18,2)")).alias("sum_dec"),
+    )
+
+
+def value_histogram_merge(partials: DataFrame) -> DataFrame:
+    """Merge ``value_histogram_partials`` rows into the histogram: the
+    mass turns DOUBLE only after the exact merge."""
+    return partials.groupBy("event_type", "bucket").agg(
+        F.sum("n_events").alias("n_events"),
+        F.sum("sum_dec").cast("double").alias("sum_value"),
     ).select(
         "event_type",
         "bucket",
@@ -659,19 +704,25 @@ def event_value_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     key at days × types grain (dim-bounded), a |types|²-row moment
     aggregate.
     """
-    daily = (
-        load_table(spark, sf_dir, "events")
-        .groupBy(
-            F.to_date("ts").alias("day"),
-            "event_type",
-        )
-        .agg(
-            F.sum(F.col("value").cast("decimal(18,2)"))
-            .cast("decimal(18,2)")
-            .alias("v")
-        )
+    events = load_table(spark, sf_dir, "events")
+    return value_correlation_frame(daily_value_merge(daily_value_partials(events)))
+
+
+def daily_value_partials(events: DataFrame) -> DataFrame:
+    """Per-(day, event_type) exact DECIMAL value sums — associative, so
+    any batching of the events merges to the one-shot daily totals. The
+    rows ``daily_value_store_job`` lands per micro-batch."""
+    return events.groupBy(F.to_date("ts").alias("day"), "event_type").agg(
+        F.sum(F.col("value").cast("decimal(18,2)")).alias("v_part"),
     )
-    return value_correlation_frame(daily)
+
+
+def daily_value_merge(partials: DataFrame) -> DataFrame:
+    """Merge ``daily_value_partials`` rows into the (day, event_type,
+    v) daily totals, pinned at DECIMAL(18,2) after the exact merge."""
+    return partials.groupBy("day", "event_type").agg(
+        F.sum("v_part").cast("decimal(18,2)").alias("v")
+    )
 
 
 def value_correlation_frame(daily: DataFrame) -> DataFrame:

@@ -381,27 +381,45 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     Measured 0.79× at sf0.1, interleaved min-of-5.
     """
     lineitem = fan_out(spark, load_table(spark, sf_dir, "lineitem"))
+    return pricing_summary_merge(pricing_summary_partials(lineitem))
+
+
+def pricing_summary_partials(lineitem: DataFrame) -> DataFrame:
+    """Q1's filter and per-row measures reduced to (returnflag,
+    linestatus) partials: exact decimal sums of quantity, base, discount
+    price and charge, plus the row count. Decimal sums and counts are
+    associative, so any partition of the rows into batches merges to the
+    one-shot totals — the rows ``pricing_summary_store_job`` lands per
+    micro-batch."""
     disc_price = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
     charge = disc_price * (F.lit(1.0) + F.col("l_tax"))
     return (
         lineitem.filter(F.col("l_shipdate") <= F.lit("2024-12-01 00:00:00").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            # exact decimal sums internally (partition-order-independent);
-            # DOUBLE only at the output edge for stable driver hashing
-            F.sum(F.col("l_quantity").cast("decimal(18,2)")).cast("double").alias("sum_qty"),
-            F.sum(F.col("l_extendedprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("sum_base_price"),
-            F.sum(disc_price.cast("decimal(18,6)")).cast("double").alias("sum_disc_price"),
-            F.sum(charge.cast("decimal(18,6)")).cast("double").alias("sum_charge"),
-            F.count(F.lit(1)).alias("count_order"),
-            F.round(
-                F.sum(F.col("l_quantity").cast("decimal(18,2)")).cast("double")
-                / F.count(F.lit(1)),
-                6,
-            ).alias("avg_qty"),
+            F.sum(F.col("l_quantity").cast("decimal(18,2)")).alias("qty_part"),
+            F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).alias("base_part"),
+            F.sum(disc_price.cast("decimal(18,6)")).alias("disc_part"),
+            F.sum(charge.cast("decimal(18,6)")).alias("charge_part"),
+            F.count(F.lit(1)).alias("n_part"),
         )
+    )
+
+
+def pricing_summary_merge(partials: DataFrame) -> DataFrame:
+    """Merge ``pricing_summary_partials`` rows into the Q1 output: the
+    decimal sums and counts add exactly, and the DOUBLE casts and the
+    6-digit avg_qty rounding happen only after the merge, at the output
+    edge, for stable driver hashing."""
+    qty = F.sum("qty_part").cast("double")
+    n = F.sum("n_part").cast("long")
+    return partials.groupBy("l_returnflag", "l_linestatus").agg(
+        qty.alias("sum_qty"),
+        F.sum("base_part").cast("double").alias("sum_base_price"),
+        F.sum("disc_part").cast("double").alias("sum_disc_price"),
+        F.sum("charge_part").cast("double").alias("sum_charge"),
+        n.alias("count_order"),
+        F.round(qty / n, 6).alias("avg_qty"),
     )
 
 

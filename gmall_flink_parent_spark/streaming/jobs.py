@@ -13,7 +13,13 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from gmall_flink_parent_spark.operators.order_wide import ORDER_COLS, band_join, enrich
+from gmall_flink_parent_spark.operators.order_wide import (
+    ORDER_COLS,
+    band_join,
+    enrich,
+    pricing_summary_merge,
+    pricing_summary_partials,
+)
 from gmall_flink_parent_spark.operators.routing import (
     ROUTING_CONFIG,
     ROUTING_CONFIG_SCHEMA,
@@ -74,46 +80,24 @@ def corpus_summary_job(docs: DataFrame, store_path: str, checkpoint_dir: str):
     The instructive partial-store case (``batch_store_job``): the final answer is
     per-language, but ``countDistinct(source)`` is NOT mergeable from
     per-language partials — so the store keeps the FINER (lang, source)
-    grain, where every aggregate is a plain sum and the distinct source
-    count falls out of the store's key set. The grain rule for the
-    shape: partials must be at least as fine as the finest
-    non-decomposable aggregate's key.
+    grain (``corpus_summary_partials``). The grain rule for the shape:
+    partials must be at least as fine as the finest non-decomposable
+    aggregate's key.
     """
-
-    def partials(batch: DataFrame) -> DataFrame:
-        from gmall_flink_parent_spark.functions.curation import corpus_token_projection
-
-        return (
-            corpus_token_projection(batch)
-            .groupBy("lang", "source")
-            .agg(
-                F.count(F.lit(1)).alias("n_docs_part"),
-                F.sum("n_tokens").cast("long").alias("tokens_part"),
-                F.sum("n_chars").cast("long").alias("chars_part"),
-            )
-        )
+    from gmall_flink_parent_spark.functions.curation import corpus_summary_partials
 
     return batch_store_job(
-        docs, partials, store_path, f"{checkpoint_dir}/corpus_summary"
+        docs, corpus_summary_partials, store_path, f"{checkpoint_dir}/corpus_summary"
     )
 
 
 def corpus_summary_from_store(spark: SparkSession, store_path: str) -> DataFrame:
-    """Final pass over ``corpus_summary_job``'s (lang, source) partials —
-    schema-identical to batch ``corpus_summary``. The division
-    reproduces Spark's integral ``avg`` exactly (long sum / long count
-    as double)."""
-    return (
-        spark.read.parquet(store_path)
-        .groupBy("lang")
-        .agg(
-            F.sum("n_docs_part").alias("n_docs"),
-            F.countDistinct("source").alias("n_sources"),
-            F.sum("tokens_part").alias("total_tokens"),
-            F.sum("chars_part").alias("total_chars"),
-            F.round(F.sum("tokens_part") / F.sum("n_docs_part"), 6).alias("avg_tokens"),
-        )
-    )
+    """Final pass over ``corpus_summary_job``'s (lang, source) partials:
+    the batch head's own ``corpus_summary_merge``, so it is
+    schema-identical to batch ``corpus_summary``."""
+    from gmall_flink_parent_spark.functions.curation import corpus_summary_merge
+
+    return corpus_summary_merge(spark.read.parquet(store_path))
 
 
 def ensure_dim_table(spark: SparkSession, name: str, path: str, df: DataFrame) -> None:
@@ -534,7 +518,7 @@ def hourly_stats_from_store(spark: SparkSession, store_path: str) -> DataFrame:
 
 def daily_value_store_job(events: DataFrame, store_path: str, checkpoint_dir: str):
     """Day × event-type decimal value partials at ingest — ONE compact
-    store maintains SEVEN dashboard heads incrementally:
+    store maintains EIGHT dashboard heads incrementally:
     ``event_value_correlation_from_store`` (pair-moment Pearson),
     ``event_type_pivot_from_store`` (the day × channel matrix),
     ``event_value_acf_from_store`` (lag-1..3 autocorrelation),
@@ -545,8 +529,9 @@ def daily_value_store_job(events: DataFrame, store_path: str, checkpoint_dir: st
     ``event_value_holt_forecast_from_store`` (Brown's one-step
     forecast), each hash-equal to its batch head over the same events.
 
-    The partial is the finest grain both consumers share: per-batch
-    (day, type) decimal sums. Decimal addition is associative,
+    The partial is the finest grain every consumer shares: per-batch
+    (day, type) decimal sums (``daily_value_partials``, the batch
+    correlation head's own). Decimal addition is associative,
     so sum-of-partials equals the one-shot daily total exactly, and
     every downstream cast (the correlation's DECIMAL(18,2) pin, the
     pivot's double edge) applies AFTER the merge — bit-identical to
@@ -554,26 +539,20 @@ def daily_value_store_job(events: DataFrame, store_path: str, checkpoint_dir: st
     volume; replays overwrite their own ``batch_id`` partition (the
     shared idempotent-store contract).
     """
-
-    def partials(batch: DataFrame) -> DataFrame:
-        return batch.groupBy(F.to_date("ts").alias("day"), "event_type").agg(
-            F.sum(F.col("value").cast("decimal(18,2)")).alias("v_part"),
-        )
+    from gmall_flink_parent_spark.operators.cohorts import daily_value_partials
 
     return batch_store_job(
-        events, partials, store_path, f"{checkpoint_dir}/daily_value"
+        events, daily_value_partials, store_path, f"{checkpoint_dir}/daily_value"
     )
 
 
 def daily_value_from_store(spark: SparkSession, store_path: str) -> DataFrame:
     """Merged (day, event_type, v DECIMAL(18,2)) daily totals from
-    ``daily_value_store_job``'s partials — the exact frame the batch
-    correlation head derives from raw events."""
-    return (
-        spark.read.parquet(store_path)
-        .groupBy("day", "event_type")
-        .agg(F.sum("v_part").cast("decimal(18,2)").alias("v"))
-    )
+    ``daily_value_store_job``'s partials — ``daily_value_merge``, the
+    frame the batch correlation head derives from raw events."""
+    from gmall_flink_parent_spark.operators.cohorts import daily_value_merge
+
+    return daily_value_merge(spark.read.parquet(store_path))
 
 
 def event_value_correlation_from_store(
@@ -617,7 +596,7 @@ def event_value_acf_from_store(spark: SparkSession, store_path: str) -> DataFram
     """Final pass: lag-1..3 autocorrelation over the incrementally
     maintained daily totals — hash-equal to batch ``event_value_acf``
     (the shared ``acf_frame`` core + the exact cents merge guarantee
-    no drift). A third consumer of the one day×type partial store."""
+    no drift). A consumer of the one day×type partial store."""
     from gmall_flink_parent_spark.operators.windows import acf_frame
 
     return acf_frame(_daily_cents_from_store(spark, store_path))
@@ -628,7 +607,7 @@ def event_value_ewma_from_store(spark: SparkSession, store_path: str) -> DataFra
     incrementally maintained daily totals — hash-equal to batch
     ``event_value_ewma`` (shared ``ewma_frame`` core; the exact cents
     merge and the integer-weight arithmetic leave nothing to drift).
-    The day×type partial store's SEVENTH consumer."""
+    Another consumer of the one day×type partial store."""
     from gmall_flink_parent_spark.operators.windows import ewma_frame
 
     return ewma_frame(_daily_cents_from_store(spark, store_path))
@@ -641,7 +620,8 @@ def event_value_holt_forecast_from_store(
     the incrementally maintained daily totals — hash-equal to batch
     ``event_value_holt_forecast`` (shared ``holt_frame`` core; the
     exact cents merge and the integer convolution coefficients leave
-    nothing to drift). The day×type partial store's EIGHTH consumer."""
+    nothing to drift). Another consumer of the one day×type partial
+    store."""
     from gmall_flink_parent_spark.operators.windows import holt_frame
 
     return holt_frame(spark, _daily_cents_from_store(spark, store_path))
@@ -713,61 +693,23 @@ def pricing_summary_store_job(lineitem: DataFrame, store_path: str, checkpoint_d
     rollup, ``operators/order_wide.py``): the daily-value pattern
     applied to the canonical pricing rollup.
 
-    Partials per micro-batch at the (returnflag, linestatus) grain:
-    the four DECIMAL measure sums + the row count. Each per-row term
-    is cast to DECIMAL exactly as in the batch head BEFORE any sum, so
-    partial sums are associative-exact; the final pass merges partials
-    and applies the double/round edge casts AFTER the merge — the same
-    order of operations as batch, hence hash-equal. Store size ∝
-    |flag × status| × #batches (single-digit rows per batch at any
-    fact volume); each batch pays one map-side-combined shuffle of
+    Partials per micro-batch at the (returnflag, linestatus) grain
+    (``pricing_summary_partials``, the batch head's own): the four
+    DECIMAL measure sums + the row count, associative-exact. Store
+    size ∝ |flag × status| × #batches (single-digit rows per batch at
+    any fact volume); each batch pays one map-side-combined shuffle of
     ≤ grain-cardinality rows.
     """
-
-    def partials(batch: DataFrame) -> DataFrame:
-        disc_price = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-        charge = disc_price * (F.lit(1.0) + F.col("l_tax"))
-        return (
-            batch.filter(
-                F.col("l_shipdate") <= F.lit("2024-12-01 00:00:00").cast("timestamp")
-            )
-            .groupBy("l_returnflag", "l_linestatus")
-            .agg(
-                F.sum(F.col("l_quantity").cast("decimal(18,2)")).alias("qty_part"),
-                F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).alias(
-                    "base_part"
-                ),
-                F.sum(disc_price.cast("decimal(18,6)")).alias("disc_part"),
-                F.sum(charge.cast("decimal(18,6)")).alias("charge_part"),
-                F.count(F.lit(1)).alias("n_part"),
-            )
-        )
-
     return batch_store_job(
-        lineitem, partials, store_path, f"{checkpoint_dir}/pricing_summary"
+        lineitem, pricing_summary_partials, store_path, f"{checkpoint_dir}/pricing_summary"
     )
 
 
 def pricing_summary_from_store(spark: SparkSession, store_path: str) -> DataFrame:
-    """Final pass over ``pricing_summary_store_job``'s partials:
-    decimal sums and counts merge exactly; the double casts and the
-    6-digit avg_qty rounding happen AFTER the merge, mirroring the
-    batch head's output edge — schema- and hash-equal to batch
-    ``pricing_summary``."""
-    return (
-        spark.read.parquet(store_path)
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum("qty_part").cast("double").alias("sum_qty"),
-            F.sum("base_part").cast("double").alias("sum_base_price"),
-            F.sum("disc_part").cast("double").alias("sum_disc_price"),
-            F.sum("charge_part").cast("double").alias("sum_charge"),
-            F.sum("n_part").cast("long").alias("count_order"),
-            F.round(
-                F.sum("qty_part").cast("double") / F.sum("n_part").cast("long"), 6
-            ).alias("avg_qty"),
-        )
-    )
+    """Final pass over ``pricing_summary_store_job``'s partials: the
+    batch head's own ``pricing_summary_merge`` — schema- and hash-equal
+    to batch ``pricing_summary``."""
+    return pricing_summary_merge(spark.read.parquet(store_path))
 
 
 def sequence_support_store_job(events: DataFrame, store_path: str, checkpoint_dir: str):
@@ -788,85 +730,26 @@ def sequence_support_store_job(events: DataFrame, store_path: str, checkpoint_di
     calls the SAME ``sequence_support_finish`` the batch head uses —
     hash-equal by construction, pinned in ``tests/test_streaming.py``.
     """
-
-    def partials(batch: DataFrame) -> DataFrame:
-        return batch.groupBy("user_id", "event_type").agg(
-            F.min("ts").alias("first_part"), F.max("ts").alias("last_part")
-        )
+    from gmall_flink_parent_spark.operators.analytics import sequence_support_partials
 
     return batch_store_job(
-        events, partials, store_path, f"{checkpoint_dir}/sequence_support"
+        events, sequence_support_partials, store_path, f"{checkpoint_dir}/sequence_support"
     )
 
 
 @query_scope
 def sequence_support_from_store(spark: SparkSession, store_path: str) -> DataFrame:
     """Final pass over ``sequence_support_store_job``'s extrema
-    partials: min-of-mins / max-of-maxes (exact merge), then the shared
-    ``sequence_support_finish`` pair join — hash-equal to batch
-    ``event_sequence_support`` over the same events."""
-    from gmall_flink_parent_spark.operators.analytics import sequence_support_finish
-
-    per = (
-        spark.read.parquet(store_path)
-        .groupBy("user_id", "event_type")
-        .agg(
-            F.min("first_part").alias("first_ts"),
-            F.max("last_part").alias("last_ts"),
-        )
-    )
-    return sequence_support_finish(per)
-
-
-def visitor_stats_store_job(events: DataFrame, store_path: str, checkpoint_dir: str):
-    """Incremental-store twin of the reference's DWS VisitorStats
-    serving (``VisitorStatsApp.java``: per-day uv_ct / new_uv rollup) —
-    the FOURTH store family, and the second whose partials are
-    IDEMPOTENT: per micro-batch, the DISTINCT (user_id, day) presence
-    pairs.
-
-    A distinct-count is not sum-mergeable, so the store keeps the W2
-    grain itself — the (user, day) key SET — which merges by union:
-    duplication across batches (or a replayed partition, or an
-    append-gone-wrong) cannot change the merged set, the same
-    replay-safety class as the sequence store's extrema. Both DWS
-    counters derive from the one set in the final pass: uv = pairs per
-    day; new visitors = users whose MIN day is that day (W1's repaired
-    is_new, derived instead of stored — every event lands its (user,
-    day) row, so min(day) over the store IS the user's true first
-    visit). Store size ∝ users × active-days × batches, shrinking
-    under the all-columns-as-keys compaction fold (pure dedup).
-    """
-
-    def partials(batch: DataFrame) -> DataFrame:
-        return batch.select(
-            "user_id", F.to_date("ts").alias("day")
-        ).distinct()
-
-    return batch_store_job(
-        events, partials, store_path, f"{checkpoint_dir}/visitor_stats"
+    partials: ``sequence_support_merge`` (min-of-mins / max-of-maxes),
+    then the shared ``sequence_support_finish`` pair join — hash-equal
+    to batch ``event_sequence_support`` over the same events."""
+    from gmall_flink_parent_spark.operators.analytics import (
+        sequence_support_finish,
+        sequence_support_merge,
     )
 
-
-def visitor_stats_from_store(spark: SparkSession, store_path: str) -> DataFrame:
-    """Final pass over ``visitor_stats_store_job``'s key-set partials:
-    per day, the unique-visitor count and the repaired new-visitor
-    count — hash-equal to the W1/W2 columns of batch
-    ``sql_dws_surface`` (ymd, n_uv, n_new_visitors) over the same
-    events, pinned in ``tests/test_streaming.py``."""
-    pairs = (
-        spark.read.parquet(store_path).select("user_id", "day").distinct()
-    )
-    first = pairs.groupBy("user_id").agg(F.min("day").alias("first_day"))
-    return (
-        pairs.join(first, "user_id")
-        .groupBy(F.date_format("day", "yyyyMMdd").alias("ymd"))
-        .agg(
-            F.count(F.lit(1)).alias("n_uv"),
-            F.sum(
-                F.when(F.col("day") == F.col("first_day"), 1).otherwise(0)
-            ).alias("n_new_visitors"),
-        )
+    return sequence_support_finish(
+        sequence_support_merge(spark.read.parquet(store_path))
     )
 
 
@@ -993,7 +876,7 @@ def bounce_stats_store_job(
     """The uj_ct (bounce-count) leg of the reference's DWS VisitorStats
     rollup (``VisitorStatsApp.java`` consumes the CEP job's timeout
     topic and counts per day) — completing the trio next to
-    ``visitor_stats_store_job``'s uv/new legs: the W3 CEP state machine
+    ``visitor_stats_from_store``'s uv/new legs: the W3 CEP state machine
     (``stateful.bounce_detect_stream``) runs INSIDE this job, its
     timeout emissions reduce to per-batch (day, n) count partials, and
     the final pass sums them — the DWD→DWM→DWS topic chain collapsed
@@ -2351,17 +2234,18 @@ def user_days_store_job(events: DataFrame, store_path: str, checkpoint_dir: str)
     pass's distinct collapses cross-batch repeats exactly, unlike a
     count, which is why the stored grain is the pair and never a
     per-batch count. ``retention_from_store`` then derives the cohort
-    triangle hash-equal to batch ``retention_cohorts``.
+    triangle hash-equal to batch ``retention_cohorts``, and
+    ``visitor_stats_from_store`` the VisitorStats uv/new counts.
     """
+    from gmall_flink_parent_spark.operators.cohorts import user_days
 
-    def partials(batch: DataFrame) -> DataFrame:
-        return batch.select(
-            "user_id", F.to_date("ts").alias("day")
-        ).distinct()
+    return batch_store_job(events, user_days, store_path, f"{checkpoint_dir}/user_days")
 
-    return batch_store_job(
-        events, partials, store_path, f"{checkpoint_dir}/user_days"
-    )
+
+def _user_days_from_store(spark: SparkSession, store_path: str) -> DataFrame:
+    """The merged (user_id, day) set of ``user_days_store_job``'s store:
+    the distinct collapses pairs that several batches landed."""
+    return spark.read.parquet(store_path).select("user_id", "day").distinct()
 
 
 def retention_from_store(spark: SparkSession, store_path: str) -> DataFrame:
@@ -2372,9 +2256,7 @@ def retention_from_store(spark: SparkSession, store_path: str) -> DataFrame:
     set however it was batched."""
     from gmall_flink_parent_spark.operators.cohorts import retention_frame
 
-    pairs = (
-        spark.read.parquet(store_path).select("user_id", "day").distinct()
-    )
+    pairs = _user_days_from_store(spark, store_path)
     # retention_frame expects an events-shaped frame with (user_id, ts);
     # the day column IS the truncated grain, so it feeds through as-is.
     return retention_frame(pairs.withColumnRenamed("day", "ts"))
@@ -2386,8 +2268,35 @@ def stickiness_from_store(spark: SparkSession, store_path: str) -> DataFrame:
     whole lifecycle family), hash-equal to batch ``stickiness_ratio``."""
     from gmall_flink_parent_spark.operators.cohorts import stickiness_frame
 
-    pairs = spark.read.parquet(store_path).select("user_id", "day").distinct()
-    return stickiness_frame(pairs)
+    return stickiness_frame(_user_days_from_store(spark, store_path))
+
+
+def visitor_stats_from_store(spark: SparkSession, store_path: str) -> DataFrame:
+    """The reference's DWS VisitorStats serving (``VisitorStatsApp.java``:
+    per-day uv_ct / new_uv rollup) over ``user_days_store_job``'s
+    (user, day) key set: per day, the unique-visitor count and the
+    repaired new-visitor count — hash-equal to the W1/W2 columns of
+    batch ``sql_dws_surface`` (ymd, n_uv, n_new_visitors) over the same
+    events, pinned in ``tests/test_streaming.py``.
+
+    A distinct count does not sum-merge, so the store keeps the W2
+    grain itself, which merges by union: duplication across batches
+    cannot change the merged set. uv = pairs per day; new visitors =
+    users whose MIN day is that day (W1's repaired is_new, derived
+    instead of stored — every event lands its (user, day) row, so
+    min(day) over the store IS the user's true first visit)."""
+    pairs = _user_days_from_store(spark, store_path)
+    first = pairs.groupBy("user_id").agg(F.min("day").alias("first_day"))
+    return (
+        pairs.join(first, "user_id")
+        .groupBy(F.date_format("day", "yyyyMMdd").alias("ymd"))
+        .agg(
+            F.count(F.lit(1)).alias("n_uv"),
+            F.sum(
+                F.when(F.col("day") == F.col("first_day"), 1).otherwise(0)
+            ).alias("n_new_visitors"),
+        )
+    )
 
 
 def type_moments_store_job(events: DataFrame, store_path: str, checkpoint_dir: str):
@@ -2401,17 +2310,10 @@ def type_moments_store_job(events: DataFrame, store_path: str, checkpoint_dir: s
     (``compact_partial_store``-safe); this is the
     ``batch_store_job`` grain rule applied to second moments.
     """
-
-    def partials(batch: DataFrame) -> DataFrame:
-        v = F.col("value").cast("decimal(18,6)")
-        return batch.groupBy("event_type").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(v).alias("s1"),
-            F.sum(v * v).alias("s2"),
-        )
+    from gmall_flink_parent_spark.operators.cohorts import type_moments_partials
 
     return batch_store_job(
-        events, partials, store_path, f"{checkpoint_dir}/type_moments"
+        events, type_moments_partials, store_path, f"{checkpoint_dir}/type_moments"
     )
 
 
@@ -2423,20 +2325,12 @@ def outliers_from_store(
     same data the store ingested (pinned), and the PRODUCTION shape
     when it is not: today's batch scored against all history, with the
     full scan replaced by a #types-row store read."""
-    parts = spark.read.parquet(store_path)
-    stats = parts.groupBy("event_type").agg(
-        F.sum("n").alias("n"),
-        F.sum("s1").cast("double").alias("s1"),
-        F.sum("s2").cast("double").alias("s2"),
+    from gmall_flink_parent_spark.operators.cohorts import (
+        type_moments_merge,
+        value_outliers_frame,
     )
-    n, s1, s2 = F.col("n"), F.col("s1"), F.col("s2")
-    z = (F.col("value") - s1 / n) / F.sqrt((s2 - s1 * s1 / n) / (n - 1))
-    return (
-        events.join(F.broadcast(stats.filter(n > 1)), "event_type")
-        .withColumn("z", z)
-        .filter(F.abs(F.col("z")) > 3.0)
-        .select("event_id", "event_type", "value", F.round("z", 4).alias("z_score"))
-    )
+
+    return value_outliers_frame(events, type_moments_merge(spark.read.parquet(store_path)))
 
 
 @query_scope
@@ -2483,7 +2377,7 @@ def new_vs_returning_from_store(spark: SparkSession, store_path: str) -> DataFra
     pass), hash-equal to batch ``daily_new_vs_returning``."""
     from pyspark.sql import Window
 
-    pairs = spark.read.parquet(store_path).select("user_id", "day").distinct()
+    pairs = _user_days_from_store(spark, store_path)
     w = Window.partitionBy("user_id")
     exploded = pairs.withColumn("first_day", F.min("day").over(w))
     is_new = (F.col("day") == F.col("first_day")).cast("long")
@@ -2503,36 +2397,20 @@ def value_histogram_job(events: DataFrame, store_path: str, checkpoint_dir: str)
     via ``compact_partial_store``-compatible re-aggregation in the
     head). Per-batch size ≤ types × occupied buckets, independent of
     event volume."""
-    from gmall_flink_parent_spark.operators.cohorts import _HIST_WIDTH
-
-    def partials(batch: DataFrame) -> DataFrame:
-        bucket = F.floor(F.col("value") / _HIST_WIDTH)
-        return batch.groupBy("event_type", bucket.alias("bucket")).agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,2)")).alias("sum_dec"),
-        )
+    from gmall_flink_parent_spark.operators.cohorts import value_histogram_partials
 
     return batch_store_job(
-        events, partials, store_path, f"{checkpoint_dir}/value_histogram"
+        events, value_histogram_partials, store_path, f"{checkpoint_dir}/value_histogram"
     )
 
 
 def value_histogram_from_store(spark: SparkSession, store_path: str) -> DataFrame:
-    """Fold the accumulated histogram partials — hash-equal to batch
+    """Fold the accumulated histogram partials with the batch head's own
+    ``value_histogram_merge`` — hash-equal to batch
     ``event_value_histogram`` over the same events (pinned)."""
-    from gmall_flink_parent_spark.operators.cohorts import _HIST_WIDTH
+    from gmall_flink_parent_spark.operators.cohorts import value_histogram_merge
 
-    parts = spark.read.parquet(store_path)
-    return parts.groupBy("event_type", "bucket").agg(
-        F.sum("n_events").alias("n_events"),
-        F.sum("sum_dec").cast("double").alias("sum_value"),
-    ).select(
-        "event_type",
-        "bucket",
-        (F.col("bucket") * _HIST_WIDTH).cast("double").alias("bucket_lo"),
-        "n_events",
-        "sum_value",
-    )
+    return value_histogram_merge(spark.read.parquet(store_path))
 
 
 def session_store_job(

@@ -270,6 +270,36 @@ def _max_committed_batch_id(spark: SparkSession, checkpoint_location: str) -> in
     return max(ids) if ids else None
 
 
+def _committed_fold(
+    spark: SparkSession, store_path: str, checkpoint_location: str | None
+) -> tuple[DataFrame, DataFrame] | None:
+    """The committed-batch split both compactions share: heal, read the
+    store, and split it into the rows to fold (the base plus every batch
+    at or below the highest committed id; everything without a
+    checkpoint) and the rows to keep in place. ``None`` when there is
+    nothing to do: no store yet (a scheduled compaction racing first
+    deployment), or no committed batch outside the base (rewriting the
+    identical base would be pure churn)."""
+    _clear_swap_leftovers(spark, store_path)  # may restore a half-swapped store
+    fs, dest = _hadoop_fs(spark, store_path)
+    if not fs.exists(dest):
+        return None
+    store = spark.read.parquet(store_path)
+    if checkpoint_location is None:
+        foldable = F.lit(True)
+    else:
+        max_committed = _max_committed_batch_id(spark, checkpoint_location)
+        # the prior base is always foldable: it only ever held folded
+        # committed batches
+        foldable = F.col("batch_id") <= (
+            COMPACT_BASE_ID if max_committed is None else int(max_committed)
+        )
+    fold = store.filter(foldable)
+    if not fold.filter(F.col("batch_id") != COMPACT_BASE_ID).limit(1).count():
+        return None
+    return fold, store.filter(~foldable)
+
+
 def compact_partial_store(
     spark: SparkSession,
     store_path: str,
@@ -321,33 +351,13 @@ def compact_partial_store(
     stream precision change fails loudly instead of silently degrading
     every merged sketch to the coarser precision).
     """
-    _clear_swap_leftovers(spark, store_path)  # may restore a half-swapped store
-    # A scheduled compaction can race first deployment: no batch has
-    # landed yet, so there is no store directory. That is the documented
-    # quiet no-op, not a raw AnalysisException from the read.
-    fs, dest = _hadoop_fs(spark, store_path)
-    if not fs.exists(dest):
+    split = _committed_fold(spark, store_path, checkpoint_location)
+    if split is None:
         return COMPACT_BASE_ID
-    store = spark.read.parquet(store_path)
+    fold, keep = split
     value_cols = [
-        f for f in store.schema.fields if f.name not in (*group_cols, "batch_id")
+        f for f in fold.schema.fields if f.name not in (*group_cols, "batch_id")
     ]
-    if checkpoint_location is None:
-        foldable = F.lit(True)
-    else:
-        max_committed = _max_committed_batch_id(spark, checkpoint_location)
-        # the prior base is always foldable: it only ever held folded
-        # committed batches
-        foldable = F.col("batch_id") <= (
-            COMPACT_BASE_ID if max_committed is None else int(max_committed)
-        )
-    fold = store.filter(foldable)
-    keep = store.filter(~foldable)
-    # no-op when there is nothing NEW to fold: rewriting the store to
-    # produce the identical base (e.g. a scheduled compaction on a
-    # quiet store) would be pure churn
-    if not fold.filter(F.col("batch_id") != COMPACT_BASE_ID).limit(1).count():
-        return COMPACT_BASE_ID
     # Sum integral columns through a decimal(38,0) intermediate: Spark's
     # sum(long) is itself a long, so the merged total can overflow BEFORE
     # the try_cast guard below ever sees it — wrapping silently in
@@ -464,23 +474,11 @@ def compact_fact_store(
     comes out in full-sized files regardless of how small the input
     batch files were. Returns ``COMPACT_BASE_ID``.
     """
-    _clear_swap_leftovers(spark, store_path)  # may restore a half-swapped store
-    fs, dest = _hadoop_fs(spark, store_path)
-    if not fs.exists(dest):
-        return COMPACT_BASE_ID  # scheduled compaction before first batch
-    store = spark.read.parquet(store_path)
-    if checkpoint_location is None:
-        foldable = F.lit(True)
-    else:
-        max_committed = _max_committed_batch_id(spark, checkpoint_location)
-        foldable = F.col("batch_id") <= (
-            COMPACT_BASE_ID if max_committed is None else int(max_committed)
-        )
-    fold = store.filter(foldable)
-    keep = store.filter(~foldable)
-    if not fold.filter(F.col("batch_id") != COMPACT_BASE_ID).limit(1).count():
-        return COMPACT_BASE_ID  # nothing new — rewriting would be pure churn
-    data_cols = [c for c in store.columns if c != "batch_id"]
+    split = _committed_fold(spark, store_path, checkpoint_location)
+    if split is None:
+        return COMPACT_BASE_ID
+    fold, keep = split
+    data_cols = [c for c in fold.columns if c != "batch_id"]
     base = fold.select(*data_cols).withColumn(
         "batch_id", F.lit(COMPACT_BASE_ID).cast("long")
     )

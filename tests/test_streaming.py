@@ -967,6 +967,105 @@ def test_order_wide_band_lives_only_in_order_wide_module():
     assert found == {("operators/order_wide.py", needle, 1) for needle in needles}
 
 
+# DWS store job -> (family, the batch head's module, reader over its store)
+_TWO_PHASE_FAMILIES = {
+    "pricing_summary_store_job": (
+        "pricing_summary", "operators/order_wide.py", "pricing_summary_from_store"
+    ),
+    "value_histogram_job": (
+        "value_histogram", "operators/cohorts.py", "value_histogram_from_store"
+    ),
+    "sequence_support_store_job": (
+        "sequence_support", "operators/analytics.py", "sequence_support_from_store"
+    ),
+    "daily_value_store_job": (
+        "daily_value", "operators/cohorts.py", "daily_value_from_store"
+    ),
+    "type_moments_store_job": (
+        "type_moments", "operators/cohorts.py", "outliers_from_store"
+    ),
+    "corpus_summary_job": (
+        "corpus_summary", "functions/curation.py", "corpus_summary_from_store"
+    ),
+}
+
+
+def test_dws_store_jobs_reuse_their_batch_heads_partials_and_merge():
+    """Each two-phase DWS family is written once, in its batch head's
+    module, as ``<family>_partials`` and ``<family>_merge``: the store
+    job lands the head's own partials and the reader runs the head's own
+    merge, so ``streaming/jobs.py`` holds no second copy of the filter,
+    measures or output casts. ``user_days_store_job`` lands
+    ``operators/cohorts.py::user_days`` the same way."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "gmall_flink_parent_spark"
+    tree = ast.parse((pkg / "streaming/jobs.py").read_text(encoding="utf-8"))
+    defs = {n.name: n for n in tree.body if isinstance(n, ast.FunctionDef)}
+    imported = {
+        (a.name, n.module)
+        for n in ast.walk(tree)
+        if isinstance(n, ast.ImportFrom)
+        for a in n.names
+    }
+
+    def module_of(rel: str) -> str:
+        return "gmall_flink_parent_spark." + rel.removesuffix(".py").replace("/", ".")
+
+    cases = {job: (f"{fam}_partials", rel) for job, (fam, rel, _) in _TWO_PHASE_FAMILIES.items()}
+    cases["user_days_store_job"] = ("user_days", "operators/cohorts.py")
+    for job, (partials, rel) in cases.items():
+        fn = defs[job]
+        nested = [n.name for n in ast.walk(fn) if isinstance(n, ast.FunctionDef) and n is not fn]
+        assert not nested, f"{job} defines {nested}"
+        calls = [
+            c for c in ast.walk(fn)
+            if isinstance(c, ast.Call) and getattr(c.func, "id", None) == "batch_store_job"
+        ]
+        assert len(calls) == 1 and isinstance(calls[0].args[1], ast.Name), job
+        assert calls[0].args[1].id == partials, job
+        assert (partials, module_of(rel)) in imported, (job, partials)
+        head_src = (pkg / rel).read_text(encoding="utf-8")
+        assert f"def {partials}(" in head_src, (rel, partials)
+    for job, (fam, rel, reader) in _TWO_PHASE_FAMILIES.items():
+        called = {
+            c.func.id
+            for c in ast.walk(defs[reader])
+            if isinstance(c, ast.Call) and isinstance(c.func, ast.Name)
+        }
+        assert f"{fam}_merge" in called, (reader, called)
+        assert (f"{fam}_merge", module_of(rel)) in imported, reader
+        assert f"def {fam}_merge(" in (pkg / rel).read_text(encoding="utf-8")
+
+
+# warm Spark jobs of each two-phase head at the parent of the
+# merge(partials(table)) rewrite, 4-core host, sf0.001 and sf0.01 alike
+_PARENT_WARM_JOBS = {
+    "pricing_summary": 3,
+    "event_value_histogram": 2,
+    "event_sequence_support": 10,
+    "event_value_correlation": 4,
+    "event_value_outliers": 3,
+    "corpus_summary": 3,
+}
+
+
+@pytest.mark.parametrize("head", sorted(_PARENT_WARM_JOBS))
+def test_two_phase_heads_use_no_more_warm_jobs(spark, sf_dir, head):
+    """``merge(partials(table))`` adds a second in-stage aggregate over
+    partials that are already hash-partitioned on the merge keys: no
+    Exchange and no Spark job beyond the one-pass form's."""
+    fn = plans.query_map()[head]
+
+    def run():
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+
+    run()  # cold: first-run jobs (footer reads, table handles) excluded
+    jobs = _group_jobs(spark, f"warm-{head}", run)
+    assert len(jobs) <= _PARENT_WARM_JOBS[head], jobs
+
+
 def test_order_wide_stream_matches_batch_interval_join(spark, sf_dir, tmp_path):
     orders, details = _order_streams(spark, sf_dir)
     out, q = _run_to_memory(
@@ -5256,18 +5355,21 @@ def test_order_wide_anti_stream_timeout_is_final_under_late_data(spark, tmp_path
     assert dropped >= 1, "the late in-band detail never hit the watermark filter"
 
 
-def test_visitor_stats_store_job_matches_sql_dws_surface(spark, sf_dir, tmp_path):
+def test_user_days_store_serves_visitor_stats_matching_sql_dws_surface(
+    spark, sf_dir, tmp_path
+):
     """Fourth store family — the reference's DWS VisitorStats serving
-    (``VisitorStatsApp.java`` uv_ct/new_uv): per-batch DISTINCT
-    (user, day) key-set partials merged by the final pass must equal
-    the W1/W2 columns of batch ``sql_dws_surface`` exactly; and because
-    the partials are a key SET (union-mergeable, idempotent), the store
-    must survive the all-columns-as-keys compaction fold AND outright
-    row duplication without drifting — the same replay-safety class as
-    the sequence store's extrema."""
+    (``VisitorStatsApp.java`` uv_ct/new_uv) over the one user-days
+    store: per-batch DISTINCT (user, day) key-set partials landed by
+    ``user_days_store_job`` and merged by ``visitor_stats_from_store``
+    must equal the W1/W2 columns of batch ``sql_dws_surface`` exactly;
+    and because the partials are a key SET (union-mergeable,
+    idempotent), the store must survive the all-columns-as-keys
+    compaction fold AND outright row duplication without drifting — the
+    same replay-safety class as the sequence store's extrema."""
     from gmall_flink_parent_spark.streaming.jobs import (
+        user_days_store_job,
         visitor_stats_from_store,
-        visitor_stats_store_job,
     )
     from gmall_flink_parent_spark.streaming.store import compact_partial_store
 
@@ -5277,7 +5379,7 @@ def test_visitor_stats_store_job_matches_sql_dws_surface(spark, sf_dir, tmp_path
         "event_id long, ts timestamp, user_id long",
     )
     store_path = str(tmp_path / "store")
-    q = visitor_stats_store_job(stream, store_path, str(tmp_path / "ck"))
+    q = user_days_store_job(stream, store_path, str(tmp_path / "ck"))
     q.awaitTermination(120)
     store = spark.read.parquet(store_path)
     assert sorted(
@@ -5377,9 +5479,10 @@ def test_land_after_half_swap_restores_before_writing(spark, sf_dir, tmp_path):
 def test_bounce_stats_store_job_completes_visitor_stats_trio(spark, sf_dir, tmp_path):
     """The uj_ct leg: the CEP bounce stream reduced to per-day count
     partials at ingest must serve (ymd, n_bounces) equal to batch
-    ``sql_dws_surface``'s column — with ``visitor_stats_store_job``
-    covering uv/new, the reference's whole VisitorStats DWS row is now
-    served incrementally. Sentinel-epilogue harness flushes the CEP
+    ``sql_dws_surface``'s column — with ``user_days_store_job`` and
+    ``visitor_stats_from_store`` covering uv/new, the reference's whole
+    VisitorStats DWS row is now served incrementally. Sentinel-epilogue
+    harness flushes the CEP
     timers; sentinel bounces land on far-future days and are excluded
     from the compare. Compaction must not move the counts."""
     import os
