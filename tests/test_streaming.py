@@ -495,7 +495,14 @@ def test_upsert_parquet_failed_swap_raises_and_restores(spark, tmp_path, monkeyp
 
 
 def _group_jobs(spark, group: str, action) -> list[list[str]]:
-    """Stage names of each Spark job ``action`` runs under ``group``."""
+    """Stage names of each Spark job ``action`` runs under ``group``.
+
+    The status tracker reads the listener bus's store, so the bus is
+    drained first. Once a session has run ``spark.ui.retainedStages``
+    stages, the store evicts SKIPPED stages first, and a job's skipped
+    stage may be gone before it is read. A skipped stage re-lists a
+    stage an earlier job ran, so it is left out of the names; the job
+    count is unaffected."""
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
     try:
@@ -503,11 +510,13 @@ def _group_jobs(spark, group: str, action) -> list[list[str]]:
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
     st = sc.statusTracker()
-    return [
-        [st.getStageInfo(s).name for s in st.getJobInfo(j).stageIds]
+    stages = (
+        [st.getStageInfo(s) for s in st.getJobInfo(j).stageIds]
         for j in sorted(st.getJobIdsForGroup(group))
-    ]
+    )
+    return [[s.name for s in job if s is not None] for job in stages]
 
 
 def test_upsert_parquet_merge_runs_two_jobs(spark, tmp_path):
