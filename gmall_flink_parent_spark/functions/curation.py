@@ -72,35 +72,6 @@ def _ngrams(toks: Column, n_col: Column, n: int) -> Column:
     )
 
 
-def doc_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-style repetition signals: duplicate token / 2-gram / 3-gram
-    fractions per document.
-
-    High duplicate-n-gram fractions mark boilerplate and generated spam;
-    corpus filters drop docs above a threshold (e.g. dup-2gram > 0.2).
-    Pure higher-order array expressions — per-row, shuffle-free; at
-    100 TB this is a map stage fused into the scan. The registered form
-    is the ``dup_*_ratio`` columns of ``corpus_filter_pipeline`` (signals
-    and verdict come from one scan); this standalone frame remains for
-    library use.
-    """
-    docs = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ")
-    t = docs.select("doc_id", toks.alias("toks"), F.size(toks).alias("n"))
-    n = F.col("n")
-    r1 = F.lit(1.0) - F.size(F.array_distinct("toks")).cast("double") / n
-    g2 = F.size(_ngrams(F.col("toks"), n, 2))
-    g3 = F.size(_ngrams(F.col("toks"), n, 3))
-    r2 = F.when(n >= 2, F.lit(1.0) - g2.cast("double") / (n - 1)).otherwise(0.0)
-    r3 = F.when(n >= 3, F.lit(1.0) - g3.cast("double") / (n - 2)).otherwise(0.0)
-    return t.select(
-        "doc_id",
-        F.round(r1, 6).alias("dup_token_ratio"),
-        F.round(r2, 6).alias("dup_2gram_ratio"),
-        F.round(r3, 6).alias("dup_3gram_ratio"),
-    )
-
-
 # ------------------------------------------------------------- top token
 
 TOP_TOKEN_ORACLE = """

@@ -388,40 +388,3 @@ def funnel_stream(
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-
-
-def uv_dedup_stream_builtin(events: DataFrame) -> DataFrame:
-    """W2 via Spark's BUILT-IN state-bounded streaming dedup —
-    ``dropDuplicatesWithinWatermark`` — the primitive SURVEY §2.6 names
-    as the native form of the reference's TTL'd ValueState dedup
-    (``UniqueVisitApp.java:54-95``).
-
-    Contrast with ``uv_dedup_stream`` (the faithful port): the built-in
-    keeps the FIRST-ARRIVED row per (user, day) and drops its state
-    once the watermark passes the event time plus the dedup horizon;
-    the custom op reproduces Flink's exact TTL semantics (idle-key
-    expiry with re-admission) and emits the MIN-timestamp row. The
-    deduplicated KEY SET is identical on closed data — pinned against
-    batch ``uv_dedup`` — while the representative row is
-    arrival-order-dependent here, so this surface returns only the key
-    columns. At 100 TB this is the zero-custom-code path: state is the
-    (user, day) key set inside the horizon, bounded by the watermark
-    exactly like the hand-built op's timeout.
-
-    The watermark delay must COVER the dedup horizon: with a 0-second
-    delay, a key's dedup state is dropped as soon as the watermark
-    passes its event time, so a same-day duplicate arriving in a later
-    micro-batch would be re-emitted. ``UV_STATE_TTL_MS`` (24 h, the
-    reference's TTL) is exactly the horizon a (user, day) key needs —
-    every same-day duplicate's timestamp is < 24 h after the first
-    event's, so its state is provably still live when the duplicate
-    arrives, regardless of micro-batch boundaries. Pinned by the
-    multi-batch no-duplicate-ROWS test (not just key-set equality) in
-    ``tests/test_streaming.py``.
-    """
-    return (
-        events.withWatermark("ts", f"{UV_STATE_TTL_MS // 1000} seconds")
-        .withColumn("visit_ymd", F.date_format("ts", "yyyyMMdd"))
-        .dropDuplicatesWithinWatermark(["user_id", "visit_ymd"])
-        .select("user_id", "visit_ymd")
-    )

@@ -4751,97 +4751,6 @@ def test_interval_join_skew_hot_key_is_split_by_aqe(spark):
                 spark.conf.set(k, v)
 
 
-def test_uv_dedup_builtin_matches_batch_key_set(spark, sf_dir):
-    """The built-in ``dropDuplicatesWithinWatermark`` form of W2 must
-    produce EXACTLY the batch uv_dedup key set on closed data (the
-    representative row is arrival-order-dependent, so the surface
-    returns keys only — the docstring's honest contract)."""
-    from gmall_flink_parent_spark.streaming.stateful import uv_dedup_stream_builtin
-
-    out = _run_to_memory(
-        uv_dedup_stream_builtin(events_stream(spark, sf_dir)), spark, "uvb_out"
-    )
-    got = {(r["user_id"], r["visit_ymd"]) for r in out.collect()}
-    want = {
-        (r["user_id"], r["visit_ymd"])
-        for r in plans.query_map()["uv_dedup"](spark, sf_dir).collect()
-    }
-    assert got == want and len(want) > 0
-
-
-def test_uv_dedup_builtin_no_duplicate_rows_across_batches(spark, sf_dir, tmp_path):
-    """Multi-batch contract of the built-in W2 form: a same-day
-    duplicate arriving in a LATER micro-batch must not be re-emitted
-    as a second output ROW (the key-SET test above can't see this).
-    Sanity pass over real data split into two micro-batches — the
-    targeted three-batch eviction scenario is the next test."""
-    from gmall_flink_parent_spark.streaming.stateful import uv_dedup_stream_builtin
-
-    events = load_table(spark, sf_dir, "events").select("user_id", "ts")
-    events = events.withColumn("ts_us", F.unix_micros("ts"))
-    stream = _two_file_stream(
-        spark, tmp_path, events, "ts_us", "user_id long, ts timestamp, ts_us long"
-    ).drop("ts_us")
-    rows = _run_to_memory(
-        uv_dedup_stream_builtin(stream), spark, "uvb_multibatch"
-    ).collect()
-    keys = {(r["user_id"], r["visit_ymd"]) for r in rows}
-    assert len(rows) == len(keys) > 0, (
-        f"{len(rows) - len(keys)} duplicate rows re-emitted across micro-batches"
-    )
-    want = {
-        (r["user_id"], r["visit_ymd"])
-        for r in plans.query_map()["uv_dedup"](spark, sf_dir).collect()
-    }
-    assert keys == want
-
-
-def test_uv_dedup_builtin_survives_state_eviction_window(spark, tmp_path):
-    """The exact scenario a too-short watermark delay corrupts: key A
-    first seen in batch 1 (day D 01:00), a filler key in batch 2 pushes
-    the watermark to D 23:00, and A's same-day duplicate arrives in
-    batch 3 at D 23:30 — AHEAD of the watermark, so it is not dropped
-    as late. Under the old ``withWatermark('ts', '0 seconds')`` A's
-    dedup state expired at 01:00 < 23:00 and was evicted at the end of
-    batch 2 (eviction lags one batch: the watermark only advances after
-    a batch commits, which is why a two-batch split can never trigger
-    this), so the batch-3 duplicate was re-emitted — two rows for one
-    (user, day) key. With the 24 h delay (= UV_STATE_TTL_MS) A's state
-    expires at D+1 01:00 > every watermark this stream reaches, so the
-    duplicate is deduplicated. Asserts exactly one row per key."""
-    import os
-    import time
-
-    import pandas as pd
-
-    from gmall_flink_parent_spark.streaming.stateful import uv_dedup_stream_builtin
-
-    day = pd.Timestamp("2026-03-01")
-    batches = [
-        pd.DataFrame({"user_id": [1], "ts": [day + pd.Timedelta(hours=1)]}),
-        pd.DataFrame({"user_id": [2], "ts": [day + pd.Timedelta(hours=23)]}),
-        pd.DataFrame(
-            {"user_id": [1], "ts": [day + pd.Timedelta(hours=23, minutes=30)]}
-        ),
-    ]
-    (tmp_path / "uvb3").mkdir()
-    for i, pdf in enumerate(batches):
-        path = str(tmp_path / "uvb3" / f"f{i}.parquet")
-        pdf.astype({"ts": "datetime64[us]"}).to_parquet(path)
-        t = time.time() + 5 * i
-        os.utime(path, (t, t))
-    stream = (
-        spark.readStream.schema("user_id long, ts timestamp")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(tmp_path / "uvb3"))
-    )
-    rows = _run_to_memory(uv_dedup_stream_builtin(stream), spark, "uvb_evict").collect()
-    got = sorted((r["user_id"], r["visit_ymd"]) for r in rows)
-    assert got == [(1, "20260301"), (2, "20260301")], (
-        f"duplicate re-emitted after premature state eviction: {got}"
-    )
-
-
 def test_interval_join_drops_rows_behind_the_watermark(spark, tmp_path):
     """Late-data contract of the stream-stream interval join (W5): a
     detail row arriving BEHIND the global watermark is dropped at the
