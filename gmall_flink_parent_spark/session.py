@@ -283,25 +283,26 @@ def get_spark(app_name: str = "gmall_flink_parent_spark") -> SparkSession:
     if SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
         try:  # this call launches the driver JVM
             plan = _cds_plan(_find_spark_home())
-        except OSError:
-            plan = None
+        except OSError:  # an unreadable JDK, jar dir or cache: no archive
+            pass
     if plan is None:
         spark = builder.getOrCreate()
     else:
+        java_options, conf_dir, part = plan
         # spark-submit puts defaultJavaOptions before extraJavaOptions; a
         # caller's own defaultJavaOptions in PYSPARK_SUBMIT_ARGS replaces
         # these, and _record_dump then finds no dump to record
-        builder = builder.config("spark.driver.defaultJavaOptions", plan[0])
-        conf_dir = os.environ.get("SPARK_CONF_DIR")
-        os.environ["SPARK_CONF_DIR"] = plan[1]
+        builder = builder.config("spark.driver.defaultJavaOptions", java_options)
+        saved = os.environ.get("SPARK_CONF_DIR")
+        os.environ["SPARK_CONF_DIR"] = conf_dir
         try:
             spark = builder.getOrCreate()
         finally:
-            if conf_dir is None:
+            if saved is None:
                 del os.environ["SPARK_CONF_DIR"]
             else:
-                os.environ["SPARK_CONF_DIR"] = conf_dir
-        if plan[2] is not None:
-            _record_dump(spark, plan[2])
+                os.environ["SPARK_CONF_DIR"] = saved
+        if part is not None:
+            _record_dump(spark, part)
     spark.sparkContext.setLogLevel("WARN")
     return spark
